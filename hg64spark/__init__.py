@@ -4,9 +4,10 @@ Built from scratch around the bucket scheme of fanf2/hg64 (a 64-bit log-linear
 histogram: 6-bit exponent + configurable mantissa bits), re-expressed as
 vectorized numpy kernels driven by Spark's DataFrame API:
 
-    partial sketch per partition (mapInPandas, Arrow batches)
+    partial sketch per partition (mapInArrow)
       -> shuffle of tiny serialized sketches, grouped by key
-      -> associative integer merge + finalize (applyInPandas)
+      -> associative integer merge (applyInPandas)
+      -> finalize a whole Arrow batch of sketches at once (mapInArrow)
 
 Companion mergeable sketches (HLL, count-min, KLL, Bloom) share one serialized
 envelope (`serde.py`) and the same merge contract.

@@ -6,12 +6,16 @@ Catalyst builds for built-in aggregates, and exactly the execution model the
 reference benchmarks as `merged_load` (`/root/reference/test.c:125-157`, ~7x
 faster than its shared-memory path):
 
-    stage 1  mapInPandas     one partial sketch per (task partition x group),
+    stage 1  mapInArrow      one partial sketch per (task partition x group),
                              vectorized numpy ingest over Arrow batches —
                              this is the map-side combine: the shuffle then
                              carries only tiny serialized sketches, never rows
     stage 2  groupBy(keys)   shuffle of <= (#partitions x #groups) sketch blobs
     stage 3  applyInPandas   associative integer merge + serialize
+
+The hg64 finalizers (``hg64_quantiles`` … ``hg64_stats``) are one more
+``mapInArrow`` pass: each Arrow batch of sketches is decoded into a
+(sketches x keys) counter matrix and answered with 2-D numpy.
 
 Skew note (north_rule): because stage 1 emits at most one sketch per group per
 *partition*, a conversation with a billion rows costs its partitions ingest
@@ -43,7 +47,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hg64spark.hg64 import HG64
+from hg64spark.hg64 import HG64, HG64SnapshotMatrix, decode_matrices
 
 _GLOBAL_KEY = "__hg64_global__"
 
@@ -352,63 +356,63 @@ def repartition_salted(df: DataFrame, cols: Sequence[str], buckets: int) -> Data
 # --------------------------------------------------------------------------
 
 
-def _explode(
+def _finalize(
     sketch_df: DataFrame,
     group_cols: Sequence[str],
-    deserialize: Callable[[bytes], object],
     extra_fields: list[StructField],
-    per_sketch: Callable[[object, dict], dict],
+    kernel: Callable[[HG64SnapshotMatrix], tuple[np.ndarray, list[np.ndarray]]],
 ) -> DataFrame:
-    group_cols = list(group_cols)
-    fields = [f for f in sketch_df.schema.fields if f.name in group_cols] + extra_fields
-    out_schema = StructType(fields)
-    names = [f.name for f in fields]
+    """One ``mapInArrow`` pass for every hg64 finalizer: each batch's sketch
+    column is decoded into counter matrices (``hg64.decode_matrices``) and
+    ``kernel`` answers all of a matrix's sketches at once, returning the
+    sketch row behind each output row plus the extra output columns.  Group
+    values are carried over with Arrow ``take``, never as Python objects;
+    rows come out sketch-major, in input order."""
+    gfields = [f for f in sketch_df.schema.fields if f.name in group_cols]
+    out_schema = StructType(gfields + extra_fields)
+    names = [f.name for f in out_schema.fields]
+    ng = len(gfields)
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            frames = []
-            for _, row in pdf.iterrows():
-                sk = deserialize(row["sketch"])
-                cols = per_sketch(sk, {c: row[c] for c in group_cols})
-                frames.append(pd.DataFrame(cols, columns=names))
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for rb in batches:
+            for sigbits, start, counters in decode_matrices(rb.column(ng).to_pylist()):
+                src, cols = kernel(HG64SnapshotMatrix(sigbits, counters))
+                take = pa.array(src + start)
+                arrays = [rb.column(i).take(take) for i in range(ng)]
+                yield pa.RecordBatch.from_arrays(arrays + [pa.array(c) for c in cols], names=names)
 
-    return sketch_df.mapInPandas(fn, out_schema)
+    return sketch_df.select(*[f.name for f in gfields], "sketch").mapInArrow(fn, out_schema)
+
+
+def _grid(params: np.ndarray, answers: np.ndarray) -> tuple[np.ndarray, list[np.ndarray]]:
+    """Kernel output for a (sketches x params) answer matrix: one row per
+    sketch per parameter, sketch-major."""
+    n = answers.shape[0]
+    return np.repeat(np.arange(n), params.size), [np.tile(params, n), answers.ravel()]
 
 
 def hg64_quantiles(
     sketch_df: DataFrame, group_cols: Sequence[str], qs: Sequence[float]
 ) -> DataFrame:
     """(group..., q double, value long) — `hg64s_value_at_quantile`
-    (`/root/reference/hg64.c:431-436`) per group per q."""
+    (`/root/reference/hg64.c:431-436`) per group per q; an empty sketch or
+    q >= 1 gives UINT64_MAX, i.e. -1 as a long."""
     qarr = np.asarray(list(qs), dtype=np.float64)
 
-    def per_sketch(sk: HG64, gvals: dict) -> dict:
-        snap = sk.snapshot()
-        vals = snap.value_at_quantile(qarr).astype(np.int64)
-        out = {c: [v] * len(qarr) for c, v in gvals.items()}
-        out["q"] = qarr
-        out["value"] = vals
-        return out
+    def kernel(snap: HG64SnapshotMatrix):
+        return _grid(qarr, snap.value_at_quantile(qarr).astype(np.int64))
 
     extra = [StructField("q", DoubleType(), False), StructField("value", LongType(), False)]
-    return _explode(sketch_df, group_cols, HG64.deserialize, extra, per_sketch)
+    return _finalize(sketch_df, group_cols, extra, kernel)
 
 
 def hg64_buckets(sketch_df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     """(group..., key, bucket_min, bucket_max, count) — the exploded
     `hg64_get` view (`/root/reference/hg64.c:272-283`), nonzero buckets only."""
 
-    def per_sketch(sk: HG64, gvals: dict) -> dict:
-        keys, mins, maxs, counts = sk.to_buckets()
-        n = keys.size
-        out = {c: [v] * n for c, v in gvals.items()}
-        out["key"] = keys.astype(np.int64)
-        out["bucket_min"] = mins.astype(np.int64)
-        out["bucket_max"] = maxs.astype(np.int64)
-        out["count"] = counts.astype(np.int64)
-        return out
+    def kernel(snap: HG64SnapshotMatrix):
+        rows, *cols = snap.buckets()
+        return rows, [c.astype(np.int64) for c in cols]
 
     extra = [
         StructField("key", LongType(), False),
@@ -416,7 +420,7 @@ def hg64_buckets(sketch_df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
         StructField("bucket_max", LongType(), False),
         StructField("count", LongType(), False),
     ]
-    return _explode(sketch_df, group_cols, HG64.deserialize, extra, per_sketch)
+    return _finalize(sketch_df, group_cols, extra, kernel)
 
 
 def hg64_ranks(
@@ -426,16 +430,11 @@ def hg64_ranks(
     (`/root/reference/hg64.c:410-429`) for each probe value."""
     parr = np.asarray(list(probes), dtype=np.uint64)
 
-    def per_sketch(sk: HG64, gvals: dict) -> dict:
-        snap = sk.snapshot()
-        ranks = snap.rank_of_value(parr).astype(np.int64)
-        out = {c: [v] * parr.size for c, v in gvals.items()}
-        out["probe"] = parr.astype(np.int64)
-        out["rank"] = ranks
-        return out
+    def kernel(snap: HG64SnapshotMatrix):
+        return _grid(parr.astype(np.int64), snap.rank_of_value(parr).astype(np.int64))
 
     extra = [StructField("probe", LongType(), False), StructField("rank", LongType(), False)]
-    return _explode(sketch_df, group_cols, HG64.deserialize, extra, per_sketch)
+    return _finalize(sketch_df, group_cols, extra, kernel)
 
 
 def hg64_qov(
@@ -443,39 +442,35 @@ def hg64_qov(
 ) -> DataFrame:
     """(group..., probe, q) — `hg64s_quantile_of_value`
     (`/root/reference/hg64.c:438-442`): rank_of_value / population, the FP
-    division being the only non-integer op (so a SQL oracle agrees bitwise)."""
+    division being the only non-integer op (so a SQL oracle agrees bitwise);
+    NaN for an empty sketch."""
     parr = np.asarray(list(probes), dtype=np.uint64)
 
-    def per_sketch(sk: HG64, gvals: dict) -> dict:
-        snap = sk.snapshot()
-        out = {c: [v] * parr.size for c, v in gvals.items()}
-        out["probe"] = parr.astype(np.int64)
-        out["q"] = snap.quantile_of_value(parr)
-        return out
+    def kernel(snap: HG64SnapshotMatrix):
+        return _grid(parr.astype(np.int64), snap.quantile_of_value(parr))
 
     extra = [StructField("probe", LongType(), False), StructField("q", DoubleType(), False)]
-    return _explode(sketch_df, group_cols, HG64.deserialize, extra, per_sketch)
+    return _finalize(sketch_df, group_cols, extra, kernel)
 
 
 def hg64_stats(sketch_df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     """(group..., population, mean, variance) from integer-exact midpoint sums
-    (FP only in the final two scalar ops, so a SQL oracle agrees bitwise)."""
+    (FP only in the final two scalar ops, so a SQL oracle agrees bitwise);
+    all three are 0 for an empty sketch."""
 
-    def per_sketch(sk: HG64, gvals: dict) -> dict:
-        s1, s2, pop = sk.snapshot().midpoint_stats_exact()
+    def kernel(snap: HG64SnapshotMatrix):
+        s1, s2, pop = snap.midpoint_stats_exact()
         # op order matches the SQL oracle exactly: round each exact integer
         # sum to double FIRST, then divide — so DuckDB agrees bit-for-bit
-        mean = float(s1) / (2.0 * float(pop)) if pop else 0.0
-        var = float(s2) / (4.0 * float(pop)) - mean * mean if pop else 0.0
-        out = {c: [v] for c, v in gvals.items()}
-        out["population"] = [pop]
-        out["mean"] = [mean]
-        out["variance"] = [var]
-        return out
+        popf = pop.astype(np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            mean = np.where(pop > 0, s1.astype(np.float64) / (2.0 * popf), 0.0)
+            var = np.where(pop > 0, s2.astype(np.float64) / (4.0 * popf) - mean * mean, 0.0)
+        return np.arange(pop.size), [pop.astype(np.int64), mean, var]
 
     extra = [
         StructField("population", LongType(), False),
         StructField("mean", DoubleType(), False),
         StructField("variance", DoubleType(), False),
     ]
-    return _explode(sketch_df, group_cols, HG64.deserialize, extra, per_sketch)
+    return _finalize(sketch_df, group_cols, extra, kernel)

@@ -18,6 +18,7 @@ the serialization boundary, mirroring the reference's snapshot layout
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -223,24 +224,8 @@ class HG64:
 
     @classmethod
     def deserialize(cls, buf: bytes) -> "HG64":
-        _, header, payload = serde.expect(buf, serde.TYPE_HG64)
-        if len(header) != 1 or len(payload) < 8:
-            raise ValueError(
-                f"corrupt hg64 sketch: header={len(header)}B payload={len(payload)}B"
-            )
-        (sigbits,) = struct.unpack("<B", header)
-        km.check_sigbits(sigbits)
-        (binmap,) = struct.unpack_from("<Q", payload, 0)
-        bs = km.binsize(sigbits)
-        occ = [b for b in range(64) if binmap & (1 << b)]
-        blocks = np.frombuffer(payload, dtype="<u8", offset=8)
-        if blocks.size != len(occ) * bs:
-            raise ValueError("corrupt hg64 payload")
-        out = cls(sigbits)
-        if occ:
-            dense = out.counters.reshape(-1, bs)
-            dense[np.array(occ)] = blocks.reshape(len(occ), bs).astype(U64)
-        return out
+        sigbits, _, counters = next(decode_matrices([buf]))
+        return cls(sigbits, counters[0])
 
     def __eq__(self, other) -> bool:
         return (
@@ -256,6 +241,54 @@ class HG64:
         the cumulative totals the reference precomputes per bin so queries
         don't rescan every bucket (`README.md:33-38`)."""
         return HG64Snapshot(self.sigbits, self.counters.copy())
+
+
+#: most uint64 counters one decoded matrix holds (2^22 cells = 32 MB), so a
+#: finalizer's memory is bounded at any sigbits: one sigbits=15 sketch alone
+#: is 1.6M cells, so an unchunked batch of them would not fit
+MATRIX_CELLS = 1 << 22
+
+
+def _parse(buf: bytes) -> tuple[int, np.ndarray, np.ndarray]:
+    """Validate one serialized hg64: (sigbits, occupied bin indices,
+    (bins x binsize) counter blocks).  Every corruption raises ValueError."""
+    _, header, payload = serde.expect(buf, serde.TYPE_HG64)
+    if len(header) != 1 or len(payload) < 8:
+        raise ValueError(
+            f"corrupt hg64 sketch: header={len(header)}B payload={len(payload)}B"
+        )
+    (sigbits,) = struct.unpack("<B", header)
+    km.check_sigbits(sigbits)
+    (binmap,) = struct.unpack_from("<Q", payload, 0)
+    bs = km.binsize(sigbits)
+    nbins = km.nkeys(sigbits) // bs
+    if binmap >> nbins:
+        raise ValueError(f"corrupt hg64 binmap: bins past {nbins} at sigbits={sigbits}")
+    occ = np.flatnonzero(np.unpackbits(np.frombuffer(payload, np.uint8, count=8), bitorder="little"))
+    if len(payload) != 8 + occ.size * bs * 8:
+        raise ValueError("corrupt hg64 payload")
+    return sigbits, occ, np.frombuffer(payload, dtype="<u8", offset=8).reshape(occ.size, bs)
+
+
+def decode_matrices(blobs) -> Iterator[tuple[int, int, np.ndarray]]:
+    """Decode serialized hg64 sketches into dense (rows x nkeys) uint64
+    counter matrices, in input order.  Each item is ``(sigbits, first row,
+    matrix)`` for a run of consecutive blobs with equal sigbits, cut so no
+    matrix exceeds ``MATRIX_CELLS``.  Every blob is validated before the
+    first matrix is built, so a corrupt one fails the whole call."""
+    parsed = [_parse(b) for b in blobs]
+    start = 0
+    while start < len(parsed):
+        sigbits = parsed[start][0]
+        nk, bs = km.nkeys(sigbits), km.binsize(sigbits)
+        stop, limit = start + 1, min(len(parsed), start + max(1, MATRIX_CELLS // nk))
+        while stop < limit and parsed[stop][0] == sigbits:
+            stop += 1
+        counters = np.zeros((stop - start, nk), dtype=U64)
+        for row, (_, occ, blocks) in zip(counters, parsed[start:stop]):
+            row.reshape(-1, bs)[occ] = blocks
+        yield sigbits, start, counters
+        start = stop
 
 
 class HG64Snapshot:
@@ -380,4 +413,71 @@ class HG64Snapshot:
             m = mn + mx
             s1 += ct * m
             s2 += ct * m * m
+        return s1, s2, self.population
+
+
+class HG64SnapshotMatrix:
+    """:class:`HG64Snapshot` for every row of a (rows x nkeys) counter
+    matrix at once: one ``cumsum`` along axis 1 and 2-D numpy per query,
+    with the same keymath and the same operation order per element, so
+    each row answers bit-identically to its own snapshot."""
+
+    __slots__ = ("sigbits", "counters", "cum", "population")
+
+    def __init__(self, sigbits: int, counters: np.ndarray):
+        self.sigbits = sigbits
+        self.counters = counters
+        self.cum = np.cumsum(counters, axis=1, dtype=U64)
+        self.population = self.cum[:, -1]
+
+    def value_at_quantile(self, qs) -> np.ndarray:
+        """(rows x len(qs)) uint64: :meth:`HG64Snapshot.value_at_quantile`."""
+        qs = np.clip(np.atleast_1d(np.asarray(qs, dtype=np.float64)), 0.0, 1.0)
+        ranks = np.floor(qs[None, :] * self.population.astype(np.float64)[:, None]).astype(U64)
+        # first crossing: the count of cumulative totals <= rank is
+        # searchsorted(side="right") on each row
+        idx = np.stack([(self.cum <= r[:, None]).sum(axis=1) for r in ranks.T], axis=1)
+        oob = ranks >= self.population[:, None]
+        safe = np.minimum(idx, self.counters.shape[1] - 1)
+        rows = np.arange(self.counters.shape[0])[:, None]
+        prev = np.where(safe > 0, self.cum[rows, np.maximum(safe - 1, 0)], U64(0)).astype(U64)
+        mins = km.key_to_minval(safe, self.sigbits)
+        maxs = km.key_to_maxval(safe, self.sigbits)
+        vals = mins + km.interpolate_u64(maxs - mins, ranks - prev, self.counters[rows, safe])
+        return np.where(oob, _U64_MAX, vals)
+
+    def rank_of_value(self, values) -> np.ndarray:
+        """(rows x len(values)) uint64: :meth:`HG64Snapshot.rank_of_value`."""
+        values = np.atleast_1d(np.asarray(values, dtype=U64))
+        keys = km.value_to_key(values, self.sigbits)
+        prev = np.where(keys > 0, self.cum[:, np.maximum(keys - 1, 0)], U64(0)).astype(U64)
+        mins = km.key_to_minval(keys, self.sigbits)
+        maxs = km.key_to_maxval(keys, self.sigbits)
+        return prev + km.interpolate_u64(self.counters[:, keys], values - mins, maxs - mins)
+
+    def quantile_of_value(self, values) -> np.ndarray:
+        """(rows x len(values)) float64: :meth:`HG64Snapshot.quantile_of_value`,
+        NaN on an empty row."""
+        ranks = self.rank_of_value(values).astype(np.float64)
+        pop = self.population.astype(np.float64)[:, None]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            return np.where(pop == 0.0, np.nan, ranks / pop)
+
+    def buckets(self):
+        """Nonzero cells, row-major: (rows, keys, mins, maxs, counts)."""
+        rows, keys = np.nonzero(self.counters)
+        mins = km.key_to_minval(keys, self.sigbits)
+        maxs = km.key_to_maxval(keys, self.sigbits)
+        return rows, keys, mins, maxs, self.counters[rows, keys]
+
+    def midpoint_stats_exact(self):
+        """Per row :meth:`HG64Snapshot.midpoint_stats_exact`: (S1, S2) as
+        object arrays of arbitrary-precision ints, and the uint64 population."""
+        rows, _, mins, maxs, counts = self.buckets()
+        m = mins.astype(object) + maxs.astype(object)
+        s1 = np.zeros(self.counters.shape[0], dtype=object)
+        s2 = np.zeros(self.counters.shape[0], dtype=object)
+        s1_cells = counts.astype(object) * m
+        np.add.at(s1, rows, s1_cells)
+        np.add.at(s2, rows, s1_cells * m)
         return s1, s2, self.population

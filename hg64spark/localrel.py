@@ -23,9 +23,13 @@ parser produce a true ``LocalRelation``:
 Values are rendered exactly: integers verbatim, doubles via
 ``CAST('<repr>' AS DOUBLE)`` (``repr`` is the shortest round-tripping
 decimal and Java's ``parseDouble`` is correctly rounded, so the double is
-bit-identical to the Python float), strings with backslash/quote escaping,
-arrays recursively.  Anything unrepresentable (binary, timestamps, …) and
-any oversized literal falls back to ``createDataFrame`` unchanged.
+bit-identical to the Python float), binary as ``X'<hex>'``, arrays
+recursively.  Strings follow the session's
+``spark.sql.parser.escapedStringLiterals``: by default backslash and quote
+are backslash-escaped; with it set, the parser reads literal text verbatim,
+so a quote is spliced in as ``concat(..., chr(39), ...)`` and a string
+holding a backslash falls back.  Anything unrepresentable (timestamps, …)
+and any oversized literal falls back to ``createDataFrame`` unchanged.
 """
 
 from __future__ import annotations
@@ -61,13 +65,15 @@ def _lit(v, escaped_literals: bool = False) -> str:
         return f"CAST('{v!r}' AS DOUBLE)"
     if isinstance(v, str):
         if escaped_literals:
-            # spark.sql.parser.escapedStringLiterals=true gives backslash
-            # no special meaning, so our \\ / \' escapes would mis-parse;
-            # plain strings are identical in both modes, anything needing
-            # an escape falls back to createDataFrame
-            if "\\" in v or "'" in v:
-                raise _Unrepresentable("str under escapedStringLiterals")
-            return "'" + v + "'"
+            # spark.sql.parser.escapedStringLiterals=true takes the text
+            # between the quotes verbatim: a backslash cannot be escaped
+            # (falls back to createDataFrame) and a doubled '' stays two
+            # quotes, so each quote is spliced in as chr(39) instead
+            if "\\" in v:
+                raise _Unrepresentable("backslash under escapedStringLiterals")
+            if "'" not in v:
+                return "'" + v + "'"
+            return "concat(" + ", chr(39), ".join(f"'{p}'" for p in v.split("'")) + ")"
         return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
     if isinstance(v, (bytes, bytearray)):
         return f"X'{bytes(v).hex().upper()}'"

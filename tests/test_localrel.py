@@ -93,3 +93,17 @@ def test_escaped_string_literals_mode(spark):
         spark.conf.unset("spark.sql.parser.escapedStringLiterals")
     b = local_rows_df(spark, rows, ddl)
     assert _norm(b.collect()) == _norm(spark.createDataFrame(rows, ddl).collect())
+
+
+def test_apostrophe_stays_on_values_path_in_both_parser_modes(spark):
+    rows = [("o'brien", 1), ("'", 2), ("a''b'", 3), ("clean", 4)]
+    ddl = "term string, n int"
+    for mode in ("false", "true"):
+        spark.conf.set("spark.sql.parser.escapedStringLiterals", mode)
+        try:
+            df = local_rows_df(spark, rows, ddl)
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "LocalTableScan" in plan and "ExistingRDD" not in plan, mode
+            assert sorted(tuple(r) for r in df.collect()) == sorted(rows), mode
+        finally:
+            spark.conf.unset("spark.sql.parser.escapedStringLiterals")

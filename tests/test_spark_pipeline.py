@@ -588,18 +588,39 @@ def test_tree_aggregate_path_matches(spark):
     assert tree == rel
 
 
-def test_grouped_fold_pandas_and_arrow_byte_identical(spark):
-    """The per-group applyInPandas fold and the Arrow-segmented fold must
-    produce byte-identical blobs (incl. a null group value)."""
+def test_grouped_relational_fold_matches_arrow_agg(spark):
+    """The relational tier's Arrow-segmented fold must produce blobs
+    byte-identical to the vectorized-UDF tier (incl. a null group value)."""
     from hg64spark import relational
 
     df = spark.createDataFrame(
         [("a", 1), ("a", 100), ("b", 7), (None, 3), ("b", 2**40), (None, 9)],
         "g string, v long",
     ).repartition(3)
-    a = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5, fold="arrow").collect()}
-    p = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5, fold="pandas").collect()}
-    assert a == p and set(a) == {"a", "b", None}
+    a = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5).collect()}
+    u = {r["g"]: bytes(r["sketch"]) for r in agg.hg64_agg(df, "v", ["g"], 5, method="arrow").collect()}
+    assert a == u and set(a) == {"a", "b", None}
+
+
+def test_mg_binary_items_global_and_grouped_agree(spark):
+    """A binary item must get the same MG key in the global driver fold
+    (a collected Row: bytearray unless binaryAsBytes) and the grouped fold
+    (pandas: bytes)."""
+    from hg64spark import relational
+    from hg64spark.sketches import MG
+
+    items = [b"x", b"x", b"\x00y", b"\xff", b"x", b"\xff", b"q'"]
+    df = spark.createDataFrame([("all", bytearray(v)) for v in items], "g string, item binary")
+    want = {str(b"x"): 3, str(b"\xff"): 2, str(b"\x00y"): 1, str(b"q'"): 1}
+    for as_bytes in ("true", "false"):
+        spark.conf.set("spark.sql.execution.pyspark.binaryAsBytes", as_bytes)
+        try:
+            glob = bytes(relational.mg_agg_relational(df, "item", k=8).collect()[0]["sketch"])
+            (grp,) = relational.mg_agg_relational(df, "item", k=8, group_cols=["g"]).collect()
+        finally:
+            spark.conf.unset("spark.sql.execution.pyspark.binaryAsBytes")
+        assert bytes(grp["sketch"]) == glob, as_bytes
+        assert MG.deserialize(glob).counters == want, as_bytes
 
 
 def test_scans_are_pruned_and_filters_pushed(spark):
