@@ -11,7 +11,7 @@ faster than its shared-memory path):
                              this is the map-side combine: the shuffle then
                              carries only tiny serialized sketches, never rows
     stage 2  groupBy(keys)   shuffle of <= (#partitions x #groups) sketch blobs
-    stage 3  applyInPandas   associative integer merge + serialize
+    stage 3  applyInArrow    associative integer merge + serialize
 
 The hg64 finalizers (``hg64_quantiles`` … ``hg64_stats``) are one more
 ``mapInArrow`` pass: each Arrow batch of sketches is decoded into a
@@ -32,10 +32,9 @@ Any object implementing the sketch protocol (``add_values(np.ndarray)``,
 from __future__ import annotations
 
 import time
-from collections.abc import Callable, Iterator, Sequence
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
@@ -77,7 +76,13 @@ def segment_record_batch(
     codes_list: list[np.ndarray] = []
     for i in range(n_group_cols):
         enc = rb.column(i).dictionary_encode()
-        d = enc.dictionary.to_pylist() + [None]  # last code = NULL
+        values = enc.dictionary
+        if pa.types.is_timestamp(values.type) and values.type.tz:
+            # Spark hands timestamps over in the session time zone, and
+            # pyarrow turns a datetime zoned anywhere but UTC back into the
+            # wrong instant; the same instants labelled UTC round-trip
+            values = values.cast(pa.timestamp(values.type.unit, "UTC"))
+        d = values.to_pylist() + [None]  # last code = NULL
         d = [_NAN if isinstance(v, float) and v != v else v for v in d]
         codes = enc.indices.fill_null(len(d) - 1).to_numpy(zero_copy_only=False).astype(np.int64)
         dicts.append(d)
@@ -236,41 +241,102 @@ def sketch_partials(
     return narrow.mapInArrow(build, out_schema)
 
 
+def merge_blobs(blobs: Iterable[bytes], deserialize: Callable[[bytes], object]) -> bytes:
+    """One group's merge (`hg64_merge` semantics, reference ``hg64.c:297-305``)
+    of serialized partials, in the canonical order: sorted by blob bytes.
+
+    hg64/HLL/CMS/Bloom merges are order-insensitive, so the order changes
+    nothing for them, but KLL, t-digest AND MG are order-SENSITIVE — MG runs
+    _shrink after every merge, so when intermediate merges overflow k the
+    surviving counters depend on merge order (k=1 with partials {a:3},{b:3},
+    {c:3}: ((A+B)+C) keeps c, ((A+C)+B) keeps b).  Without a canonical order
+    the shuffle's arrival order (or the order files are listed in) would
+    make those merged sketches vary run to run; the sort is load-bearing
+    for all three.  With it, fixed input partitioning + partition-id-mixed
+    seeds make the distributed build bit-reproducible at ANY cluster size,
+    and every merge path (``merge_sketches``, ``merge_table``) agrees byte
+    for byte."""
+    ordered = sorted(bytes(b) for b in blobs)
+    sk = deserialize(ordered[0])
+    for b in ordered[1:]:
+        sk.merge(deserialize(b))
+    return sk.serialize()
+
+
 def merge_sketches(
     partials: DataFrame,
     group_cols: Sequence[str],
     deserialize: Callable[[bytes], object],
 ) -> DataFrame:
-    """Stages 2+3: shuffle partial sketches by group key and reduce them with
-    the associative merge (`hg64_merge` semantics, `/root/reference/hg64.c:297-305`)."""
+    """Stages 2+3: shuffle partial sketches by group key and reduce each
+    group with :func:`merge_table` (so with :func:`merge_blobs`).  Groups
+    reach Python as Arrow tables, not pandas frames: pandas would turn a NaN
+    group key into NULL on the way back."""
     group_cols = list(group_cols)
     fields = [f for f in partials.schema.fields if f.name in group_cols]
     out_schema = StructType(fields + [StructField("sketch", BinaryType(), False)])
     grouped = partials if group_cols else partials.withColumn(_GLOBAL_KEY, F.lit(0))
     keys = group_cols or [_GLOBAL_KEY]
 
-    def reduce_group(pdf: pd.DataFrame) -> pd.DataFrame:
-        # canonical merge order (sort by blob bytes): hg64/HLL/CMS/Bloom
-        # merges are order-insensitive so this changes nothing for them, but
-        # KLL, t-digest AND MG are order-SENSITIVE — MG runs _shrink after
-        # every merge, so when intermediate merges overflow k the surviving
-        # counters depend on merge order (k=1 with partials {a:3},{b:3},
-        # {c:3}: ((A+B)+C) keeps c, ((A+C)+B) keeps b).  Without a canonical
-        # order the shuffle's arrival order would make those merged sketches
-        # vary run to run; the sort is load-bearing for all three.  With it,
-        # fixed input partitioning + partition-id-mixed
-        # seeds make the distributed build bit-reproducible at ANY cluster
-        # size (the north rule's identical-estimates criterion, asserted
-        # across the N-vs-4N scaling probe in bench.py).
-        blobs = pdf["sketch"].sort_values(key=lambda s: s.map(bytes))
-        sk = deserialize(blobs.iloc[0])
-        for b in blobs.iloc[1:]:
-            sk.merge(deserialize(b))
-        out = {c: [pdf[c].iloc[0]] for c in group_cols}
-        out["sketch"] = [sk.serialize()]
-        return pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+    def reduce_group(table: pa.Table) -> pa.Table:
+        out = merge_table(table.select([*group_cols, "sketch"]), len(group_cols), deserialize)
+        # Spark hands a timestamp over in the session time zone and takes it
+        # back only as UTC; the instant is the same
+        return out.cast(
+            pa.schema(
+                f.with_type(pa.timestamp(f.type.unit, "UTC"))
+                if pa.types.is_timestamp(f.type) and f.type.tz
+                else f
+                for f in out.schema
+            )
+        )
 
-    return grouped.groupBy(*keys).applyInPandas(reduce_group, out_schema)
+    return grouped.groupBy(*keys).applyInArrow(reduce_group, out_schema)
+
+
+def merge_table(
+    partials: pa.Table, n_group_cols: int, deserialize: Callable[[bytes], object]
+) -> pa.Table:
+    """Driver-side twin of :func:`merge_sketches` for partials already in
+    memory: ``partials`` is (group..., sketch) with the first
+    ``n_group_cols`` columns as the key.  Groups are cut with
+    :func:`segment_record_batch`, so NULL is one group and every NaN is one
+    group, as in Spark's ``groupBy``; each group is reduced with
+    :func:`merge_blobs`.  Returns one row per group with ``partials``'
+    schema, rows in group-code order."""
+    rb = pa.RecordBatch.from_arrays(
+        [c.combine_chunks() for c in partials.columns], schema=partials.schema
+    )
+    if n_group_cols:
+        segments = segment_record_batch(rb, n_group_cols)
+    else:
+        segments = [((), np.arange(rb.num_rows))] if rb.num_rows else []
+    blobs = rb.column(n_group_cols).to_pylist()
+    groups: dict[tuple, list[bytes]] = {}
+    first: list[int] = []
+    for key, idx in segments:
+        # dictionary encoding can split what groupBy joins (NaN payloads,
+        # -0.0 vs 0.0); the keys rejoin them: every NaN key is the one
+        # ``_NAN`` object (tuple equality checks identity first), -0.0 == 0.0
+        members = groups.get(key)
+        if members is None:
+            members = groups[key] = []
+            first.append(int(idx[0]))
+        members.extend(blobs[i] for i in idx.tolist())
+    # a group's key columns are taken (``take``) from its first row, which is
+    # exact for every type, not rebuilt from the Python key values
+    arrays = []
+    for col in rb.take(pa.array(first, pa.int64())).columns[:n_group_cols]:
+        if pa.types.is_floating(col.type):
+            col = pc.add(col, pa.scalar(0.0, col.type))  # -0.0 + 0.0 is Spark's 0.0
+        arrays.append(col)
+    arrays.append(
+        pa.array(
+            [merge_blobs(b, deserialize) for b in groups.values()],
+            type=rb.schema.field(n_group_cols).type,
+        )
+    )
+    return pa.Table.from_arrays(arrays, schema=partials.schema)
 
 
 def sketch_agg(

@@ -17,9 +17,15 @@ Each ``process()`` call:
      (`/root/reference/test.c:117-121`);
   3. appends them under a fresh ``run=<id>`` subdirectory of the checkpoint.
 
-``result()`` merges all committed partials into final per-group sketches —
-cheap, because partials are tiny (KBs) regardless of how many TB produced
-them.  Because the merge is exactly associative+commutative, re-merging
+State reads happen on the driver (``statefiles``): ``done_files`` reads
+the lineage column of every committed run's files with ``pyarrow``, and
+``result()`` reads the committed partials, merges each group with
+``agg.merge_blobs`` and returns a ``LocalTableScan`` frame — no Spark job
+and no Python worker task.  The cost of a read is O(committed state bytes)
+on the driver: partials are tiny (KBs per file x group) regardless of how
+many TB produced them, but this log has no compaction yet, so it grows with
+the number of runs (``StreamingSketch.compact`` is what bounds the streaming
+log).  Because the merge is exactly associative+commutative, re-merging
 partials from any mix of runs is identical to a single-shot job.
 
 NOTE file-level resume assumes the value derivation is file-local (a
@@ -34,9 +40,11 @@ import uuid
 from collections.abc import Callable, Sequence
 from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from hg64spark import agg
+from hg64spark import agg, statefiles
 from hg64spark.hg64 import HG64
 
 _FILE_COL = "lineage_file"
@@ -77,17 +85,19 @@ class CheckpointedSketchAgg:
                 runs.append(full)
         return runs
 
-    def _partials(self, spark: SparkSession) -> DataFrame | None:
+    def _runs_or_raise(self) -> list[str]:
         runs = self._committed_runs()
         if not runs:
-            return None
-        return spark.read.parquet(*runs)
+            raise FileNotFoundError(f"no committed checkpoint runs under {self.ckpt_dir}")
+        return runs
 
     def done_files(self, spark: SparkSession) -> set[str]:
-        partials = self._partials(spark)
-        if partials is None:
+        """Files covered by a committed run, read on the driver."""
+        runs = self._committed_runs()
+        if not runs:
             return set()
-        return {_norm_file(r[_FILE_COL]) for r in partials.select(_FILE_COL).distinct().collect()}
+        files = pc.unique(statefiles.read(runs, [_FILE_COL])[0].column(_FILE_COL))
+        return {_norm_file(f) for f in files.to_pylist()}
 
     # --------------------------------------------------------------- process
 
@@ -127,39 +137,56 @@ class CheckpointedSketchAgg:
         partials = agg.sketch_partials(
             df, self.value_col, self.group_cols + [_FILE_COL], self.make_sketch, with_metrics=True
         ).withColumn(_MARKER_COL, F.lit(False))
-        # one marker row per file so files contributing ZERO rows (empty or
-        # fully-filtered) are still recorded as done; the empty sketch is the
-        # merge identity and result() drops markers anyway
-        empty_blob = self.make_sketch().serialize()
-        marker_rows = [(os.path.abspath(f), empty_blob, 0, 0.0, len(empty_blob), True) for f in todo]
-        markers = spark.createDataFrame(
-            marker_rows,
-            f"{_FILE_COL} string, sketch binary, m_rows long, m_ns_per_row double, "
-            f"m_sketch_bytes long, {_MARKER_COL} boolean",
-        )
-        for c in self.group_cols:
-            markers = markers.withColumn(c, F.lit(None).cast(dict(df.dtypes)[c]))
+        markers = self._markers(spark, todo, dict(df.dtypes))
         cols = partials.columns
         run_dir = os.path.join(self.ckpt_dir, f"run={uuid.uuid4().hex[:12]}")
         partials.unionByName(markers.select(*cols)).write.mode("overwrite").parquet(run_dir)
         return [os.path.abspath(f) for f in todo]
 
+    def _markers(self, spark: SparkSession, files: Sequence[str], dtypes: dict) -> DataFrame:
+        """One marker row per file, so files contributing ZERO rows (empty or
+        fully-filtered) are still recorded as done; the empty sketch is the
+        merge identity and result() drops markers anyway.  An Arrow-backed
+        local frame: a ``LocalTableScan``, where ``createDataFrame`` over a
+        Python list would be a pickled-RDD scan costing Python worker tasks
+        on every write."""
+        n = len(files)
+        empty_blob = self.make_sketch().serialize()
+        table = pa.table(
+            {
+                _FILE_COL: [os.path.abspath(f) for f in files],
+                "sketch": pa.array([empty_blob] * n, pa.binary()),
+                "m_rows": pa.array([0] * n, pa.int64()),
+                "m_ns_per_row": pa.array([0.0] * n, pa.float64()),
+                "m_sketch_bytes": pa.array([len(empty_blob)] * n, pa.int64()),
+                _MARKER_COL: pa.array([True] * n, pa.bool_()),
+            }
+        )
+        markers = spark.createDataFrame(
+            table,
+            f"{_FILE_COL} string, sketch binary, m_rows long, m_ns_per_row double, "
+            f"m_sketch_bytes long, {_MARKER_COL} boolean",
+        )
+        for c in self.group_cols:
+            markers = markers.withColumn(c, F.lit(None).cast(dtypes[c]))
+        return markers
+
     # ----------------------------------------------------------------- reads
 
     def result(self, spark: SparkSession) -> DataFrame:
-        """(group..., sketch): merge of every committed partial."""
-        partials = self._partials(spark)
-        if partials is None:
-            raise FileNotFoundError(f"no committed checkpoint runs under {self.ckpt_dir}")
-        partials = partials.filter(~F.col(_MARKER_COL)).select(*self.group_cols, "sketch")
-        return agg.merge_sketches(partials, self.group_cols, self.deserialize)
+        """(group..., sketch): merge of every committed partial, read and
+        merged on the driver (module docstring) and returned as a
+        ``LocalTableScan`` frame."""
+        cols = [*self.group_cols, "sketch"]
+        partials, schema = statefiles.read(self._runs_or_raise(), [*cols, _MARKER_COL])
+        partials = partials.filter(pc.invert(partials.column(_MARKER_COL))).select(cols)
+        merged = agg.merge_table(partials, len(self.group_cols), self.deserialize)
+        return statefiles.to_frame(spark, merged, schema)
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Per-partial lineage: (lineage_file, group..., m_rows, m_ns_per_row,
-        m_sketch_bytes)."""
-        partials = self._partials(spark)
-        if partials is None:
-            raise FileNotFoundError(f"no committed checkpoint runs under {self.ckpt_dir}")
+        m_sketch_bytes), as a Spark read of the committed runs."""
+        partials = spark.read.parquet(*self._runs_or_raise())
         return partials.filter(~F.col(_MARKER_COL)).select(
             _FILE_COL, *self.group_cols, "m_rows", "m_ns_per_row", "m_sketch_bytes"
         )

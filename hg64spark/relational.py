@@ -1655,13 +1655,6 @@ def hg64_agg_relational(
 # --------------------------------------------------------------- Misra-Gries
 
 
-def _mg_item(v) -> str:
-    """MG counter key of one item: ``str(v)``, with a binary item keyed as
-    ``str(bytes(v))`` whether it arrives as bytearray (a collected Row) or
-    bytes (pandas), so the global and grouped folds agree."""
-    return str(bytes(v)) if isinstance(v, (bytes, bytearray)) else str(v)
-
-
 def mg_agg_relational(
     df: DataFrame,
     value_col: str,
@@ -1684,7 +1677,7 @@ def mg_agg_relational(
     two-phase exact top-K (no task ever sorts a group's full distinct-item
     set); <= k+1 rows per group reach Python.  With ``weight_col`` each row
     adds its validated non-negative weight."""
-    from hg64spark.sketches.mg import MG
+    from hg64spark.sketches.mg import MG, item_key
 
     group_cols = list(group_cols)
     cnt = (
@@ -1730,7 +1723,7 @@ def mg_agg_relational(
         out_rows = []
         if collected:
             counters = {
-                _mg_item(r[value_col]): int(r["__adj"])
+                item_key(r[value_col]): int(r["__adj"])
                 for r in collected
                 if r[value_col] is not None
             }
@@ -1743,7 +1736,7 @@ def mg_agg_relational(
     def fold(pdf: pd.DataFrame) -> pd.DataFrame:
         present = pdf[pdf[value_col].notna()]
         counters = {
-            _mg_item(it): int(c) for it, c in zip(present[value_col], present["__adj"])
+            item_key(it): int(c) for it, c in zip(present[value_col], present["__adj"])
         }
         sk = MG(k, counters, int(pdf["__n"].iloc[0]))
         out = {g: [pdf[g].iloc[0]] for g in group_cols}

@@ -30,6 +30,26 @@ import numpy as np
 from hg64spark import serde
 
 
+def item_key(v) -> str:
+    """The counter key of one item, shared by every tier: ``str(v)``, with a
+    binary item (bytes or bytearray) keyed as ``str(bytes(v))`` so it is
+    never decoded or stripped of trailing NULs."""
+    return str(bytes(v)) if isinstance(v, (bytes, bytearray)) else str(v)
+
+
+def _keys(values: np.ndarray) -> np.ndarray:
+    # numpy's str conversion ASCII-decodes bytes and drops trailing NULs, so
+    # an array holding binary items is keyed item by item, still into a
+    # fixed-width unicode array that np.unique sorts in C; every other array
+    # (numbers, str objects from a string column) keeps astype(str)
+    if values.dtype.kind == "S" or (
+        values.dtype.kind == "O"
+        and any(issubclass(t, (bytes, bytearray)) for t in set(map(type, values.tolist())))
+    ):
+        return np.array([item_key(v) for v in values.tolist()])
+    return values.astype(str)
+
+
 class MG:
     __slots__ = ("k", "counters", "n")
 
@@ -59,13 +79,12 @@ class MG:
         if values.size == 0:
             return self
         if weights is None:
-            uniq, cnt = np.unique(values.astype(str), return_counts=True)
+            uniq, cnt = np.unique(_keys(values), return_counts=True)
         else:
             w = np.asarray(weights, dtype=np.int64)
             if (w < 0).any():
                 raise ValueError("MG weights must be non-negative")
-            sv = values.astype(str)
-            uniq, inv = np.unique(sv, return_inverse=True)
+            uniq, inv = np.unique(_keys(values), return_inverse=True)
             # integer-exact accumulation: bincount(weights=...) sums in
             # float64, which silently loses precision above 2^53 and would
             # break the never-overestimate guarantee for extreme weights
@@ -95,8 +114,13 @@ class MG:
     # --------------------------------------------------------------- queries
 
     def estimate(self, items) -> np.ndarray:
-        """Lower-bound frequency estimates (0 for untracked items)."""
-        return np.array([self.counters.get(str(it), 0) for it in np.atleast_1d(items)], dtype=np.int64)
+        """Lower-bound frequency estimates (0 for untracked items) of one item
+        or a sequence of items."""
+        if isinstance(items, (str, bytes, bytearray)) or np.isscalar(items):
+            items = [items]
+        elif isinstance(items, np.ndarray):
+            items = np.atleast_1d(items)
+        return np.array([self.counters.get(item_key(it), 0) for it in items], dtype=np.int64)
 
     def top(self, m: int | None = None) -> list[tuple[str, int]]:
         """Tracked items by estimated count desc (deterministic tiebreak)."""

@@ -14,10 +14,17 @@ micro-batch plus an idempotent state store:
         between micro-batches, because the merge is exactly associative and
         commutative (a sketch never has to be "finalized" to be read).
 
+State reads happen on the driver (``statefiles``): ``result()`` and
+``compact()`` read the committed partial files with ``pyarrow``, merge each
+group with ``agg.merge_blobs``, and return a ``LocalTableScan`` frame or
+write one merged file — no Spark job and no Python worker task.
+
 Scale notes: the per-batch work is the batch hot path (no per-row Python);
-state size is (#groups x #batches) tiny sketch blobs, compactable by
-rewriting old batches into one merged partial (``compact()``).  Watermarked
-event-time windows compose by adding the window column to ``group_cols``.
+state size is (#groups x #batches) tiny sketch blobs, and the cost of
+``result()`` is O(committed state bytes) on the driver.  ``compact()`` is
+what bounds it: it rewrites the committed batches as one merged partial of
+O(#groups) blobs.  Watermarked event-time windows compose by adding the
+window column to ``group_cols``.
 """
 
 from __future__ import annotations
@@ -25,11 +32,13 @@ from __future__ import annotations
 import os
 from collections.abc import Callable, Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructType
 
-from hg64spark import agg
+from hg64spark import agg, statefiles
 from hg64spark.hg64 import HG64
 
 
@@ -176,10 +185,6 @@ class StreamingSketch:
                 f"{self.state_dir} belongs to a different streaming checkpoint lineage"
             )
         partials = agg.sketch_partials(batch_df, self.value_col, self.group_cols, self.make_sketch)
-        # remember the partial schema for result(): same-process readers then
-        # skip a parquet footer-inference pass per call (a fresh process
-        # falls back to inference — the files are self-describing)
-        self._partials_schema = partials.schema
         # repartition(1) BEFORE the write: the partial frame is tiny by
         # construction (<= #partitions x #groups sketch blobs), but it
         # inherits the input's partitioning, so writing it directly emits one
@@ -241,29 +246,32 @@ class StreamingSketch:
                 dirs.insert(0, comp)
         return dirs
 
+    def _merged(self, dirs: list[str]) -> tuple[pa.Table, StructType]:
+        partials, schema = statefiles.read(dirs, [*self.group_cols, "sketch"])
+        return agg.merge_table(partials, len(self.group_cols), self.deserialize), schema
+
     def result(self, spark: SparkSession) -> DataFrame:
-        """(group..., sketch): merge of all committed micro-batch partials."""
+        """(group..., sketch): merge of all committed micro-batch partials,
+        read and merged on the driver (module docstring) and returned as a
+        ``LocalTableScan`` frame."""
         dirs = self._batch_dirs()
         if not dirs:
             raise FileNotFoundError(f"no committed stream batches under {self.state_dir}")
-        reader = spark.read
-        schema = getattr(self, "_partials_schema", None)
-        if schema is not None:
-            reader = reader.schema(schema)
-        partials = reader.parquet(*dirs)
-        return agg.merge_sketches(partials, self.group_cols, self.deserialize)
+        return statefiles.to_frame(spark, *self._merged(dirs))
 
     def compact(self, spark: SparkSession) -> None:
         """Fold every committed batch into one merged partial directory so
-        state stays O(#groups) over an unbounded stream.
+        state stays O(#groups) over an unbounded stream; the merge runs on
+        the driver and the merged partials are written as one parquet file.
 
         Crash-safe protocol: the merged output lives under ``compacted=<id>``
         — a name ``_batch_dirs`` never scans — and becomes visible only via
         an atomic manifest replace that simultaneously tombstones the
-        consumed batch directories.  A crash before the replace leaves the
-        old state intact (stray compacted dir ignored); a crash after it
-        double-counts nothing (consumed dirs are tombstoned even though their
-        bytes still exist); deletion of tombstoned dirs is lazy cleanup."""
+        consumed batch directories.  A crash before the replace (before or
+        after the compacted dir's ``_SUCCESS``) leaves the old state intact
+        (stray compacted dir ignored); a crash after it double-counts
+        nothing (consumed dirs are tombstoned even though their bytes still
+        exist); deletion of tombstoned dirs is lazy cleanup."""
         import json
         import shutil
         import uuid
@@ -271,14 +279,10 @@ class StreamingSketch:
         dirs = self._batch_dirs()
         if len(dirs) <= 1:
             return
-        merged = agg.merge_sketches(
-            spark.read.parquet(*dirs).select(*self.group_cols, "sketch"),
-            self.group_cols,
-            self.deserialize,
-        )
+        merged, _ = self._merged(dirs)
         prev_man = self._manifest()
         comp_name = f"compacted={uuid.uuid4().hex[:12]}"
-        merged.write.mode("overwrite").parquet(os.path.join(self.state_dir, comp_name))
+        statefiles.write_committed(os.path.join(self.state_dir, comp_name), merged)
         consumed = sorted(
             set(prev_man["consumed"]) | {os.path.basename(d) for d in dirs if "batch=" in os.path.basename(d)}
         )

@@ -112,3 +112,110 @@ def test_lineage_survives_shuffling_derive(spark, tmp_path, split_files):
     assert "" not in files_seen
     nonempty = {os.path.abspath(f) for f in split_files if spark.read.parquet(f).count() > 0}
     assert files_seen == nonempty
+
+
+def test_state_reads_launch_no_spark_job(spark, tmp_path, split_files, spark_jobs):
+    """done_files and result() read committed state on the driver; the
+    marker rows process() writes are a local relation, not a Python RDD."""
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", ["event_type"])
+    ck.process(spark, split_files[:2])
+    ck.process(spark, split_files[2:])
+    with spark_jobs() as ids:
+        done = ck.done_files(spark)
+        rows = ck.result(spark).collect()
+    assert ids == []
+    assert done == {os.path.abspath(f) for f in split_files} and rows
+    with spark_jobs() as control:  # the probe sees jobs when there are some
+        spark.read.parquet(*split_files).count()
+    assert control
+
+    markers = ck._markers(spark, split_files, {"event_type": "string"})
+    plan = markers._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
+    assert markers.count() == len(split_files)
+
+
+def test_result_ignores_uncommitted_run(spark, tmp_path, split_files):
+    """A killed job's run= dir (no _SUCCESS, garbage contents) is invisible
+    to result(), not only to done_files."""
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", ["event_type"])
+    ck.process(spark, split_files[:2])
+    want = {r["event_type"]: bytes(r["sketch"]) for r in ck.result(spark).collect()}
+    dead = tmp_path / "ckpt" / "run=deadbeef"
+    dead.mkdir()
+    (dead / "part-00000.parquet").write_bytes(b"garbage")
+    got = {r["event_type"]: bytes(r["sketch"]) for r in ck.result(spark).collect()}
+    assert got == want
+
+
+def _by_group(rows, group_cols):
+    # NaN != NaN, so key NaN groups by a stand-in to compare two answers
+    def norm(v):
+        return "NaN" if isinstance(v, float) and v != v else v
+
+    out = {}
+    for r in rows:
+        key = tuple(norm(r[c]) for c in group_cols)
+        assert key not in out, f"group {key} emitted twice"
+        out[key] = bytes(r["sketch"])
+    return out
+
+
+@pytest.mark.parametrize("family", ["hg64", "kll"])
+def test_driver_merge_matches_spark_merge(spark, tmp_path, mixed_group_files, family):
+    """result() is byte-identical to agg.merge_sketches over the same
+    committed partials, with the same schema — over NULL, NaN, -0.0 and
+    long group keys, for hg64 and for order-sensitive KLL."""
+    from pyspark.sql.types import BinaryType
+
+    from hg64spark.sketches import KLL
+
+    # an explicit KLL seed: a data-derived one mixes in the Spark partition
+    # id of the task that merges, so it differs between executor and driver
+    make, deser = (
+        (HG64, HG64.deserialize) if family == "hg64" else (lambda: KLL(16, seed=7), KLL.deserialize)
+    )
+    groups = ["g_long", "g_dbl"]
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", groups, make, deser)
+    ck.process(spark, mixed_group_files[:2])
+    ck.process(spark, mixed_group_files)
+    got = ck.result(spark)
+    partials = (
+        spark.read.parquet(*ck._committed_runs())
+        .filter(~F.col("is_marker"))
+        .select(*groups, "sketch")
+    )
+    want = agg.merge_sketches(partials, groups, deser)
+    assert got.schema == want.schema
+    assert got.schema["sketch"].dataType == BinaryType() and not got.schema["sketch"].nullable
+    got_rows, want_rows = _by_group(got.collect(), groups), _by_group(want.collect(), groups)
+    assert got_rows == want_rows
+    # NULL, NaN and the 0.0 that -0.0 joins are groups of their own
+    assert {(None, "NaN"), (7, None), (None, None), (2**53 + 1, 0.0)} <= set(got_rows)
+    assert len(got_rows) == 7
+
+
+def test_driver_merge_keeps_timestamp_groups(spark, tmp_path, timestamp_group_files):
+    """TIMESTAMP and TIMESTAMP_NTZ group keys come out of result() with
+    their exact values and types under a non-UTC session time zone: byte-
+    and schema-identical to agg.merge_sketches over the same partials."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    groups = ["g_ts", "g_ntz"]
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", groups)
+    ck.process(spark, timestamp_group_files[:1])
+    ck.process(spark, timestamp_group_files)
+    got = ck.result(spark)
+    partials = (
+        spark.read.parquet(*ck._committed_runs())
+        .filter(~F.col("is_marker"))
+        .select(*groups, "sketch")
+    )
+    want = agg.merge_sketches(partials, groups, HG64.deserialize)
+    assert got.schema == want.schema
+    assert [f.dataType for f in got.schema.fields[:2]] == [TimestampType(), TimestampNTZType()]
+    got_rows = _by_group(got.collect(), groups)
+    assert got_rows == _by_group(want.collect(), groups)
+    source = spark.read.parquet(*timestamp_group_files).select(*groups).distinct().collect()
+    assert set(got_rows) == {tuple(r) for r in source} and len(got_rows) == 5

@@ -453,6 +453,43 @@ def test_merge_order_is_canonical_for_order_sensitive_sketches(spark):
     assert merged([0, 1, 2, 3, 4]) == merged([4, 2, 0, 3, 1])
 
 
+def test_merge_joins_nan_group_keys_of_any_payload(spark):
+    """Arrow's dictionary encoding keeps NaNs with different payloads (and
+    -0.0/0.0) apart; the merge still emits ONE NaN group and one 0.0 group,
+    as Spark's groupBy does — on the driver (merge_table) and in
+    merge_sketches."""
+    import struct
+
+    import pyarrow as pa
+
+    nan2 = struct.unpack("<d", b"\x01\x00\x00\x00\x00\x00\xf8\x7f")[0]
+    keys = [float("nan"), nan2, 1.0, nan2, -0.0, 0.0]
+    blobs = [HG64().add_values(np.array([i * 100 + 1])).serialize() for i in range(len(keys))]
+    table = pa.table({"g": pa.array(keys, pa.float64()), "sketch": pa.array(blobs, pa.binary())})
+    assert len(table.column("g").combine_chunks().dictionary_encode().dictionary) == 5  # the split
+    want = {
+        "NaN": agg.merge_blobs([blobs[0], blobs[1], blobs[3]], HG64.deserialize),
+        1.0: agg.merge_blobs([blobs[2]], HG64.deserialize),
+        0.0: agg.merge_blobs([blobs[4], blobs[5]], HG64.deserialize),
+    }
+
+    def keyed(rows):
+        out = {}
+        for g, blob in rows:
+            key = "NaN" if g != g else g
+            assert key not in out, f"group {key} emitted twice"
+            out[key] = bytes(blob)
+        return out
+
+    merged = agg.merge_table(table, 1, HG64.deserialize)
+    assert keyed(zip(merged.column("g").to_pylist(), merged.column("sketch").to_pylist())) == want
+    frame = spark.range(1).coalesce(1).mapInArrow(
+        lambda it: (b for _ in it for b in table.to_batches()), "g double, sketch binary"
+    )
+    spark_rows = agg.merge_sketches(frame, ["g"], HG64.deserialize).collect()
+    assert keyed((r["g"], r["sketch"]) for r in spark_rows) == want
+
+
 def test_mg_relational_byte_equals_one_batch_fold(spark):
     """The relational Misra-Gries build must be BYTE-equal to the Python
     sketch folding the same data as a single batch (both are 'subtract the
@@ -621,6 +658,33 @@ def test_mg_binary_items_global_and_grouped_agree(spark):
             spark.conf.unset("spark.sql.execution.pyspark.binaryAsBytes")
         assert bytes(grp["sketch"]) == glob, as_bytes
         assert MG.deserialize(glob).counters == want, as_bytes
+
+
+def test_mg_binary_items_python_tier_matches_relational(spark):
+    """The Python-tier MG (sketch_partials + merge_sketches) keys binary
+    items as the relational tier does: a trailing NUL is kept, non-ASCII
+    bytes do not raise, and bytes and bytearray key alike."""
+    from hg64spark import relational
+    from hg64spark.sketches import MG
+
+    items = [b"a\x00", b"a", b"\xff", bytearray(b"a\x00"), b"\xff", bytearray(b"zz"), b"a\x00"]
+    local = MG(8).add_values(np.array(items, dtype=object))
+    assert local.counters == {
+        str(b"a\x00"): 3, str(b"a"): 1, str(b"\xff"): 2, str(b"zz"): 1
+    }
+    assert local.estimate([b"a\x00", bytearray(b"\xff"), b"a"]).tolist() == [3, 2, 1]
+
+    df = spark.createDataFrame(
+        [(f"g{i % 2}", v) for i, v in enumerate(items * 3)], "g string, item binary"
+    ).repartition(3)
+    for groups in ([], ["g"]):
+        python_tier = agg.merge_sketches(
+            agg.sketch_partials(df, "item", groups, lambda: MG(8)), groups, MG.deserialize
+        )
+        rel = relational.mg_agg_relational(df, "item", k=8, group_cols=groups)
+        got = {tuple(r[g] for g in groups): bytes(r["sketch"]) for r in python_tier.collect()}
+        want = {tuple(r[g] for g in groups): bytes(r["sketch"]) for r in rel.collect()}
+        assert got == want, groups
 
 
 def test_scans_are_pruned_and_filters_pushed(spark):

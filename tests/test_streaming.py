@@ -340,3 +340,133 @@ def test_stateful_operator_is_sketch_generic_mg_across_batches(spark, tmp_path):
     assert set(got) == set(want)
     for et in want:
         assert got[et].top() == want[et].top(), et
+
+
+def _rows(df, group_cols=("event_type",)):
+    return {tuple(r[c] for c in group_cols): bytes(r["sketch"]) for r in df.collect()}
+
+
+def test_state_reads_launch_no_spark_job(spark, tmp_path, source, spark_jobs):
+    """result() and compact() read and merge committed state on the driver."""
+    import shutil
+
+    ev, files, stream_dir = source
+    for i in range(3):
+        shutil.copy(files[i], stream_dir / f"f{i}.parquet")
+    ss = _run_stream(spark, stream_dir, tmp_path / "state", tmp_path / "ckpt")
+    with spark_jobs() as ids:
+        before = _rows(ss.result(spark))
+        ss.compact(spark)
+        after = _rows(ss.result(spark))
+    assert ids == []
+    assert before == after and before
+    assert len(ss._batch_dirs()) == 1
+
+
+@pytest.mark.parametrize("family", ["hg64", "kll"])
+def test_driver_merge_matches_spark_merge(spark, tmp_path, mixed_group_files, family):
+    """result() is byte-identical to agg.merge_sketches over the same
+    committed partials (Spark-written batches and a driver-written
+    compaction), with the same schema, over NULL, NaN, -0.0 and long keys."""
+    from pyspark.sql.types import BinaryType
+
+    from hg64spark.sketches import KLL
+
+    # an explicit KLL seed: a data-derived one mixes in the Spark partition
+    # id of the task that merges, so it differs between executor and driver
+    make, deser = (
+        (HG64, HG64.deserialize) if family == "hg64" else (lambda: KLL(16, seed=7), KLL.deserialize)
+    )
+    groups = ("g_long", "g_dbl")
+    ss = StreamingSketch(str(tmp_path / "state"), "v", groups, make, deser)
+    parts = [spark.read.parquet(f) for f in mixed_group_files]
+    ss.foreach_batch(parts[0], 0)
+    ss.foreach_batch(parts[1], 1)
+    ss.compact(spark)
+    ss.foreach_batch(parts[2], 2)
+    got = ss.result(spark)
+    want = agg.merge_sketches(spark.read.parquet(*ss._batch_dirs()), list(groups), deser)
+    assert got.schema == want.schema
+    assert got.schema["sketch"].dataType == BinaryType() and not got.schema["sketch"].nullable
+
+    def keyed(df):
+        return {
+            tuple("NaN" if isinstance(k, float) and k != k else k for k in key): blob
+            for key, blob in _rows(df, groups).items()
+        }
+
+    got_rows = keyed(got)
+    assert got_rows == keyed(want)
+    assert len(got_rows) == got.count() == 7
+
+
+def test_driver_merge_keeps_timestamp_groups(spark, tmp_path, timestamp_group_files):
+    """TIMESTAMP and TIMESTAMP_NTZ group keys survive result() and a
+    driver-written compaction with their exact values and types under a
+    non-UTC session time zone; Spark reads the compacted file with the
+    same types."""
+    from pyspark.sql.types import TimestampNTZType, TimestampType
+
+    groups = ("g_ts", "g_ntz")
+    ss = StreamingSketch(str(tmp_path / "state"), "v", groups)
+    parts = [spark.read.parquet(f) for f in timestamp_group_files]
+    ss.foreach_batch(parts[0], 0)
+    ss.foreach_batch(parts[1], 1)
+    ss.compact(spark)
+    ss.foreach_batch(parts[0], 2)
+    got = ss.result(spark)
+    types = [TimestampType(), TimestampNTZType()]
+    assert [f.dataType for f in got.schema.fields[:2]] == types
+    compacted = spark.read.parquet(ss._batch_dirs()[0])
+    assert [f.dataType for f in compacted.schema.fields[:2]] == types
+    want = agg.merge_sketches(spark.read.parquet(*ss._batch_dirs()), list(groups), HG64.deserialize)
+    assert got.schema == want.schema
+    got_rows = _rows(got, groups)
+    assert got_rows == _rows(want, groups)
+    source = spark.read.parquet(*timestamp_group_files).select(*groups).distinct().collect()
+    assert set(got_rows) == {tuple(r) for r in source} and len(got_rows) == 5
+
+
+class _Killed(Exception):
+    pass
+
+
+def test_compaction_crash_before_commit_keeps_result(spark, tmp_path, source, monkeypatch):
+    """compact() killed after writing its data file — before the compacted
+    dir's _SUCCESS, or after it but before the manifest replace — leaves
+    result() unchanged, and a later compact() still succeeds."""
+    import os
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    ev, files, stream_dir = source
+    for i in range(3):
+        shutil.copy(files[i], stream_dir / f"f{i}.parquet")
+    ss = _run_stream(spark, stream_dir, tmp_path / "state", tmp_path / "ckpt")
+    want = _rows(ss.result(spark))
+    dirs = ss._batch_dirs()
+    assert len(dirs) == 3
+
+    real_write = pq.write_table
+
+    def write_then_die(*a, **kw):
+        real_write(*a, **kw)
+        raise _Killed
+
+    def die(*a, **kw):
+        raise _Killed
+
+    for patch in ((pq, "write_table", write_then_die), (os, "replace", die)):
+        with monkeypatch.context() as m:
+            m.setattr(*patch)
+            with pytest.raises(_Killed):
+                ss.compact(spark)
+        assert ss._batch_dirs() == dirs
+        assert _rows(ss.result(spark)) == want
+    stray = sorted(d for d in os.listdir(tmp_path / "state") if d.startswith("compacted="))
+    assert len(stray) == 2  # one without _SUCCESS, one committed but never in the manifest
+
+    ss.compact(spark)
+    assert len(ss._batch_dirs()) == 1
+    assert _rows(ss.result(spark)) == want
