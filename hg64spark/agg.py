@@ -46,7 +46,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from hg64spark.hg64 import HG64, HG64SnapshotMatrix, decode_matrices
+from hg64spark.hg64 import HG64, HG64SnapshotMatrix, as_probes, decode_matrices
 
 _GLOBAL_KEY = "__hg64_global__"
 
@@ -62,16 +62,19 @@ def _group_schema(df: DataFrame, group_cols: Sequence[str]) -> list[StructField]
 _NAN = float("nan")
 
 
-def segment_record_batch(
+def group_codes(
     rb: pa.RecordBatch, n_group_cols: int, _force_lexsort: bool = False
-) -> list[tuple[tuple, np.ndarray]]:
-    """Group the first ``n_group_cols`` columns of an Arrow batch without
-    creating per-row Python objects: dictionary-encode each group column,
-    fuse the codes into one mixed-radix int, argsort, and cut segments.
-    Returns [(group_value_tuple, row_index_array), ...]; empty list for a
-    zero-row batch.  Shared by the partial builder and the relational fold."""
-    if rb.num_rows == 0:
-        return []
+) -> tuple[list[tuple], np.ndarray, np.ndarray]:
+    """Dense group codes for the first ``n_group_cols`` columns of an Arrow
+    batch, made without per-row Python objects: dictionary-encode each
+    group column, fuse the codes into one mixed-radix int and sort once.
+    Returns ``(keys, codes, order)``: one key tuple per group, each row's
+    group code (an index into ``keys``, numbered in sorted order) and a
+    stable argsort of ``codes``.  With no group columns every row is in
+    the one group ``()``."""
+    n = rb.num_rows
+    if n == 0:
+        return [], np.zeros(0, np.int64), np.zeros(0, np.int64)
     dicts: list[list] = []
     codes_list: list[np.ndarray] = []
     for i in range(n_group_cols):
@@ -94,30 +97,35 @@ def segment_record_batch(
     radix = 1
     for d in dicts:
         radix = radix * len(d) if radix <= (1 << 62) // len(d) else 0
-    if _force_lexsort:
-        radix = 0
-    if radix:
-        fused = None
+    if radix and not _force_lexsort:
+        fused = np.zeros(n, np.int64)
         for d, codes in zip(dicts, codes_list):
-            fused = codes if fused is None else fused * len(d) + codes
+            fused = fused * len(d) + codes
         order = np.argsort(fused, kind="stable")
         fs = fused[order]
-        bounds = np.flatnonzero(np.diff(fs)) + 1
+        new = fs[1:] != fs[:-1]
     else:
         order = np.lexsort(tuple(reversed(codes_list)))
-        changed = np.zeros(rb.num_rows - 1, dtype=bool)
+        new = np.zeros(n - 1, dtype=bool)
         for codes in codes_list:
             cs = codes[order]
-            changed |= cs[1:] != cs[:-1]
-        bounds = np.flatnonzero(changed) + 1
-    out = []
-    for s, e in zip(
-        np.concatenate([[0], bounds]).tolist(), np.concatenate([bounds, [rb.num_rows]]).tolist()
-    ):
-        row = int(order[s])
-        key_vals = tuple(d[codes[row]] for d, codes in zip(dicts, codes_list))
-        out.append((key_vals, order[s:e]))
-    return out
+            new |= cs[1:] != cs[:-1]
+    group = np.zeros(n, np.int64)
+    group[order[1:]] = np.cumsum(new)
+    first = order[np.concatenate([[0], np.flatnonzero(new) + 1])]
+    cols = [[d[c] for c in codes[first].tolist()] for d, codes in zip(dicts, codes_list)]
+    keys = list(zip(*cols)) if cols else [()]
+    return keys, group, order
+
+
+def segment_record_batch(
+    rb: pa.RecordBatch, n_group_cols: int, _force_lexsort: bool = False
+) -> list[tuple[tuple, np.ndarray]]:
+    """The groups of :func:`group_codes` as [(group_value_tuple,
+    row_index_array), ...] in code order; empty list for a zero-row
+    batch."""
+    keys, codes, order = group_codes(rb, n_group_cols, _force_lexsort)
+    return list(zip(keys, np.split(order, np.flatnonzero(np.diff(codes[order])) + 1)))
 
 
 def sketch_partials(
@@ -307,14 +315,10 @@ def merge_table(
     rb = pa.RecordBatch.from_arrays(
         [c.combine_chunks() for c in partials.columns], schema=partials.schema
     )
-    if n_group_cols:
-        segments = segment_record_batch(rb, n_group_cols)
-    else:
-        segments = [((), np.arange(rb.num_rows))] if rb.num_rows else []
     blobs = rb.column(n_group_cols).to_pylist()
     groups: dict[tuple, list[bytes]] = {}
     first: list[int] = []
-    for key, idx in segments:
+    for key, idx in segment_record_batch(rb, n_group_cols):
         # dictionary encoding can split what groupBy joins (NaN payloads,
         # -0.0 vs 0.0); the keys rejoin them: every NaN key is the one
         # ``_NAN`` object (tuple equality checks identity first), -0.0 == 0.0
@@ -372,31 +376,6 @@ def hg64_agg(
 
         return relational.hg64_agg_relational(df, value_col, group_cols, sigbits)
     return sketch_agg(df, value_col, group_cols, lambda: HG64(sigbits), HG64.deserialize)
-
-
-def hg64_tree_agg(
-    df: DataFrame,
-    value_col: str,
-    sigbits: int = 5,
-    depth: int = 2,
-) -> HG64:
-    """Global aggregation via literal ``treeAggregate`` — the reference's
-    `merged_load` writ large (`/root/reference/test.c:125-157`, SURVEY §2.4):
-    one partial sketch per partition (stage 1), then an RDD treeAggregate of
-    the tiny serialized blobs with the associative merge as both seqOp and
-    combOp.  Returns the final sketch on the driver.  The tree keeps driver
-    merge cost at O(keys x log(#partitions)); with ~1.4us per merge even 10^5
-    partition sketches fold in well under a second."""
-    partials = sketch_partials(df, value_col, [], lambda: HG64(sigbits))
-    blobs = partials.select("sketch").rdd.map(lambda r: bytes(r["sketch"]))
-
-    def seq_op(acc: HG64, blob: bytes) -> HG64:
-        return acc.merge(HG64.deserialize(blob))
-
-    def comb_op(a: HG64, b: HG64) -> HG64:
-        return a.merge(b)
-
-    return blobs.treeAggregate(HG64(sigbits), seq_op, comb_op, depth=depth)
 
 
 def repartition_salted(df: DataFrame, cols: Sequence[str], buckets: int) -> DataFrame:
@@ -494,7 +473,7 @@ def hg64_ranks(
 ) -> DataFrame:
     """(group..., probe, rank) — `hg64s_rank_of_value`
     (`/root/reference/hg64.c:410-429`) for each probe value."""
-    parr = np.asarray(list(probes), dtype=np.uint64)
+    parr = as_probes(list(probes))
 
     def kernel(snap: HG64SnapshotMatrix):
         return _grid(parr.astype(np.int64), snap.rank_of_value(parr).astype(np.int64))
@@ -510,7 +489,7 @@ def hg64_qov(
     (`/root/reference/hg64.c:438-442`): rank_of_value / population, the FP
     division being the only non-integer op (so a SQL oracle agrees bitwise);
     NaN for an empty sketch."""
-    parr = np.asarray(list(probes), dtype=np.uint64)
+    parr = as_probes(list(probes))
 
     def kernel(snap: HG64SnapshotMatrix):
         return _grid(parr.astype(np.int64), snap.quantile_of_value(parr))
@@ -525,13 +504,7 @@ def hg64_stats(sketch_df: DataFrame, group_cols: Sequence[str]) -> DataFrame:
     all three are 0 for an empty sketch."""
 
     def kernel(snap: HG64SnapshotMatrix):
-        s1, s2, pop = snap.midpoint_stats_exact()
-        # op order matches the SQL oracle exactly: round each exact integer
-        # sum to double FIRST, then divide — so DuckDB agrees bit-for-bit
-        popf = pop.astype(np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            mean = np.where(pop > 0, s1.astype(np.float64) / (2.0 * popf), 0.0)
-            var = np.where(pop > 0, s2.astype(np.float64) / (4.0 * popf) - mean * mean, 0.0)
+        pop, mean, var = snap.stats()
         return np.arange(pop.size), [pop.astype(np.int64), mean, var]
 
     extra = [

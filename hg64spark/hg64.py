@@ -58,7 +58,8 @@ class HG64:
 
         ``values`` must be non-negative; they are bucketed with the vectorized
         key kernel and counted with one ``bincount`` (unweighted) or
-        ``add.at`` (weighted) — no per-row Python.
+        :func:`fold_counts` (weighted; a negative weight raises ValueError)
+        — no per-row Python.
         """
         values = np.asarray(values)
         if values.size == 0:
@@ -74,8 +75,7 @@ class HG64:
         if weights is None:
             self.counters += np.bincount(keys, minlength=self.counters.size).astype(U64)
         else:
-            w = np.asarray(weights, dtype=U64)
-            np.add.at(self.counters, keys, w)
+            self.counters += fold_counts(0, keys, weights, 1, self.sigbits)[0]
         return self
 
     def inc(self, value: int, count: int = 1) -> None:
@@ -144,7 +144,7 @@ class HG64:
             # source bucket maps to exactly one target key and put()'s ratio
             # is exactly 1.0 -> pure integer re-keying (no FP involved).
             tkeys = km.value_to_key(mins, self.sigbits)
-            np.add.at(self.counters, tkeys, counts)
+            self.counters += fold_counts(0, tkeys, counts, 1, self.sigbits)[0]
         else:
             for vmin, vmax, cnt in zip(mins.tolist(), maxs.tolist(), counts.tolist()):
                 self.put(vmin, vmax, cnt)
@@ -291,6 +291,37 @@ def decode_matrices(blobs) -> Iterator[tuple[int, int, np.ndarray]]:
         start = stop
 
 
+def fold_counts(codes, keys, counts, ngroups: int, sigbits: int) -> np.ndarray:
+    """Fold ``(group code, hg64 key, count)`` rows into a (ngroups x nkeys)
+    uint64 counter matrix with one integer scatter-add: the same-sigbits
+    `hg64_merge` (`hg64.c:297-305`) of every row at once.  ``codes`` may
+    be a scalar when every row is in one group.  Duplicate ``(group, key)``
+    pairs are summed; a negative count or a key outside the key space
+    raises ValueError."""
+    keys = np.asarray(keys)
+    counts = np.asarray(counts)
+    nk = km.nkeys(sigbits)
+    if counts.size and (counts.min() < 0 or keys.min() < 0 or keys.max() >= nk):
+        raise ValueError(f"hg64 counts need 0 <= key < {nk} and count >= 0")
+    out = np.zeros((ngroups, nk), dtype=U64)
+    np.add.at(out, (codes, keys), counts.astype(U64))
+    return out
+
+
+def as_probes(values) -> np.ndarray:
+    """Probe values as uint64.  A negative, NaN or too-large probe raises
+    ValueError; numpy would wrap -1 to 2^64-1 with only a warning.  A
+    Python sequence is read as exact objects: numpy would make
+    ``[2**64 - 1, 0]`` a float64 array."""
+    if not isinstance(values, np.ndarray):
+        values = np.asarray(values, dtype=object)
+    if values.dtype.kind != "u":
+        with np.errstate(invalid="ignore"):
+            if not bool(((values >= 0) & (values < 2**64)).all()):
+                raise ValueError("hg64 probe values must be in [0, 2^64)")
+    return values.astype(U64)
+
+
 class HG64Snapshot:
     """Immutable query view: counters + inclusive cumulative sums.
 
@@ -327,7 +358,7 @@ class HG64Snapshot:
     def rank_of_value(self, values) -> np.ndarray:
         """Vectorized `hg64s_rank_of_value` (`hg64.c:410-429`): count below
         the value's bucket plus the interpolated fraction inside it."""
-        values = np.atleast_1d(np.asarray(values, dtype=U64))
+        values = np.atleast_1d(as_probes(values))
         keys = km.value_to_key(values, self.sigbits)
         prev = np.where(keys > 0, self.cum[np.maximum(keys - 1, 0)], U64(0)).astype(U64)
         cnts = self.counters[keys]
@@ -416,11 +447,20 @@ class HG64Snapshot:
         return s1, s2, self.population
 
 
+def _per_row(params: np.ndarray) -> np.ndarray:
+    """Query parameters shaped to broadcast against the matrix rows: a
+    (k,) vector asks every row the same k questions, a (rows, 1) column
+    asks each row its own."""
+    return params.reshape(1, -1) if params.ndim < 2 else params
+
+
 class HG64SnapshotMatrix:
     """:class:`HG64Snapshot` for every row of a (rows x nkeys) counter
     matrix at once: one ``cumsum`` along axis 1 and 2-D numpy per query,
     with the same keymath and the same operation order per element, so
-    each row answers bit-identically to its own snapshot."""
+    each row answers bit-identically to its own snapshot.  Queries take a
+    (k,) parameter vector or a (rows, 1) column (see :func:`_per_row`)
+    and answer (rows x k)."""
 
     __slots__ = ("sigbits", "counters", "cum", "population")
 
@@ -431,9 +471,9 @@ class HG64SnapshotMatrix:
         self.population = self.cum[:, -1]
 
     def value_at_quantile(self, qs) -> np.ndarray:
-        """(rows x len(qs)) uint64: :meth:`HG64Snapshot.value_at_quantile`."""
-        qs = np.clip(np.atleast_1d(np.asarray(qs, dtype=np.float64)), 0.0, 1.0)
-        ranks = np.floor(qs[None, :] * self.population.astype(np.float64)[:, None]).astype(U64)
+        """(rows x k) uint64: :meth:`HG64Snapshot.value_at_quantile`."""
+        qs = np.clip(_per_row(np.asarray(qs, dtype=np.float64)), 0.0, 1.0)
+        ranks = np.floor(qs * self.population.astype(np.float64)[:, None]).astype(U64)
         # first crossing: the count of cumulative totals <= rank is
         # searchsorted(side="right") on each row
         idx = np.stack([(self.cum <= r[:, None]).sum(axis=1) for r in ranks.T], axis=1)
@@ -447,16 +487,17 @@ class HG64SnapshotMatrix:
         return np.where(oob, _U64_MAX, vals)
 
     def rank_of_value(self, values) -> np.ndarray:
-        """(rows x len(values)) uint64: :meth:`HG64Snapshot.rank_of_value`."""
-        values = np.atleast_1d(np.asarray(values, dtype=U64))
+        """(rows x k) uint64: :meth:`HG64Snapshot.rank_of_value`."""
+        values = _per_row(as_probes(values))
         keys = km.value_to_key(values, self.sigbits)
-        prev = np.where(keys > 0, self.cum[:, np.maximum(keys - 1, 0)], U64(0)).astype(U64)
+        rows = np.arange(self.counters.shape[0])[:, None]
+        prev = np.where(keys > 0, self.cum[rows, np.maximum(keys - 1, 0)], U64(0)).astype(U64)
         mins = km.key_to_minval(keys, self.sigbits)
         maxs = km.key_to_maxval(keys, self.sigbits)
-        return prev + km.interpolate_u64(self.counters[:, keys], values - mins, maxs - mins)
+        return prev + km.interpolate_u64(self.counters[rows, keys], values - mins, maxs - mins)
 
     def quantile_of_value(self, values) -> np.ndarray:
-        """(rows x len(values)) float64: :meth:`HG64Snapshot.quantile_of_value`,
+        """(rows x k) float64: :meth:`HG64Snapshot.quantile_of_value`,
         NaN on an empty row."""
         ranks = self.rank_of_value(values).astype(np.float64)
         pop = self.population.astype(np.float64)[:, None]
@@ -481,3 +522,16 @@ class HG64SnapshotMatrix:
         np.add.at(s1, rows, s1_cells)
         np.add.at(s2, rows, s1_cells * m)
         return s1, s2, self.population
+
+    def stats(self):
+        """Per row (population, mean, variance) of the bucket midpoints, as
+        :meth:`HG64Snapshot.mean_variance_corrected`; all three are 0 on an
+        empty row.  Each exact integer sum is rounded to double first and
+        then divided, the operation order of the SQL oracle, so DuckDB
+        agrees bit for bit."""
+        s1, s2, pop = self.midpoint_stats_exact()
+        popf = pop.astype(np.float64)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            mean = np.where(pop > 0, s1.astype(np.float64) / (2.0 * popf), 0.0)
+            var = np.where(pop > 0, s2.astype(np.float64) / (4.0 * popf) - mean * mean, 0.0)
+        return pop, mean, var

@@ -15,8 +15,8 @@ never crosses the JVM/Python boundary at all:
       -> shuffle of <= (64-sigbits+1)*2^sigbits counts per group
       -> HashAggregate final (the associative merge = integer add, what
          `hg64_merge` does at same sigbits, `/root/reference/hg64.c:297-305`)
-      -> tiny applyInPandas: fold <= 1920 (key, count) rows/group into a
-         serialized sketch blob
+      -> fold <= 1920 (key, count) rows/group into a serialized sketch
+         blob with one scatter-add (`hg64.fold_counts`)
 
 Measured in this sandbox: ~27M rows/s at local[8] vs ~4.5M rows/s for the
 Arrow-UDF path — the JVM->Python Arrow stream is the bottleneck the moment
@@ -32,11 +32,12 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from hg64spark import keymath as km
-from hg64spark.hg64 import HG64
+from hg64spark.hg64 import HG64, fold_counts
 from hg64spark.localrel import local_rows_df
 
 _GLOBAL = "__hg64_g__"
@@ -96,25 +97,12 @@ def hg64_counts(
     group_cols: Sequence[str] = (),
     sigbits: int = 5,
     weight_col: str | None = None,
-    fused_group_domain: int | None = None,
 ) -> DataFrame:
     """(group..., hg64_key, count) — the sketch in relational form.  This IS
     a valid query result on its own (the exploded-bucket view) and the input
     to sketch materialization.  With ``weight_col`` the update is the
     reference's weighted `hg64_add(value, inc)` (`hg64.c:251-254`):
-    count = sum of weights per bucket.
-
-    ``fused_group_domain``: opt-in hot-path for ONE integer group column
-    whose values are known to lie in [0, domain) — the group value and the
-    hg64 key are fused into a single long (group*nkeys + key) so the
-    per-row HashAggregate probe hashes/compares ONE column instead of two,
-    then un-fused exactly after the (tiny) aggregate.  Measured ~1.5x on
-    the sketch-marginal ingest rate at 500M rows, local[32]: 309 -> 472M
-    upd/s on one recorded run, 367 -> 513M on another — absolute numbers
-    move with box weather, the ~1.5x ratio is the stable part.  Exactness is preserved: NULL group values get their own
-    fused slot (= domain) and come back as NULL; a value outside the
-    declared domain FAILS the job plan-side rather than aliasing into
-    another group's slot."""
+    count = sum of weights per bucket."""
     group_cols = list(group_cols)
     cols = [*group_cols, value_col] + ([weight_col] if weight_col else [])
     keyed = with_hg64_key(df.select(*cols), value_col, sigbits)
@@ -123,47 +111,6 @@ def hg64_counts(
         if weight_col
         else F.count("*").alias("count")
     )
-    if fused_group_domain is not None:
-        from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-        if len(group_cols) != 1:
-            raise ValueError("fused_group_domain requires exactly one group column")
-        g = group_cols[0]
-        gtype = dict((f.name, f.dataType) for f in df.schema.fields)[g]
-        # integral only: a fractional group value would TRUNCATE through the
-        # cast-to-long and silently alias into another group's slot (2.5 ->
-        # slot 2), and a non-numeric one would cast to NULL and merge with
-        # genuine NULL groups — both contradict the fails-not-aliases
-        # contract, so reject the column type up front
-        if not isinstance(gtype, (ByteType, ShortType, IntegerType, LongType)):
-            raise ValueError(
-                f"fused_group_domain requires an integral group column; {g!r} is {gtype}"
-            )
-        nk = km.nkeys(sigbits)
-        dom = int(fused_group_domain)
-        if dom <= 0 or dom * nk >= (1 << 62):
-            raise ValueError(f"fused_group_domain out of range: {dom}")
-        gval = F.col(g).cast("long")
-        guard = F.when(
-            (gval < 0) | (gval >= dom),
-            F.expr("CAST(raise_error('group value outside fused_group_domain') AS LONG)"),
-        ).otherwise(gval)
-        slot = F.coalesce(guard, F.lit(dom))  # NULL group -> its own slot
-        fused = keyed.select(
-            (slot * nk + F.col("hg64_key")).alias("__gk"),
-            *([weight_col] if weight_col else []),
-        )
-        out = fused.groupBy("__gk").agg(agg_expr)
-        # integer div, NOT `/`: float division loses exactness past 2^53
-        gslot = F.expr(f"__gk div {nk}")
-        return out.select(
-            F.when(gslot == dom, F.lit(None))
-            .otherwise(gslot)
-            .cast(gtype)
-            .alias(g),
-            F.pmod("__gk", F.lit(nk)).cast("int").alias("hg64_key"),
-            "count",
-        )
     return keyed.groupBy(*group_cols, "hg64_key").agg(agg_expr)
 
 
@@ -1542,114 +1489,64 @@ def hg64_counts_subtract(
     )
 
 
-def hg64_from_counts(rows, sigbits: int) -> HG64:
-    """Fold collected (hg64_key, count) rows into a sketch, driver-side.
-    For global aggregations this replaces the applyInPandas stage entirely:
-    the plan ends at Catalyst's final HashAggregate + collect of <= 1920
-    rows."""
-    sk = HG64(sigbits)
-    for r in rows:
-        sk.counters[r["hg64_key"]] += np.uint64(r["count"])
-    return sk
-
-
 def hg64_agg_relational(
     df: DataFrame,
     value_col: str,
     group_cols: Sequence[str] = (),
     sigbits: int = 5,
-    fused_group_domain: int | None = None,
 ) -> DataFrame:
     """(group..., sketch binary): same output contract as
     ``agg.sketch_agg`` but with the entire reduction in Catalyst; Python
     touches <= (64-sigbits+1)*2^sigbits rows per group.
 
-    Grouped: counts repartitioned by group and folded with mapInArrow
-    segmentation — ONE Python call per partition, the shape that survives
-    millions of groups (per-conversation sketches).  Global: the counts are
-    folded driver-side.  Blobs are byte-identical to ``agg.hg64_agg(...,
-    method="arrow")`` (tested)."""
+    Both shapes fold their count rows with the one kernel,
+    :func:`hg64spark.hg64.fold_counts`.  Grouped: the counts are
+    repartitioned by group and each partition is folded in one
+    ``mapInArrow`` call, with dense group codes from
+    :func:`hg64spark.agg.group_codes` — the shape that survives millions of
+    groups (per-conversation sketches).  Global: the counts frame is <=
+    nkeys(sigbits) rows by construction, so it is collected as Arrow and
+    folded driver-side into a LocalRelation result, like the global
+    HLL/CMS finalizers (empty input -> empty frame).  Blobs are
+    byte-identical to ``agg.hg64_agg(..., method="arrow")`` (tested)."""
     group_cols = list(group_cols)
-    counts = hg64_counts(
-        df, value_col, group_cols, sigbits, fused_group_domain=fused_group_domain
-    )
+    ng = len(group_cols)
+    counts = hg64_counts(df, value_col, group_cols, sigbits)
+
+    if not group_cols:
+        table = counts.toArrow()
+        out_rows = []
+        if table.num_rows:
+            (counters,) = fold_counts(
+                0, table.column("hg64_key").to_numpy(), table.column("count").to_numpy(), 1, sigbits
+            )
+            out_rows = [(bytearray(HG64(sigbits, counters).serialize()),)]
+        return local_rows_df(counts.sparkSession, out_rows, "sketch binary")
+
     fields = [f for f in counts.schema.fields if f.name in group_cols]
     out_schema = StructType(fields + [StructField("sketch", BinaryType(), False)])
-    nk = km.nkeys(sigbits)
 
-    if fused_group_domain is not None and group_cols:
-        # the fused contract DECLARES the counts frame bounded at
-        # (domain + 1) x nkeys rows, so the final fold is driver-side: one
-        # collect of the reduced counts (the same bounded-reduction class
-        # as a sketch-blob collect — the size is declared, not
-        # data-dependent), the identical numpy accumulation the Arrow fold
-        # runs per task, and a LocalRelation result.  That removes the
-        # fold's repartition exchange, its Python worker stage, and one
-        # collect round trip from the hot ingest path; the blobs are
-        # byte-identical (same uint64 counter accumulation, same
-        # serialize — pytest-asserted against the Arrow fold).
+    def fold_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        from hg64spark.agg import group_codes
 
-        g = group_cols[0]
-        by_group: dict = {}
-        for r in counts.collect():
-            counters = by_group.setdefault(r[g], np.zeros(nk, dtype=np.uint64))
-            counters[r["hg64_key"]] += np.uint64(r["count"])
-        gfield = next(f for f in counts.schema.fields if f.name == g)
-        return local_rows_df(
-            counts.sparkSession,
-            [
-                (k, bytearray(HG64(sigbits, v).serialize()))
-                for k, v in by_group.items()
-            ],
-            f"`{g}` {gfield.dataType.simpleString()}, sketch binary",
-        )
+        # batches can repeat a group: number groups per partition by key
+        index: dict[tuple, int] = {}
+        parts = []
+        schema = None
+        for rb in batches:
+            schema = rb.schema
+            keys, codes, _ = group_codes(rb, ng)
+            remap = np.array([index.setdefault(k, len(index)) for k in keys], dtype=np.int64)
+            parts.append((remap[codes], rb.column(ng).to_numpy(), rb.column(ng + 1).to_numpy()))
+        if not index:
+            return
+        counters = fold_counts(*map(np.concatenate, zip(*parts)), len(index), sigbits)
+        gkeys = list(index)
+        arrays = [pa.array([k[i] for k in gkeys], type=schema.field(i).type) for i in range(ng)]
+        arrays.append(pa.array([HG64(sigbits, c).serialize() for c in counters], type=pa.binary()))
+        yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in out_schema.fields])
 
-    if group_cols:
-        import pyarrow as pa
-
-        shuffled = counts.repartition(*group_cols)
-
-        def fold_partition(batches):
-            from hg64spark.agg import segment_record_batch
-
-            sketches: dict[tuple, np.ndarray] = {}
-            out_type = None
-            for rb in batches:
-                if out_type is None:
-                    out_type = rb.schema
-                keys = rb.column(len(group_cols)).to_numpy(zero_copy_only=False)
-                cnts = rb.column(len(group_cols) + 1).to_numpy(zero_copy_only=False)
-                for gkey, idx in segment_record_batch(rb, len(group_cols)):
-                    counters = sketches.get(gkey)
-                    if counters is None:
-                        counters = sketches[gkey] = np.zeros(nk, dtype=np.uint64)
-                    counters[keys[idx]] += cnts[idx].astype(np.uint64)
-            if not sketches:
-                return
-            gkeys = list(sketches.keys())
-            arrays = [
-                pa.array([k[i] for k in gkeys], type=out_type.field(i).type)
-                for i in range(len(group_cols))
-            ]
-            arrays.append(
-                pa.array([HG64(sigbits, sketches[k]).serialize() for k in gkeys], type=pa.binary())
-            )
-            yield pa.RecordBatch.from_arrays(arrays, names=[f.name for f in out_schema.fields])
-
-        return shuffled.mapInArrow(fold_partition, out_schema)
-
-    # global build: the counts frame is <= nkeys(sigbits) rows BY
-    # CONSTRUCTION — driver-side fold + LocalRelation result, exactly like
-    # the global HLL/CMS finalizers (empty input -> empty frame)
-    rows = counts.collect()
-    out_rows = []
-    if rows:
-        counters = np.zeros(nk, dtype=np.uint64)
-        counters[np.array([r["hg64_key"] for r in rows])] = np.array(
-            [r["count"] for r in rows]
-        ).astype(np.uint64)
-        out_rows = [(bytearray(HG64(sigbits, counters).serialize()),)]
-    return local_rows_df(counts.sparkSession, out_rows, "sketch binary")
+    return counts.repartition(*group_cols).mapInArrow(fold_partition, out_schema)
 
 
 # --------------------------------------------------------------- Misra-Gries

@@ -66,8 +66,8 @@ def windowed_hg64_counts(
     * in append output mode a window's counts are emitted exactly once, when
       the watermark passes its end — at which point they are final and the
       (window, key, count) rows ARE the serialized-free relational sketch
-      (fold with :func:`hg64spark.relational.hg64_from_counts` or feed
-      ``agg.hg64_buckets``-style finalizers).
+      (fold them into counters with :func:`hg64spark.hg64.fold_counts`,
+      with one group code per window and group).
 
     Returns the streaming DataFrame; callers attach their sink
     (``writeStream.outputMode("append")``)."""

@@ -1,94 +1,101 @@
-"""Scalar pandas-UDF surface over serialized sketch columns.
+"""Scalar Arrow-UDF surface over serialized sketch columns.
 
 Once sketches are persisted as binary columns (checkpoint tables, streaming
 state, rollup tables), users query them straight from SQL:
 
     SELECT tool, hg64_quantile(sketch, 0.99) AS p99 FROM tool_sketches
 
-All UDFs are Arrow-batched (`pandas_udf`) and operate on the tiny sketch
-blobs, not row data — the expensive aggregation already happened when the
-sketch was built, so these are cheap finalizers.  `register(spark)` installs
-them for SQL; the module-level objects work in the DataFrame API.
+Each UDF gets an Arrow batch of sketch blobs and answers it with the
+columnar finalizer kernel that ``agg.hg64_quantiles`` and friends run:
+``hg64.decode_matrices`` turns the batch into (sketches x keys) counter
+matrices and ``hg64.HG64SnapshotMatrix`` answers every row at once, each
+row with its own parameter.  A NULL sketch, or a NULL or NaN parameter,
+answers NULL; the rows around it never see Python objects.
+`register(spark)` installs the UDFs for SQL; the module-level objects work
+in the DataFrame API.
 """
 
 from __future__ import annotations
 
+from collections.abc import Callable, Iterator
+
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import SparkSession
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import BinaryType, DoubleType, LongType
 
-from hg64spark.hg64 import HG64
+from hg64spark.hg64 import HG64, HG64SnapshotMatrix, decode_matrices
 
 
-def _isnull(v) -> bool:
-    return v is None or (isinstance(v, float) and v != v)
+def _answer(
+    sketch: pa.Array,
+    param: pa.Array | None,
+    kernel: Callable[[HG64SnapshotMatrix, np.ndarray | None], np.ndarray],
+    dtype,
+) -> pa.Array:
+    """``kernel(matrix, params)`` over the rows whose sketch and parameter
+    are neither NULL nor NaN, one decoded matrix at a time; ``params`` is
+    those rows' parameters as a (rows, 1) column.  Other rows are NULL."""
+    ok = sketch.is_valid().to_numpy(zero_copy_only=False)
+    if param is not None:
+        if not pa.types.is_integer(param.type):
+            param = param.cast(pa.float64())
+        values = param.fill_null(0).to_numpy(zero_copy_only=False)
+        ok &= param.is_valid().to_numpy(zero_copy_only=False)
+        if values.dtype.kind == "f":
+            ok &= ~np.isnan(values)
+    rows = np.flatnonzero(ok)
+    out = np.zeros(len(sketch), dtype=dtype)
+    for sigbits, start, counters in decode_matrices(sketch.take(rows).to_pylist()):
+        at = rows[start : start + counters.shape[0]]
+        params = None if param is None else values[at, None]
+        out[at] = kernel(HG64SnapshotMatrix(sigbits, counters), params).reshape(-1)
+    return pa.array(out, mask=~ok)
 
 
-@pandas_udf(LongType())
-def hg64_quantile(sketch: pd.Series, q: pd.Series) -> pd.Series:
-    """value_at_quantile over a serialized hg64 column (`hg64.c:431-436`).
-    SQL convention: null sketch or null q -> null result."""
-    out = []
-    for blob, qq in zip(sketch, q):
-        if _isnull(blob) or _isnull(qq):
-            out.append(None)
-            continue
-        # .astype(int64) wraps UINT64_MAX (q=1.0 / empty sketch) to -1,
-        # matching agg.hg64_quantiles — a bare int() would overflow
-        out.append(
-            int(HG64.deserialize(bytes(blob)).snapshot().value_at_quantile(np.array([qq])).astype(np.int64)[0])
-        )
-    return pd.Series(out, dtype="Int64")
+@arrow_udf(LongType())
+def hg64_quantile(sketch: pa.Array, q: pa.Array) -> pa.Array:
+    """value_at_quantile over a serialized hg64 column (`hg64.c:431-436`);
+    an empty sketch or q >= 1 gives UINT64_MAX, i.e. -1 as a long."""
+    return _answer(sketch, q, lambda m, qs: m.value_at_quantile(qs).astype(np.int64), np.int64)
 
 
-@pandas_udf(LongType())
-def hg64_rank(sketch: pd.Series, value: pd.Series) -> pd.Series:
-    """rank_of_value over a serialized hg64 column (`hg64.c:410-429`);
-    null-in/null-out."""
-    out = []
-    for blob, v in zip(sketch, value):
-        if _isnull(blob) or _isnull(v):
-            out.append(None)
-            continue
-        out.append(int(HG64.deserialize(bytes(blob)).snapshot().rank_of_value(np.array([v], dtype=np.uint64))[0]))
-    return pd.Series(out, dtype="Int64")
+@arrow_udf(LongType())
+def hg64_rank(sketch: pa.Array, value: pa.Array) -> pa.Array:
+    """rank_of_value over a serialized hg64 column (`hg64.c:410-429`); a
+    negative probe fails with ValueError."""
+    return _answer(sketch, value, lambda m, v: m.rank_of_value(v).astype(np.int64), np.int64)
 
 
-@pandas_udf(LongType())
-def hg64_population(sketch: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if _isnull(b) else HG64.deserialize(bytes(b)).population for b in sketch], dtype="Int64"
-    )
+@arrow_udf(LongType())
+def hg64_population(sketch: pa.Array) -> pa.Array:
+    return _answer(sketch, None, lambda m, _: m.population.astype(np.int64), np.int64)
 
 
-@pandas_udf(DoubleType())
-def hg64_mean(sketch: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if _isnull(b) else HG64.deserialize(bytes(b)).snapshot().mean_variance_corrected()[0] for b in sketch],
-        dtype="Float64",
-    )
+@arrow_udf(DoubleType())
+def hg64_mean(sketch: pa.Array) -> pa.Array:
+    """Mean of the bucket midpoints, 0.0 for an empty sketch."""
+    return _answer(sketch, None, lambda m, _: m.stats()[1], np.float64)
 
 
-@pandas_udf(BinaryType())
-def hg64_merge_pair(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Merge two serialized sketches (e.g. combining rollup rows).  A null on
-    one side passes the other through unchanged (merge with empty = identity);
-    null on both sides -> null."""
-    out = []
-    for x, y in zip(a, b):
-        if _isnull(x) and _isnull(y):
-            out.append(None)
-        elif _isnull(x):
-            out.append(bytes(y))
-        elif _isnull(y):
-            out.append(bytes(x))
-        else:
-            sk = HG64.deserialize(bytes(x))
-            sk.merge(HG64.deserialize(bytes(y)))
-            out.append(sk.serialize())
-    return pd.Series(out, dtype="object")
+def _sketches(blobs: pa.Array) -> Iterator[HG64]:
+    """The sketches of a column with no NULLs, decoded matrix by matrix."""
+    for sigbits, _, counters in decode_matrices(blobs.to_pylist()):
+        yield from (HG64(sigbits, row) for row in counters)
+
+
+@arrow_udf(BinaryType())
+def hg64_merge_pair(a: pa.Array, b: pa.Array) -> pa.Array:
+    """Merge two serialized sketches (e.g. combining rollup rows) with
+    `HG64.merge`, so a pair of different sigbits merges into ``a``'s.  A
+    NULL on one side passes the other through unchanged (merge with empty
+    = identity); NULL on both sides -> NULL."""
+    both = pc.and_(a.is_valid(), b.is_valid())
+    idx = np.flatnonzero(both.to_numpy(zero_copy_only=False))
+    merged = [x.merge(y).serialize() for x, y in zip(_sketches(a.take(idx)), _sketches(b.take(idx)))]
+    return pc.replace_with_mask(pc.coalesce(a, b), both, pa.array(merged, type=a.type))
 
 
 def register(spark: SparkSession) -> None:

@@ -7,8 +7,9 @@ import struct
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
-from hg64spark import agg, keymath as km
+from hg64spark import agg, keymath as km, udfs
 from hg64spark.hg64 import HG64, MATRIX_CELLS, decode_matrices
 from hg64spark.sketches import KLL
 
@@ -88,6 +89,46 @@ def test_all_finalizers_match_per_sketch_snapshot(spark):
         return [(pop, mean, var)]
 
     assert _got(agg.hg64_stats(df, g), "population", "mean", "variance") == _expected(rows, stats)
+
+
+def test_sql_udfs_match_per_sketch_snapshot(spark):
+    """The scalar UDFs, each row with its own q (q < 0 and q > 1 included)
+    and probe, answer what ``HG64.deserialize(blob).snapshot()`` does."""
+    rows = _sketches()
+    qs = [QS[i % len(QS)] for i in range(len(rows))]
+    probes = [PROBES[i % len(PROBES)] for i in range(len(rows))]
+    data = [
+        (i, bytearray(sk.serialize()), q, p)
+        for i, ((_, _, sk), q, p) in enumerate(zip(rows, qs, probes))
+    ]
+    df = spark.createDataFrame(data, "i int, sketch binary, q double, probe long").coalesce(2)
+    got = df.select(
+        "i",
+        udfs.hg64_quantile("sketch", "q").alias("qv"),
+        udfs.hg64_rank("sketch", "probe").alias("rk"),
+        udfs.hg64_population("sketch").alias("pop"),
+        udfs.hg64_mean("sketch").alias("mean"),
+    ).collect()
+    assert sorted(r["i"] for r in got) == list(range(len(rows)))
+    for r in got:
+        i = r["i"]
+        snap = HG64.deserialize(bytes(data[i][1])).snapshot()
+        assert r["qv"] == int(snap.value_at_quantile([qs[i]]).astype(np.int64)[0])
+        assert r["rk"] == int(snap.rank_of_value([probes[i]])[0])
+        assert r["pop"] == snap.population
+        assert r["mean"] == snap.mean_variance_corrected()[0]
+
+
+def test_negative_probes_fail(spark):
+    """A negative probe is a ValueError on every rank surface, never a rank
+    of a wrapped 2^64-1 probe."""
+    df = _frame(spark, _sketches()[:3])
+    with pytest.raises(ValueError, match="probe"):
+        agg.hg64_ranks(df, ["g1"], [5, -1])
+    with pytest.raises(ValueError, match="probe"):
+        agg.hg64_qov(df, ["g1"], [-1])
+    with pytest.raises(Exception, match="ValueError: hg64 probe"):
+        df.select(udfs.hg64_rank("sketch", F.lit(-1).cast("long"))).collect()
 
 
 def test_empty_sketch_edge_values(spark):

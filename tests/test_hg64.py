@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from hg64spark import keymath as km
-from hg64spark.hg64 import HG64
+from hg64spark.hg64 import HG64, HG64SnapshotMatrix, fold_counts
 
 U64 = np.uint64
 RNG_SEED = 42
@@ -31,6 +31,10 @@ def test_negative_values_rejected():
     hg = HG64(5)
     with pytest.raises(ValueError):
         hg.add_values(np.array([-1], dtype=np.int64))
+    # a negative weight would wrap to 2^64-1 on the way to uint64
+    with pytest.raises(ValueError):
+        hg.add_values(np.array([3, 4]), weights=np.array([2, -1]))
+    assert hg.population == 0
 
 
 def test_negative_scalar_paths_rejected():
@@ -51,6 +55,40 @@ def test_negative_scalar_paths_rejected():
     assert hg.population == 0
     hg.inc(0, 0)  # zero increment stays a no-op
     assert hg.population == 0
+
+
+def test_fold_counts_exact_and_sums_duplicates():
+    """The fold kernel adds in uint64, not float64: a count of 2^60 plus 1
+    stays exact, and a repeated (group, key) pair is summed."""
+    nk = km.nkeys(5)
+    codes = np.array([1, 0, 1, 1, 0])
+    keys = np.array([7, 7, 7, nk - 1, 0])
+    counts = np.array([2**60, 3, 1, 5, 2], dtype=np.int64)
+    out = fold_counts(codes, keys, counts, 3, 5)
+    assert out.dtype == U64 and out.shape == (3, nk)
+    assert int(out[1, 7]) == 2**60 + 1
+    assert (int(out[0, 7]), int(out[0, 0]), int(out[1, nk - 1])) == (3, 2, 5)
+    assert int(out.sum(dtype=object)) == 2**60 + 11 and not out[2].any()
+    # the folded row is the sketch the values would build
+    want = HG64(5).add_values(np.array([0, 0, 7, 7, 7], dtype=U64))
+    assert np.array_equal(out[0], want.counters)
+    with pytest.raises(ValueError):
+        fold_counts(codes, keys, -counts, 3, 5)
+    with pytest.raises(ValueError):
+        fold_counts(codes, keys + 1, counts, 3, 5)
+
+
+def test_negative_probes_rejected():
+    """numpy would wrap a probe of -1 to 2^64-1 (rank ~ population); the
+    per-sketch and matrix kernels reject it instead."""
+    hg = HG64(5).add_values(np.arange(100))
+    snap = HG64SnapshotMatrix(5, hg.counters[None, :])
+    for probes in ([-1], np.array([5, -1]), [float("nan")], [2.0**64]):
+        with pytest.raises(ValueError, match="probe"):
+            hg.snapshot().rank_of_value(probes)
+        with pytest.raises(ValueError, match="probe"):
+            snap.quantile_of_value(probes)
+    assert snap.rank_of_value([2**64 - 1, 0]).tolist() == [[100, 1]]
 
 
 def test_merge_equals_direct_load():

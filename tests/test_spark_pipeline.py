@@ -414,6 +414,46 @@ def test_sql_udf_surface_over_sketch_columns(spark):
     assert two == click + view
 
 
+def test_sql_udfs_null_in_null_out(spark):
+    """Every sketch UDF answers NULL for a NULL sketch, q or probe, and a NaN
+    q is NULL too.  hg64_merge_pair passes a one-sided NULL through and
+    gives NULL for two.  An empty sketch is not NULL: its quantile is
+    UINT64_MAX (-1 as a long) and its mean 0.0."""
+    from hg64spark import udfs
+
+    udfs.register(spark)
+    full = HG64(5).add_values(np.array([3, 70, 900])).serialize()
+    empty = HG64(5).serialize()
+    rows = [
+        (0, None, 0.5, 10),
+        (1, bytearray(full), None, None),
+        (2, bytearray(full), float("nan"), 10),
+        (3, bytearray(empty), 0.5, 10),
+    ]
+    spark.createDataFrame(rows, "id int, sketch binary, q double, probe long").createOrReplaceTempView(
+        "udf_nulls"
+    )
+    got = {
+        r["id"]: r
+        for r in spark.sql(
+            "SELECT id, hg64_quantile(sketch, q) AS qv, hg64_rank(sketch, probe) AS rk, "
+            "hg64_population(sketch) AS pop, hg64_mean(sketch) AS mean, "
+            "hg64_merge_pair(sketch, CAST(NULL AS BINARY)) AS m_left, "
+            "hg64_merge_pair(CAST(NULL AS BINARY), sketch) AS m_right, "
+            "hg64_merge_pair(CAST(NULL AS BINARY), CAST(NULL AS BINARY)) AS m_none "
+            "FROM udf_nulls"
+        ).collect()
+    }
+    cols = ("qv", "rk", "pop", "mean", "m_left", "m_right", "m_none")
+    assert [got[0][c] for c in cols] == [None] * 7
+    assert (got[1]["qv"], got[1]["rk"], got[1]["pop"]) == (None, None, 3)
+    assert (got[2]["qv"], got[2]["rk"]) == (None, 1)
+    assert (got[3]["qv"], got[3]["rk"], got[3]["pop"], got[3]["mean"]) == (-1, 0, 0, 0.0)
+    for i, blob in ((1, full), (2, full), (3, empty)):
+        assert bytes(got[i]["m_left"]) == bytes(got[i]["m_right"]) == blob
+        assert got[i]["m_none"] is None
+
+
 def test_relational_path_rejects_negative_values(spark):
     """Regression: arithmetic shiftright would silently mis-bucket negatives
     into the top buckets; the relational path must fail the job like the
@@ -549,80 +589,12 @@ def test_relational_weighted_paths_reject_negative_weights(spark):
         ).collect()
 
 
-def test_fused_group_counts_match_unfused(spark):
-    """The fused single-column HashAggregate (group*nkeys + key) must be
-    EXACTLY the two-column groupBy: same rows for in-domain groups, NULL
-    groups preserved via their own fused slot, weighted sums identical, and
-    byte-identical sketch blobs through hg64_agg_relational."""
-    from hg64spark import relational
-
-    rows = [(i % 7, (i * 2654435761) % 10**9, (i % 5) + 1) for i in range(5000)]
-    rows += [(None, 12345, 2), (None, 99999, 3)]
-    df = spark.createDataFrame(rows, "g int, v long, w long")
-
-    def norm(out):  # set, not sorted: NULL group values don't order in py
-        return {(r["g"], r["hg64_key"], r["count"]) for r in out.collect()}
-
-    plain = norm(relational.hg64_counts(df, "v", ["g"], 5))
-    fused = norm(relational.hg64_counts(df, "v", ["g"], 5, fused_group_domain=8))
-    assert plain == fused
-    wp = norm(relational.hg64_counts(df, "v", ["g"], 5, weight_col="w"))
-    wf = norm(relational.hg64_counts(df, "v", ["g"], 5, weight_col="w", fused_group_domain=8))
-    assert wp == wf
-    # sketch blobs byte-equal through the full relational pipeline
-    a = {r["g"]: bytes(r["sketch"]) for r in relational.hg64_agg_relational(df, "v", ["g"], 5).collect()}
-    b = {
-        r["g"]: bytes(r["sketch"])
-        for r in relational.hg64_agg_relational(df, "v", ["g"], 5, fused_group_domain=8).collect()
-    }
-    assert a == b and len(a) == 8  # 7 int groups + NULL
-
-
-def test_fused_group_counts_reject_out_of_domain(spark):
-    """A group value outside the declared fused domain must FAIL the job
-    plan-side — silently aliasing into another group's slot would corrupt
-    counts undetectably."""
-    from hg64spark import relational
-
-    df = spark.createDataFrame([(9, 5)], "g int, v long")
-    with pytest.raises(Exception, match="fused_group_domain"):
-        relational.hg64_counts(df, "v", ["g"], 5, fused_group_domain=8).collect()
-    with pytest.raises(Exception, match="fused_group_domain"):
-        relational.hg64_counts(
-            spark.createDataFrame([(-1, 5)], "g int, v long"), "v", ["g"], 5, fused_group_domain=8
-        ).collect()
-    with pytest.raises(ValueError, match="exactly one group column"):
-        relational.hg64_counts(df, "v", ["g", "v"], 5, fused_group_domain=8)
-    # non-integral group columns must be rejected up front: a double would
-    # TRUNCATE through the cast (2.5 -> slot 2) and a string would cast to
-    # NULL and merge with genuine NULL groups — silent aliasing either way
-    with pytest.raises(ValueError, match="integral group column"):
-        relational.hg64_counts(
-            spark.createDataFrame([(2.5, 5)], "g double, v long"), "v", ["g"], 5,
-            fused_group_domain=8,
-        )
-    with pytest.raises(ValueError, match="integral group column"):
-        relational.hg64_counts(
-            spark.createDataFrame([("a", 5)], "g string, v long"), "v", ["g"], 5,
-            fused_group_domain=8,
-        )
-
-
 def test_relational_quantiles_reject_q_ge_1(spark):
     from hg64spark import relational
 
     df = spark.createDataFrame([(5,)], "v long")
     with pytest.raises(ValueError, match="0 <= q < 1"):
         relational.hg64_quantiles_relational(df, "v", [1.0], [], 5)
-
-
-def test_tree_aggregate_path_matches(spark):
-    """The literal treeAggregate global rollup (merged_load writ large,
-    test.c:125-157) must equal the relational and arrow paths exactly."""
-    base = _events_values(spark).repartition(7)
-    tree = agg.hg64_tree_agg(base, "v", 5, depth=2)
-    rel = _collect_sketch(agg.hg64_agg(base, "v", [], 5))
-    assert tree == rel
 
 
 def test_grouped_relational_fold_matches_arrow_agg(spark):
