@@ -62,12 +62,51 @@ def _group_schema(df: DataFrame, group_cols: Sequence[str]) -> list[StructField]
 _NAN = float("nan")
 
 
+def _utc_type(t: pa.DataType) -> pa.DataType:
+    """``t`` with every zoned timestamp in it, also inside a struct,
+    relabelled UTC: Spark hands timestamps over in the session time zone,
+    pyarrow turns a datetime zoned anywhere but UTC back into the wrong
+    instant, and ``applyInArrow`` takes timestamps back only as UTC; the
+    instants are the same."""
+    if pa.types.is_timestamp(t) and t.tz:
+        return pa.timestamp(t.unit, "UTC")
+    if pa.types.is_struct(t):
+        return pa.struct([f.with_type(_utc_type(f.type)) for f in t])
+    return t
+
+
+def _column_codes(col: pa.Array) -> tuple[list, np.ndarray]:
+    """One group column as ``(values, codes)``: row i's group value is the
+    hashable ``values[codes[i]]``, and the last value is None, the code of
+    NULL.  A struct's value is the tuple of its fields' values, coded from
+    its fields' codes, so a NULL struct and a struct of NULLs are two
+    groups, as in Spark's ``groupBy``."""
+    if pa.types.is_struct(col.type):
+        parts = [_column_codes(child) for child in col.flatten()]
+        combos, codes = np.unique(
+            np.stack([c for _, c in parts], axis=1), axis=0, return_inverse=True
+        )
+        d = [tuple(v[i] for (v, _), i in zip(parts, row)) for row in combos.tolist()]
+        codes = codes.reshape(-1).astype(np.int64)
+        if col.null_count:
+            codes[col.is_null().to_numpy(zero_copy_only=False)] = len(d)
+        return d + [None], codes
+    enc = col.dictionary_encode()
+    values = enc.dictionary
+    if _utc_type(values.type) != values.type:
+        values = values.cast(_utc_type(values.type))
+    d = values.to_pylist() + [None]  # last code = NULL
+    d = [_NAN if isinstance(v, float) and v != v else v for v in d]
+    return d, enc.indices.fill_null(len(d) - 1).to_numpy(zero_copy_only=False).astype(np.int64)
+
+
 def group_codes(
     rb: pa.RecordBatch, n_group_cols: int, _force_lexsort: bool = False
 ) -> tuple[list[tuple], np.ndarray, np.ndarray]:
     """Dense group codes for the first ``n_group_cols`` columns of an Arrow
     batch, made without per-row Python objects: dictionary-encode each
-    group column, fuse the codes into one mixed-radix int and sort once.
+    group column (:func:`_column_codes`), fuse the codes into one
+    mixed-radix int and sort once.
     Returns ``(keys, codes, order)``: one key tuple per group, each row's
     group code (an index into ``keys``, numbered in sorted order) and a
     stable argsort of ``codes``.  With no group columns every row is in
@@ -78,16 +117,7 @@ def group_codes(
     dicts: list[list] = []
     codes_list: list[np.ndarray] = []
     for i in range(n_group_cols):
-        enc = rb.column(i).dictionary_encode()
-        values = enc.dictionary
-        if pa.types.is_timestamp(values.type) and values.type.tz:
-            # Spark hands timestamps over in the session time zone, and
-            # pyarrow turns a datetime zoned anywhere but UTC back into the
-            # wrong instant; the same instants labelled UTC round-trip
-            values = values.cast(pa.timestamp(values.type.unit, "UTC"))
-        d = values.to_pylist() + [None]  # last code = NULL
-        d = [_NAN if isinstance(v, float) and v != v else v for v in d]
-        codes = enc.indices.fill_null(len(d) - 1).to_numpy(zero_copy_only=False).astype(np.int64)
+        d, codes = _column_codes(rb.column(i))
         dicts.append(d)
         codes_list.append(codes)
     # mixed-radix fuse only while the radix product fits in int64: with
@@ -288,16 +318,7 @@ def merge_sketches(
 
     def reduce_group(table: pa.Table) -> pa.Table:
         out = merge_table(table.select([*group_cols, "sketch"]), len(group_cols), deserialize)
-        # Spark hands a timestamp over in the session time zone and takes it
-        # back only as UTC; the instant is the same
-        return out.cast(
-            pa.schema(
-                f.with_type(pa.timestamp(f.type.unit, "UTC"))
-                if pa.types.is_timestamp(f.type) and f.type.tz
-                else f
-                for f in out.schema
-            )
-        )
+        return out.cast(pa.schema(f.with_type(_utc_type(f.type)) for f in out.schema))
 
     return grouped.groupBy(*keys).applyInArrow(reduce_group, out_schema)
 

@@ -49,14 +49,18 @@ def _spark_schema(pf: pq.ParquetFile) -> StructType:
     return from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
 
 
-def _arrow_type(dtype) -> pa.DataType | None:
-    """The Arrow type a column of Spark type ``dtype`` is read as, where the
-    parquet reader's own choice is not it (timestamps); else None."""
+def _arrow_type(dtype, read: pa.DataType) -> pa.DataType:
+    """The Arrow type a column of Spark type ``dtype`` is read as, given
+    the parquet reader's own choice ``read``: that choice, but with
+    timestamps, also inside a struct, made exact."""
     if isinstance(dtype, TimestampType):
         return pa.timestamp("us", tz="UTC")
     if isinstance(dtype, TimestampNTZType):
         return pa.timestamp("us")
-    return None
+    if isinstance(dtype, StructType) and pa.types.is_struct(read):
+        fields = [(f.dataType, read.field(f.name)) for f in dtype]
+        return pa.struct([rf.with_type(_arrow_type(dt, rf.type)) for dt, rf in fields])
+    return read
 
 
 def read(dirs: Sequence[str], columns: Sequence[str]) -> tuple[pa.Table, StructType]:
@@ -73,15 +77,15 @@ def read(dirs: Sequence[str], columns: Sequence[str]) -> tuple[pa.Table, StructT
     ]
     by_name = {f.name: f for f in _spark_schema(files[0])}
     schema = StructType([by_name[c] for c in columns])
-    casts = {f.name: t for f in schema if (t := _arrow_type(f.dataType)) is not None}
     tables = []
     for pf in files:
         t = pf.read(columns=list(columns))
-        for name, typ in casts.items():
+        for i, f in enumerate(t.schema):
             # naive -> UTC keeps the stored value: an INT96 timestamp, which
             # parquet hands over as naive, holds a UTC instant
-            i = t.schema.get_field_index(name)
-            t = t.set_column(i, name, t.column(i).cast(typ))
+            typ = _arrow_type(schema[f.name].dataType, f.type)
+            if typ != f.type:
+                t = t.set_column(i, f.name, t.column(i).cast(typ))
         tables.append(t.replace_schema_metadata(None))
     return pa.concat_tables(tables, promote_options="default"), schema
 

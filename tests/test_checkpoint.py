@@ -219,3 +219,20 @@ def test_driver_merge_keeps_timestamp_groups(spark, tmp_path, timestamp_group_fi
     assert got_rows == _by_group(want.collect(), groups)
     source = spark.read.parquet(*timestamp_group_files).select(*groups).distinct().collect()
     assert set(got_rows) == {tuple(r) for r in source} and len(got_rows) == 5
+
+
+def test_window_group_column_result(spark, tmp_path, timestamp_group_files):
+    """A ``F.window`` struct group column added by ``derive`` survives the
+    committed runs and result() under a non-UTC session time zone, with the
+    blobs of the same groups as flat (start, end) columns."""
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", ["w"])
+    derive = lambda d: d.withColumn("w", F.window("g_ts", "1 hour"))  # noqa: E731
+    ck.process(spark, timestamp_group_files[:1], derive=derive)
+    ck.process(spark, timestamp_group_files, derive=derive)
+    got = {(r["w"]["start"], r["w"]["end"]): bytes(r["sketch"]) for r in ck.result(spark).collect()}
+    flat = derive(spark.read.parquet(*timestamp_group_files)).select("w.start", "w.end", "v")
+    want = {
+        (r["start"], r["end"]): bytes(r["sketch"])
+        for r in agg.hg64_agg(flat, "v", ["start", "end"]).collect()
+    }
+    assert got == want and len(want) == 3

@@ -1369,3 +1369,98 @@ def test_hg64_calibrate_bit_parity_and_plan(spark):
     )
     streamed = plan.split("BroadcastExchange")[0]
     assert "Exchange hashpartitioning" not in streamed, plan
+
+
+def test_struct_group_codes_null_struct_is_its_own_group():
+    """``agg.group_codes`` codes a struct column from its fields: a NULL
+    struct, a struct of NULLs and a struct with a NaN field are three
+    groups, every NaN field is one value, and a zoned timestamp field comes
+    back relabelled UTC at the same instant."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    ts = pa.timestamp("us", "America/Los_Angeles")
+    t0 = dt.datetime(2024, 7, 1, 12, tzinfo=dt.timezone.utc)
+    s = pa.array(
+        [
+            {"t": t0, "x": 1.0},
+            None,
+            {"t": None, "x": None},
+            {"t": t0, "x": float("nan")},
+            {"t": t0, "x": 1.0},
+            None,
+            {"t": t0, "x": float("nan")},
+        ],
+        pa.struct([("t", ts), ("x", pa.float64())]),
+    )
+    rb = pa.RecordBatch.from_arrays([s, pa.array([7] * len(s))], names=["s", "v"])
+    keys, codes, _ = agg.group_codes(rb, 1)
+    assert len(keys) == 4
+    assert codes[0] == codes[4] and codes[1] == codes[5] and codes[3] == codes[6]
+    assert len({codes[0], codes[1], codes[2], codes[3]}) == 4
+    by_code = {int(codes[i]): keys[codes[i]][0] for i in range(len(s))}
+    assert by_code[int(codes[0])] == (t0, 1.0) and by_code[int(codes[1])] is None
+    assert by_code[int(codes[2])] == (None, None)
+    nan_key = by_code[int(codes[3])]
+    assert nan_key[0] == t0 and nan_key[1] != nan_key[1]
+    assert by_code[int(codes[0])][0].utcoffset() == dt.timedelta(0)
+
+
+def _window_frames(spark, files):
+    """The fixture rows with a 1-hour ``F.window`` struct column ``w``, and
+    the same groups as flat ``start`` / ``end`` columns."""
+    df = spark.read.parquet(*files).withColumn("w", F.window("g_ts", "1 hour"))
+    flat = df.select(F.col("w.start").alias("start"), F.col("w.end").alias("end"), "v")
+    return df, flat
+
+
+def test_window_group_column_through_every_python_fold(spark, timestamp_group_files):
+    """A ``F.window`` struct group column, and a struct with NULL rows,
+    goes through ``sketch_partials`` -> ``merge_sketches`` ->
+    ``hg64_quantiles`` and both ``hg64_agg`` tiers under a non-UTC session
+    time zone, with the blobs and answers of the same groups as flat
+    columns."""
+    df, flat = _window_frames(spark, timestamp_group_files)
+
+    def by_window(rows):
+        return {(r["w"]["start"], r["w"]["end"]): bytes(r["sketch"]) for r in rows}
+
+    want = {
+        (r["start"], r["end"]): bytes(r["sketch"])
+        for r in agg.hg64_agg(flat, "v", ["start", "end"], method="arrow").collect()
+    }
+    assert len(want) == 3  # the NULL timestamps drop out of F.window
+    merged = agg.merge_sketches(agg.sketch_partials(df, "v", ["w"], HG64), ["w"], HG64.deserialize)
+    assert by_window(merged.collect()) == want
+    assert by_window(agg.hg64_agg(df, "v", ["w"]).collect()) == want
+    assert by_window(agg.hg64_agg(df, "v", ["w"], method="arrow").collect()) == want
+    qs = [0.5, 0.9]
+    got_q = {
+        (r["w"]["start"], r["q"]): r["value"]
+        for r in agg.hg64_quantiles(merged, ["w"], qs).collect()
+    }
+    flat_q = agg.hg64_quantiles(agg.hg64_agg(flat, "v", ["start", "end"]), ["start", "end"], qs)
+    assert got_q == {(r["start"], r["q"]): r["value"] for r in flat_q.collect()}
+
+    # a struct that is NULL on every third row; its fields can be NULL too
+    df = spark.read.parquet(*timestamp_group_files).withColumn(
+        "s",
+        F.when(F.col("v") % 3 == 0, F.lit(None)).otherwise(
+            F.struct(F.col("g_ts").alias("a"), F.col("g_ntz").alias("b"))
+        ),
+    )
+    flat = df.select(
+        F.col("s").isNull().alias("s_null"), F.col("s.a").alias("a"), F.col("s.b").alias("b"), "v"
+    )
+    want_s = {
+        (None if r["s_null"] else (r["a"], r["b"])): bytes(r["sketch"])
+        for r in agg.hg64_agg(flat, "v", ["s_null", "a", "b"], method="arrow").collect()
+    }
+    assert None in want_s and (None, None) in want_s and len(want_s) == 6
+    for method in ("relational", "arrow"):
+        got_s = {
+            (None if r["s"] is None else (r["s"]["a"], r["s"]["b"])): bytes(r["sketch"])
+            for r in agg.hg64_agg(df, "v", ["s"], method=method).collect()
+        }
+        assert got_s == want_s, method

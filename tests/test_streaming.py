@@ -470,3 +470,25 @@ def test_compaction_crash_before_commit_keeps_result(spark, tmp_path, source, mo
     ss.compact(spark)
     assert len(ss._batch_dirs()) == 1
     assert _rows(ss.result(spark)) == want
+
+
+def test_window_group_column_result(spark, tmp_path, timestamp_group_files):
+    """A ``F.window`` struct group column survives micro-batch partials, a
+    driver-written compaction and result() under a non-UTC session time
+    zone, with the blobs of the same groups as flat (start, end) columns."""
+    parts = [
+        spark.read.parquet(f).withColumn("w", F.window("g_ts", "1 hour"))
+        for f in timestamp_group_files
+    ]
+    ss = StreamingSketch(str(tmp_path / "state"), "v", ["w"])
+    ss.foreach_batch(parts[0], 0)
+    ss.foreach_batch(parts[1], 1)
+    ss.compact(spark)
+    ss.foreach_batch(parts[0], 2)
+    got = {(r["w"]["start"], r["w"]["end"]): bytes(r["sketch"]) for r in ss.result(spark).collect()}
+    flat = parts[0].unionAll(parts[1]).unionAll(parts[0]).select("w.start", "w.end", "v")
+    want = {
+        (r["start"], r["end"]): bytes(r["sketch"])
+        for r in agg.hg64_agg(flat, "v", ["start", "end"]).collect()
+    }
+    assert got == want and len(want) == 3
