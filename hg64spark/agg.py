@@ -323,6 +323,20 @@ def merge_sketches(
     return grouped.groupBy(*keys).applyInArrow(reduce_group, out_schema)
 
 
+def _positive_zero(col: pa.Array) -> pa.Array:
+    """``col`` with every -0.0 in it, also in a struct field at any depth,
+    made the 0.0 Spark's ``groupBy`` keys it as."""
+    if pa.types.is_floating(col.type):
+        return pc.add(col, pa.scalar(0.0, col.type))  # -0.0 + 0.0 is 0.0
+    if pa.types.is_struct(col.type):
+        return pa.StructArray.from_arrays(
+            [_positive_zero(c) for c in col.flatten()],
+            fields=list(col.type),
+            mask=col.is_null() if col.null_count else None,
+        )
+    return col
+
+
 def merge_table(
     partials: pa.Table, n_group_cols: int, deserialize: Callable[[bytes], object]
 ) -> pa.Table:
@@ -350,11 +364,9 @@ def merge_table(
         members.extend(blobs[i] for i in idx.tolist())
     # a group's key columns are taken (``take``) from its first row, which is
     # exact for every type, not rebuilt from the Python key values
-    arrays = []
-    for col in rb.take(pa.array(first, pa.int64())).columns[:n_group_cols]:
-        if pa.types.is_floating(col.type):
-            col = pc.add(col, pa.scalar(0.0, col.type))  # -0.0 + 0.0 is Spark's 0.0
-        arrays.append(col)
+    arrays = [
+        _positive_zero(c) for c in rb.take(pa.array(first, pa.int64())).columns[:n_group_cols]
+    ]
     arrays.append(
         pa.array(
             [merge_blobs(b, deserialize) for b in groups.values()],

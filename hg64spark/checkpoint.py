@@ -7,26 +7,32 @@ The unit of work is an *input file* (locally a parquet part-file; on a real
 cluster an Iceberg partition/data file — same mechanics, different listing).
 Each ``process()`` call:
 
-  1. lists the files already covered by a successfully committed prior run
-     (a run directory is trusted only if Spark wrote its ``_SUCCESS`` marker —
-     a killed job's partial output is invisible to resume);
+  1. lists the files already covered by a committed prior run (a run
+     directory is trusted only if its ``_SUCCESS`` marker exists, and
+     ``_SUCCESS`` is written after the run's data file — a killed job's
+     partial output is invisible to resume);
   2. builds partial sketches ONLY for the remaining files, tagging every
-     partial with its source file (`input_file_name()`), row count, ns/row
-     ingest rate and sketch size — the lineage/metrics row, mirroring the
-     reference harness's per-thread timing output
-     (`/root/reference/test.c:117-121`);
-  3. appends them under a fresh ``run=<id>`` subdirectory of the checkpoint.
+     partial with its source file, row count, ns/row ingest rate and sketch
+     size — the lineage/metrics row, mirroring the reference harness's
+     per-thread timing output (``test.c:117-121`` of the reference);
+  3. collects those partials to the driver with ``toArrow()``, adds one
+     marker row per file, and commits them as one parquet file under a
+     fresh ``run=<id>`` subdirectory (``statefiles.write_committed``) — no
+     Spark write job.  A run holds at most files x groups blobs, which is
+     what ``result()`` loads on the driver anyway, so the collect adds no
+     new memory ceiling.
 
 State reads happen on the driver (``statefiles``): ``done_files`` reads
 the lineage column of every committed run's files with ``pyarrow``, and
-``result()`` reads the committed partials, merges each group with
-``agg.merge_blobs`` and returns a ``LocalTableScan`` frame — no Spark job
-and no Python worker task.  The cost of a read is O(committed state bytes)
-on the driver: partials are tiny (KBs per file x group) regardless of how
-many TB produced them, but this log has no compaction yet, so it grows with
-the number of runs (``StreamingSketch.compact`` is what bounds the streaming
-log).  Because the merge is exactly associative+commutative, re-merging
-partials from any mix of runs is identical to a single-shot job.
+``result()`` and ``metrics()`` read the committed partials (``result()``
+merges each group with ``agg.merge_blobs``) and return a
+``LocalTableScan`` frame — no Spark job and no Python worker task.  The
+cost of a read is O(committed state bytes) on the driver: partials are
+tiny (KBs per file x group) regardless of how many TB produced them, but
+this log has no compaction yet, so it grows with the number of runs
+(``StreamingSketch.compact`` is what bounds the streaming log).  Because
+the merge is exactly associative+commutative, re-merging partials from any
+mix of runs is identical to a single-shot job.
 
 NOTE file-level resume assumes the value derivation is file-local (a
 conversation does not span files) — the standard Iceberg layout for
@@ -43,6 +49,7 @@ from urllib.parse import unquote, urlparse
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructField, StructType
 
 from hg64spark import agg, statefiles
 from hg64spark.hg64 import HG64
@@ -107,8 +114,10 @@ class CheckpointedSketchAgg:
         files: Sequence[str],
         derive: Callable[[DataFrame], DataFrame] | None = None,
     ) -> list[str]:
-        """Build partials for files not yet checkpointed; returns the list of
-        files actually processed this call (empty on a fully-resumed job).
+        """Build partials for files not yet checkpointed and commit them as
+        one run (module docstring); returns the list of files actually
+        processed this call (empty on a fully-resumed job).  The input
+        schema is inferred once per call, over the unprocessed files.
 
         ``derive`` maps the raw file DataFrame to one carrying ``value_col``
         and the group columns (e.g. transcript -> latency derivation)."""
@@ -116,6 +125,9 @@ class CheckpointedSketchAgg:
         todo = [f for f in files if os.path.abspath(f) not in done]
         if not todo:
             return []
+        # one schema inference for the call: a read without a schema runs a
+        # Spark job per file to infer it
+        schema = spark.read.parquet(*todo).schema
         # derive PER FILE, then union: (a) a shuffling derive (window lag,
         # per-conv groupBy) stays file-local by construction — exactly the
         # file-local assumption this resume granularity needs — and (b) the
@@ -123,7 +135,7 @@ class CheckpointedSketchAgg:
         # empty after a derive's exchange
         per_file = []
         for f in todo:
-            d = spark.read.parquet(f)
+            d = spark.read.schema(schema).parquet(f)
             if derive is not None:
                 d = derive(d)
             per_file.append(
@@ -136,40 +148,40 @@ class CheckpointedSketchAgg:
             df = df.unionAll(d)
         partials = agg.sketch_partials(
             df, self.value_col, self.group_cols + [_FILE_COL], self.make_sketch, with_metrics=True
-        ).withColumn(_MARKER_COL, F.lit(False))
-        markers = self._markers(spark, todo, dict(df.dtypes))
-        cols = partials.columns
-        run_dir = os.path.join(self.ckpt_dir, f"run={uuid.uuid4().hex[:12]}")
-        partials.unionByName(markers.select(*cols)).write.mode("overwrite").parquet(run_dir)
+        ).toArrow()
+        partials = partials.append_column(
+            _MARKER_COL, pa.array([False] * partials.num_rows, pa.bool_())
+        )
+        table = pa.concat_tables(
+            [partials, self._marker_rows(todo, partials.schema)], promote_options="default"
+        )
+        statefiles.write_committed(
+            os.path.join(self.ckpt_dir, f"run={uuid.uuid4().hex[:12]}"), table
+        )
         return [os.path.abspath(f) for f in todo]
 
-    def _markers(self, spark: SparkSession, files: Sequence[str], dtypes: dict) -> DataFrame:
+    def _marker_rows(self, files: Sequence[str], schema: pa.Schema) -> pa.Table:
         """One marker row per file, so files contributing ZERO rows (empty or
         fully-filtered) are still recorded as done; the empty sketch is the
-        merge identity and result() drops markers anyway.  An Arrow-backed
-        local frame: a ``LocalTableScan``, where ``createDataFrame`` over a
-        Python list would be a pickled-RDD scan costing Python worker tasks
-        on every write."""
+        merge identity and result() drops markers anyway.  Group columns are
+        NULL, typed as in the partials' ``schema``."""
         n = len(files)
         empty_blob = self.make_sketch().serialize()
-        table = pa.table(
-            {
-                _FILE_COL: [os.path.abspath(f) for f in files],
-                "sketch": pa.array([empty_blob] * n, pa.binary()),
-                "m_rows": pa.array([0] * n, pa.int64()),
-                "m_ns_per_row": pa.array([0.0] * n, pa.float64()),
-                "m_sketch_bytes": pa.array([len(empty_blob)] * n, pa.int64()),
-                _MARKER_COL: pa.array([True] * n, pa.bool_()),
-            }
+        values = {
+            _FILE_COL: [os.path.abspath(f) for f in files],
+            "sketch": [empty_blob] * n,
+            "m_rows": [0] * n,
+            "m_ns_per_row": [0.0] * n,
+            "m_sketch_bytes": [len(empty_blob)] * n,
+            _MARKER_COL: [True] * n,
+        }
+        return pa.table(
+            [
+                pa.array(values[f.name], f.type) if f.name in values else pa.nulls(n, f.type)
+                for f in schema
+            ],
+            names=schema.names,
         )
-        markers = spark.createDataFrame(
-            table,
-            f"{_FILE_COL} string, sketch binary, m_rows long, m_ns_per_row double, "
-            f"m_sketch_bytes long, {_MARKER_COL} boolean",
-        )
-        for c in self.group_cols:
-            markers = markers.withColumn(c, F.lit(None).cast(dtypes[c]))
-        return markers
 
     # ----------------------------------------------------------------- reads
 
@@ -185,8 +197,11 @@ class CheckpointedSketchAgg:
 
     def metrics(self, spark: SparkSession) -> DataFrame:
         """Per-partial lineage: (lineage_file, group..., m_rows, m_ns_per_row,
-        m_sketch_bytes), as a Spark read of the committed runs."""
-        partials = spark.read.parquet(*self._runs_or_raise())
-        return partials.filter(~F.col(_MARKER_COL)).select(
-            _FILE_COL, *self.group_cols, "m_rows", "m_ns_per_row", "m_sketch_bytes"
+        m_sketch_bytes), read on the driver like ``result()`` and returned
+        as a ``LocalTableScan`` frame with every column nullable."""
+        cols = [_FILE_COL, *self.group_cols, "m_rows", "m_ns_per_row", "m_sketch_bytes"]
+        table, schema = statefiles.read(self._runs_or_raise(), [*cols, _MARKER_COL])
+        table = table.filter(pc.invert(table.column(_MARKER_COL))).select(cols)
+        return spark.createDataFrame(
+            table, StructType([StructField(f.name, f.dataType, True) for f in schema[:-1]])
         )

@@ -2,23 +2,29 @@
 
 ``CheckpointedSketchAgg`` and ``StreamingSketch`` keep their state as small
 parquet files of serialized partial sketches under directories they commit
-themselves (``_SUCCESS`` markers, an atomic manifest).  Which directories
-count is decided on the driver with ``os.listdir``; this module reads the
-chosen directories' files on the driver too, with ``pyarrow.parquet``, so
-answering from state launches no Spark job and no Python worker task.  The
-merged answer goes back to Spark as ``spark.createDataFrame`` over an Arrow
-table, which plans as a ``LocalTableScan``.
+themselves (``_SUCCESS`` markers, an atomic manifest).  Both write those
+files here, on the driver: ``process()`` and ``foreach_batch`` collect their
+partials with ``toArrow()`` and ``compact()`` merges them, and each hands
+the table to ``write_committed`` — one parquet file, then ``_SUCCESS`` — so
+no Spark write job runs.  Which directories count is decided on the driver
+with ``os.listdir``; this module reads the chosen directories' files on the
+driver too, with ``pyarrow.parquet``, so answering from state launches no
+Spark job and no Python worker task.  The merged answer goes back to Spark
+as ``spark.createDataFrame`` over an Arrow table, which plans as a
+``LocalTableScan``.
 
 Column types are Spark's, not Spark's mapping of the Arrow types: parquet
 hands an INT96 timestamp (Spark's default for ``TimestampType``) to Arrow
 as a naive timestamp, which ``createDataFrame`` would localize to the
 session time zone and ``from_arrow_type`` would take for either timestamp
-kind.  A Spark-written file names its types in its footer
-(``_SPARK_SCHEMA_KEY``); a file ``write_committed`` wrote needs no such
-key, because its parquet types are exact (UTC-adjusted INT64 for
-``TimestampType``, unadjusted for ``TimestampNTZType``), and pyarrow can
-only write the key together with a copy of the Arrow schema that would
-grow every compacted file by most of a kilobyte.
+kind.  A file Spark's writer wrote (state from before the driver-side
+writes) names its types in its footer (``_SPARK_SCHEMA_KEY``); a file
+``write_committed`` wrote has no footer schema and takes its types from
+its parquet types, which are exact (UTC-adjusted INT64 for
+``TimestampType``, unadjusted for ``TimestampNTZType``): pyarrow can only
+write the key together with a copy of the Arrow schema that would grow
+every state file by most of a kilobyte.  Both kinds of file can sit in one
+state directory.
 """
 
 from __future__ import annotations
@@ -103,13 +109,16 @@ def to_frame(spark: SparkSession, table: pa.Table, schema: StructType) -> DataFr
 
 
 def write_committed(out_dir: str, table: pa.Table) -> None:
-    """Write a ``read`` table as one parquet file under ``out_dir``, then
-    mark the directory committed with ``_SUCCESS``.  Column statistics are
-    kept for the group columns only: the min/max of the sketch column would
-    copy whole blobs into the footer."""
+    """Write a state table (a ``read`` table, or partials collected with
+    ``toArrow()``) as one parquet file under ``out_dir``, then mark the
+    directory committed with ``_SUCCESS``: a crash between the two leaves
+    the directory invisible.  Every column is written nullable, as Spark's
+    writer writes them.  Column statistics are kept for the non-sketch
+    columns only: the min/max of the sketch column would copy whole blobs
+    into the footer."""
     os.makedirs(out_dir, exist_ok=True)
     pq.write_table(
-        table,
+        table.cast(pa.schema([f.with_nullable(True) for f in table.schema])),
         os.path.join(out_dir, "part-00000.parquet"),
         write_statistics=[c for c in table.column_names if c != "sketch"],
         store_schema=False,

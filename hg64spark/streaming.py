@@ -6,18 +6,24 @@ micro-batch plus an idempotent state store:
 
     readStream -> foreachBatch:
         stage 1 partials for the micro-batch (same mapInArrow kernel as batch)
-        written to  <state_dir>/batch=<batch_id>/   (overwrite by batch id ->
-        re-delivered batches after a failure land in the same directory:
+        collected to the driver with ``toArrow()`` and committed as one
+        parquet file under  <state_dir>/batch=<batch_id>/  (old directory
+        removed first, its ``_SUCCESS`` before anything else -> a
+        re-delivered batch after a failure replaces the same directory:
         exactly-once state, the streaming analogue of checkpoint.py's
         _SUCCESS-gated runs)
     result(): merge every committed batch's partials — valid at ANY moment
         between micro-batches, because the merge is exactly associative and
         commutative (a sketch never has to be "finalized" to be read).
 
-State reads happen on the driver (``statefiles``): ``result()`` and
-``compact()`` read the committed partial files with ``pyarrow``, merge each
-group with ``agg.merge_blobs``, and return a ``LocalTableScan`` frame or
-write one merged file — no Spark job and no Python worker task.
+State writes and reads happen on the driver (``statefiles``): a
+micro-batch's partials are at most #partitions x #groups blobs, so
+collecting them adds no shuffle, no Spark write job and no new memory
+ceiling (``result()`` loads all committed partials on the driver anyway).
+``result()`` and ``compact()`` read the committed partial files with
+``pyarrow``, merge each group with ``agg.merge_blobs``, and return a
+``LocalTableScan`` frame or write one merged file — no Spark job and no
+Python worker task.
 
 Scale notes: the per-batch work is the batch hot path (no per-row Python);
 state size is (#groups x #batches) tiny sketch blobs, and the cost of
@@ -29,7 +35,9 @@ window column to ``group_cols``.
 
 from __future__ import annotations
 
+import contextlib
 import os
+import shutil
 from collections.abc import Callable, Sequence
 
 import pyarrow as pa
@@ -178,26 +186,25 @@ class StreamingSketch:
 
     def foreach_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """The foreachBatch sink: stage-1 partials for this micro-batch,
-        overwritten idempotently under the batch id."""
+        collected to the driver (at most #partitions x #groups blobs) and
+        committed under the batch id, replacing a re-delivered batch's old
+        directory."""
         if f"batch={batch_id}" in self._manifest()["consumed"]:
             raise RuntimeError(
                 f"batch={batch_id} was already folded by a compaction — the state dir "
                 f"{self.state_dir} belongs to a different streaming checkpoint lineage"
             )
-        partials = agg.sketch_partials(batch_df, self.value_col, self.group_cols, self.make_sketch)
-        # repartition(1) BEFORE the write: the partial frame is tiny by
-        # construction (<= #partitions x #groups sketch blobs), but it
-        # inherits the input's partitioning, so writing it directly emits one
-        # near-empty parquet file + task commit per input split (64 at the
-        # bench; thousands at scale) every micro-batch — the small-files
-        # anti-pattern of guide §6.  The explicit shuffle (NOT coalesce,
-        # which would collapse the upstream partial computation into one
-        # task) moves only the serialized sketches and makes each batch one
-        # well-formed file; partial content and the canonical merge order
-        # downstream are unchanged.
-        partials.repartition(1).write.mode("overwrite").parquet(
-            os.path.join(self.state_dir, f"batch={batch_id}")
-        )
+        partials = agg.sketch_partials(
+            batch_df, self.value_col, self.group_cols, self.make_sketch
+        ).toArrow()
+        out_dir = os.path.join(self.state_dir, f"batch={batch_id}")
+        if os.path.isdir(out_dir):
+            # un-commit first: a crash while the old files go leaves the
+            # batch invisible until Spark re-delivers it, never half-replaced
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(os.path.join(out_dir, "_SUCCESS"))
+            shutil.rmtree(out_dir)
+        statefiles.write_committed(out_dir, partials)
 
     def start(
         self,
@@ -273,7 +280,6 @@ class StreamingSketch:
         nothing (consumed dirs are tombstoned even though their bytes still
         exist); deletion of tombstoned dirs is lazy cleanup."""
         import json
-        import shutil
         import uuid
 
         dirs = self._batch_dirs()

@@ -115,25 +115,114 @@ def test_lineage_survives_shuffling_derive(spark, tmp_path, split_files):
 
 
 def test_state_reads_launch_no_spark_job(spark, tmp_path, split_files, spark_jobs):
-    """done_files and result() read committed state on the driver; the
-    marker rows process() writes are a local relation, not a Python RDD."""
+    """done_files, result() and metrics() read committed state on the
+    driver; a committed run is one data file plus _SUCCESS, and process()
+    infers its input schema once per call, not once per file."""
     ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", ["event_type"])
     ck.process(spark, split_files[:2])
     ck.process(spark, split_files[2:])
     with spark_jobs() as ids:
         done = ck.done_files(spark)
         rows = ck.result(spark).collect()
+        lineage = ck.metrics(spark)
+        lineage_rows = lineage.collect()
     assert ids == []
-    assert done == {os.path.abspath(f) for f in split_files} and rows
+    assert done == {os.path.abspath(f) for f in split_files} and rows and lineage_rows
     with spark_jobs() as control:  # the probe sees jobs when there are some
         spark.read.parquet(*split_files).count()
     assert control
+    runs = ck._committed_runs()
+    assert len(runs) == 2
+    assert all(sorted(os.listdir(r)) == ["_SUCCESS", "part-00000.parquet"] for r in runs)
+    spark_read = (
+        spark.read.parquet(*runs)
+        .filter(~F.col("is_marker"))
+        .select("lineage_file", "event_type", "m_rows", "m_ns_per_row", "m_sketch_bytes")
+    )
+    assert lineage.schema == spark_read.schema
+    assert sorted(lineage_rows) == sorted(spark_read.collect())
 
-    markers = ck._markers(spark, split_files, {"event_type": "string"})
-    plan = markers._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" in plan
-    assert "ExistingRDD" not in plan and "PythonRDD" not in plan
-    assert markers.count() == len(split_files)
+    jobs = []
+    for name, files in (("one", split_files[:1]), ("four", split_files)):
+        fresh = CheckpointedSketchAgg(str(tmp_path / name), "v", ["event_type"])
+        with spark_jobs() as ids:
+            fresh.process(spark, files)
+        jobs.append(len(ids))
+    assert jobs[0] == jobs[1] and jobs[0] > 0
+
+
+class _Killed(Exception):
+    pass
+
+
+def test_process_killed_before_success_replays_its_files(spark, tmp_path, split_files, monkeypatch):
+    """process() killed after its data file is written but before _SUCCESS:
+    the run is invisible to done_files and result(), and the next process()
+    replays exactly that run's files."""
+    import pyarrow.parquet as pq
+
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", ["event_type"])
+    ck.process(spark, split_files[:2])
+    want = {r["event_type"]: bytes(r["sketch"]) for r in ck.result(spark).collect()}
+    real_write = pq.write_table
+
+    def write_then_die(*a, **kw):
+        real_write(*a, **kw)
+        raise _Killed
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", write_then_die)
+        with pytest.raises(_Killed):
+            ck.process(spark, split_files)
+    (killed,) = {d for d in os.listdir(tmp_path / "ckpt") if d.startswith("run=")} - {
+        os.path.basename(r) for r in ck._committed_runs()
+    }
+    assert os.listdir(tmp_path / "ckpt" / killed) == ["part-00000.parquet"]
+    assert ck.done_files(spark) == {os.path.abspath(f) for f in split_files[:2]}
+    assert {r["event_type"]: bytes(r["sketch"]) for r in ck.result(spark).collect()} == want
+
+    replayed = ck.process(spark, split_files)
+    assert replayed == [os.path.abspath(f) for f in split_files[2:]]
+    got = {r["event_type"]: bytes(r["sketch"]) for r in ck.result(spark).collect()}
+    direct = agg.hg64_agg(spark.read.parquet(*split_files), "v", ["event_type"], 5)
+    assert got == {r["event_type"]: bytes(r["sketch"]) for r in direct.collect()}
+
+
+@pytest.mark.parametrize(
+    "fixture, groups",
+    [("mixed_group_files", ["g_long", "g_dbl"]), ("timestamp_group_files", ["g_ts", "g_ntz"])],
+)
+def test_spark_written_run_mixes_with_driver_written_runs(
+    spark, tmp_path, request, fixture, groups
+):
+    """A run Spark's parquet writer committed (the state format before
+    process() wrote on the driver: many part files, footer schema) and
+    driver-written runs in one checkpoint: done_files counts the old run,
+    and result() is byte- and schema-equal to agg.merge_sketches over all
+    committed partials, under a non-UTC session time zone for timestamps."""
+    files = request.getfixturevalue(fixture)
+    ck = CheckpointedSketchAgg(str(tmp_path / "ckpt"), "v", groups)
+    old = spark.read.parquet(files[0]).select(*groups, "v").withColumn(
+        "lineage_file", F.lit(os.path.abspath(files[0]))
+    )
+    # "legacy" sorts after every hex run id, so a driver-written file's
+    # schema is the one statefiles.read starts from
+    agg.sketch_partials(old, "v", [*groups, "lineage_file"], HG64, with_metrics=True).withColumn(
+        "is_marker", F.lit(False)
+    ).repartition(3).write.parquet(str(tmp_path / "ckpt" / "run=legacy"))
+    ck.process(spark, files[1:2])
+    assert ck.process(spark, files) == [os.path.abspath(f) for f in files[2:]]
+    assert ck.done_files(spark) == {os.path.abspath(f) for f in files}
+    runs = ck._committed_runs()
+    assert runs[-1].endswith("run=legacy") and len(runs) == len(files)
+    got = ck.result(spark)
+    partials = spark.read.parquet(*runs).filter(~F.col("is_marker")).select(*groups, "sketch")
+    want = agg.merge_sketches(partials, groups, HG64.deserialize)
+    assert got.schema == want.schema
+    got_rows = _by_group(got.collect(), groups)
+    assert got_rows == _by_group(want.collect(), groups)
+    source = spark.read.parquet(*files).select(*groups).distinct().collect()
+    assert len(got_rows) == len(source)
 
 
 def test_result_ignores_uncommitted_run(spark, tmp_path, split_files):

@@ -530,6 +530,52 @@ def test_merge_joins_nan_group_keys_of_any_payload(spark):
     assert keyed((r["g"], r["sketch"]) for r in spark_rows) == want
 
 
+@pytest.mark.parametrize("zeros", [(-0.0, 0.0), (0.0, -0.0)])
+def test_merge_keys_signed_zero_inside_struct_as_spark_does(spark, zeros):
+    """-0.0 and 0.0 in a struct field, at any depth, are one group keyed
+    0.0, as in Spark's groupBy — on the driver (merge_table) and in
+    merge_sketches, whichever row comes first."""
+    import math
+
+    import pyarrow as pa
+
+    typ = pa.struct([("x", pa.float64()), ("s", pa.struct([("y", pa.float32())]))])
+    keys = [{"x": z, "s": {"y": z}} for z in zeros] + [None, {"x": 1.0, "s": None}]
+    blobs = [HG64().add_values(np.array([i * 100 + 1])).serialize() for i in range(len(keys))]
+    table = pa.table({"g": pa.array(keys, typ), "sketch": pa.array(blobs, pa.binary())})
+    zero = {"x": 0.0, "s": {"y": 0.0}}
+    want = [
+        (zero, agg.merge_blobs(blobs[:2], HG64.deserialize)),
+        (None, blobs[2]),
+        ({"x": 1.0, "s": None}, blobs[3]),
+    ]
+
+    def signed(g):
+        # 0.0 == -0.0, so compare every key float together with its sign
+        if isinstance(g, dict):
+            return {k: signed(v) for k, v in g.items()}
+        return None if g is None else (g, math.copysign(1.0, g))
+
+    def keyed(rows):
+        return sorted(((signed(g), bytes(b)) for g, b in rows), key=repr)
+
+    merged = agg.merge_table(table, 1, HG64.deserialize)
+    assert merged.schema == table.schema
+    got = zip(merged.column("g").to_pylist(), merged.column("sketch").to_pylist())
+    assert keyed(got) == keyed(want)
+    frame = spark.range(1).coalesce(1).mapInArrow(
+        lambda it: (b for _ in it for b in table.to_batches()),
+        "g struct<x: double, s: struct<y: float>>, sketch binary",
+    )
+    spark_keys = [r["g"].asDict(recursive=True) for r in frame.groupBy("g").count().collect()
+                  if r["g"] is not None]
+    assert {"x": 0.0, "s": {"y": 0.0}} in spark_keys and len(spark_keys) == 2
+    assert all(math.copysign(1.0, k["x"]) > 0 for k in spark_keys)
+    rows = agg.merge_sketches(frame, ["g"], HG64.deserialize).collect()
+    got = [(r["g"] and r["g"].asDict(recursive=True), r["sketch"]) for r in rows]
+    assert keyed(got) == keyed(want)
+
+
 def test_mg_relational_byte_equals_one_batch_fold(spark):
     """The relational Misra-Gries build must be BYTE-equal to the Python
     sketch folding the same data as a single batch (both are 'subtract the

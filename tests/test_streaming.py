@@ -492,3 +492,78 @@ def test_window_group_column_result(spark, tmp_path, timestamp_group_files):
         for r in agg.hg64_agg(flat, "v", ["start", "end"]).collect()
     }
     assert got == want and len(want) == 3
+
+
+def _nan_keyed(df, group_cols):
+    # NaN != NaN, so key NaN groups by a stand-in to compare two answers
+    return {
+        tuple("NaN" if isinstance(k, float) and k != k else k for k in key): blob
+        for key, blob in _rows(df, group_cols).items()
+    }
+
+
+def test_redelivered_batch_replaces_its_partials(spark, tmp_path, mixed_group_files, monkeypatch):
+    """foreach_batch re-delivered for a batch id with different content
+    (after a crash mid-rewrite, or over a Spark-written batch of the older
+    state format): only the last content counts, and a rewrite killed
+    before its _SUCCESS leaves the batch invisible."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    groups = ["g_long", "g_dbl"]
+    ss = StreamingSketch(str(tmp_path / "state"), "v", groups)
+    parts = [spark.read.parquet(f) for f in mixed_group_files]
+    ss.foreach_batch(parts[0], 0)
+    agg.sketch_partials(parts[1], "v", groups, HG64).repartition(3).write.parquet(
+        str(tmp_path / "state" / "batch=1")
+    )
+    assert len(ss._batch_dirs()) == 2
+
+    def die(*a, **kw):
+        raise _Killed
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", die)
+        with pytest.raises(_Killed):
+            ss.foreach_batch(parts[2], 1)
+    assert [os.path.basename(d) for d in ss._batch_dirs()] == ["batch=0"]
+    only_first = agg.hg64_agg(parts[0], "v", groups)
+    assert _nan_keyed(ss.result(spark), groups) == _nan_keyed(only_first, groups)
+
+    ss.foreach_batch(parts[2], 1)
+    assert sorted(os.listdir(tmp_path / "state" / "batch=1")) == ["_SUCCESS", "part-00000.parquet"]
+    want = agg.hg64_agg(parts[0].unionAll(parts[2]), "v", groups)
+    assert _nan_keyed(ss.result(spark), groups) == _nan_keyed(want, groups)
+
+
+@pytest.mark.parametrize(
+    "fixture, groups",
+    [("mixed_group_files", ["g_long", "g_dbl"]), ("timestamp_group_files", ["g_ts", "g_ntz"])],
+)
+def test_spark_written_batch_mixes_with_driver_written_batches(
+    spark, tmp_path, request, fixture, groups
+):
+    """A batch Spark's parquet writer committed (the state format before
+    foreach_batch wrote on the driver, with its footer schema) before and
+    after driver-written batches and a compaction: result() is byte- and
+    schema-equal to agg.merge_sketches over the same committed partials."""
+    parts = [spark.read.parquet(f) for f in request.getfixturevalue(fixture)]
+    ss = StreamingSketch(str(tmp_path / "state"), "v", groups)
+
+    def spark_written(df, batch_id):
+        agg.sketch_partials(df, "v", groups, HG64).repartition(1).write.parquet(
+            str(tmp_path / "state" / f"batch={batch_id}")
+        )
+
+    spark_written(parts[0], 0)
+    ss.foreach_batch(parts[1], 1)
+    ss.compact(spark)
+    ss.foreach_batch(parts[0], 2)
+    spark_written(parts[1], 3)
+    got = ss.result(spark)
+    want = agg.merge_sketches(spark.read.parquet(*ss._batch_dirs()), groups, HG64.deserialize)
+    assert got.schema == want.schema
+    got_rows = _nan_keyed(got, groups)
+    assert got_rows == _nan_keyed(want, groups)
+    assert len(got_rows) == parts[0].unionAll(parts[1]).select(*groups).distinct().count()
