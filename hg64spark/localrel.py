@@ -5,14 +5,12 @@ into a pickled RDD, so the frame plans as ``Scan ExistingRDD`` — and EVERY
 evaluation of that scan (each collect, each appearance in a job, each
 broadcast build) launches ``defaultParallelism`` Python worker tasks.
 Measured at local[32], Spark 4.1: ~0.4-0.55 s per warm action for a
-13-row frame — pure scheduling overhead, and the IVF query evaluates four
-such frames per run (guide §1.2 step 1: the profile showed the Python-RDD
-scans, not the matmuls, dominating the line).
+13-row frame — pure scheduling overhead.
 
-For the K-row driver-resident frames this library builds (quantizer
-centroids, probe lists, quantile probes, mixture targets), the rows fit in
-a few KB of SQL text — so render them as ONE ``VALUES`` literal and let the
-parser produce a true ``LocalRelation``:
+For the K-row driver-resident frames this library builds (quantile probes,
+globally folded sketches), the rows fit in a few KB of SQL text — so render
+them as ONE ``VALUES`` literal and let the parser produce a true
+``LocalRelation``:
 
 * evaluation is a ``LocalTableScan`` — no RDD, no Python workers, and
   ``collect()`` short-circuits on the driver without submitting a job;

@@ -33,7 +33,7 @@ from collections.abc import Iterator, Sequence
 import numpy as np
 import pandas as pd
 import pyarrow as pa
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 from pyspark.sql.types import BinaryType, StructField, StructType
 
 from hg64spark import keymath as km
@@ -294,46 +294,6 @@ def bloom_agg_relational(
     return grouped.groupBy(*keys).applyInPandas(fold, out_schema)
 
 
-def bloom_prune_relational(
-    probes: DataFrame,
-    probe_col: str,
-    words: DataFrame,
-    n_bits: int,
-    n_hashes: int,
-) -> DataFrame:
-    """Filter ``probes`` to the rows the Bloom (as a words DataFrame from
-    ``bloom_words_relational``) reports as contained — with ZERO shuffle on
-    the probe side.  Instead of explode + groupBy-reassembly (what
-    ``bloom_contains_relational`` does to support per-group filters), the
-    k bit tests are a CONJUNCTION of k broadcast hash joins against the
-    same words table: broadcast joins are map-side, Catalyst's ReuseExchange
-    dedupes the k identical broadcast subplans, and the whole prune stays
-    inside the probe scan's stage — the shape that keeps a 100 TB raw
-    stream un-Exchanged.  NULL probe values are dropped (not-contained):
-    xxhash64(NULL) would otherwise probe the seed-hash positions.
-    No false negatives, same guarantee as the sketch."""
-    pos = _bloom_positions(probe_col, n_bits, n_hashes)
-    out = probes.filter(F.col(probe_col).isNotNull()).withColumn("__pos", pos)
-    conds = []
-    for i in range(n_hashes):
-        wi = words.select(
-            F.col("word_idx").alias(f"__wi{i}"), F.col("word").alias(f"__w{i}")
-        )
-        out = out.withColumn(
-            f"__idx{i}", F.shiftright(F.element_at("__pos", i + 1), 6).cast("int")
-        ).join(F.broadcast(wi), F.col(f"__idx{i}") == F.col(f"__wi{i}"), "left")
-        conds.append(
-            F.coalesce(F.col(f"__w{i}"), F.lit(0)).bitwiseAND(
-                F.expr(f"shiftleft(1L, int(element_at(__pos, {i + 1}) % 64))")
-            )
-            != 0
-        )
-    keep = conds[0]
-    for c in conds[1:]:
-        keep = keep & c
-    return out.filter(keep).select(*probes.columns)
-
-
 def bloom_contains_relational(
     probes: DataFrame,
     probe_col: str,
@@ -448,8 +408,6 @@ def _rank_hits(
     thresholds: the trimmed docstring's "lo_key/hi_key are exactly the
     buckets value_at_quantile reads" is structural, not a copy to keep in
     sync."""
-    from pyspark.sql import Window
-
     group_cols = list(group_cols)
     wpart = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(0))
     cum = counts.withColumn(
@@ -969,8 +927,6 @@ def hg64_ks_drift_from_counts(
     count) frame — same retained-state entry point, zero-mass NULL
     semantics, integral-count requirement, and overflow discipline as
     :func:`hg64_tv_drift_from_counts`."""
-    from pyspark.sql import Window
-
     full = _drift_full_frame(gc, group_col, "hg64_ks_drift")
     w = (
         Window.partitionBy(group_col)
@@ -1063,8 +1019,6 @@ def hg64_w1_drift_from_counts(
     product then fits int64 by construction, and a sum that still
     exceeds int64 dies on Spark 4's ANSI ARITHMETIC_OVERFLOW — loud,
     though less actionable than the guard; size key_span honestly."""
-    from pyspark.sql import Window
-
     key_span = int(key_span)
     if key_span < 1:
         raise ValueError(f"key_span must be >= 1, got {key_span}")
@@ -1120,8 +1074,9 @@ def hg64_tv_adjacent(
     predecessor in the input emit no row.
 
     Input is an already-reduced (part, hg64_key, count) frame — e.g.
-    `q_sliding_hg64_events`'s output — so this composes with the sliding /
-    streaming window builds without re-scanning data.  Same integer-exact
+    :func:`hg64_counts` grouped by a window-start column in µs — so this
+    composes with the sliding / streaming window builds without re-scanning
+    data.  Same integer-exact
     discipline as the drift family: numerator |c_prev*n_cur - c_cur*n_prev|
     summed in int64 under the shared 2^62 plan-side guard (or
     ``numerator="decimal"``), ONE final division per window pair.  Every
@@ -1203,8 +1158,6 @@ def hg64_calibrate(
     tag is engine-invariant.  Cost at any scale: one keyed-count aggregate
     over the reference + a <= 1920-row broadcast onto ``df``, which never
     shuffles."""
-    from pyspark.sql import Window
-
     counts = hg64_counts(ref, ref_value_col, [], sigbits)
     spark = df.sparkSession
     nk = km.nkeys(sigbits)
@@ -1268,8 +1221,6 @@ def hg64_rank_features(
     floor(cnt * (off / div)), div == 0 -> cnt — so the tagged rank equals
     `HG64Snapshot.rank_of_value` bit-for-bit, and pct_rank is that integer
     rank divided by the group population once (engine-invariant)."""
-    from pyspark.sql import Window
-
     group_cols = list(group_cols)
     counts = hg64_counts(df, value_col, group_cols, sigbits)
     wpart = Window.partitionBy(*group_cols) if group_cols else Window.partitionBy(F.lit(0))
@@ -1552,6 +1503,35 @@ def hg64_agg_relational(
 # --------------------------------------------------------------- Misra-Gries
 
 
+def salted_topk(
+    df: DataFrame, part_col: str, order_by: list, salt_col: str, k: int, salts: int = 32
+) -> DataFrame:
+    """Exact top-k rows per ``part_col`` under ``order_by`` without a serial
+    per-partition sort: local top-k per (part, hash-salt of ``salt_col``),
+    then a global ranking window over the <= ``salts`` x k survivors.
+    Exact because any row in the global top-k is necessarily in its
+    salt-group's local top-k.  ``order_by`` must be a total order (include a
+    unique tiebreak column) for the result to be deterministic; raise
+    ``salts`` when a single salt bucket's rows would still overwhelm one
+    task."""
+    # pmod, not abs(...)%: abs(Long.MIN_VALUE) stays negative in non-ANSI
+    # semantics and % keeps the dividend sign, which would mint a 33rd salt
+    # bucket for an input hashing exactly to Long.MIN_VALUE
+    salted = df.withColumn("__salt", F.pmod(F.xxhash64(salt_col), F.lit(salts)).cast("int"))
+    w_local = Window.partitionBy(part_col, "__salt").orderBy(*order_by)
+    survivors = (
+        salted.withColumn("__rk", F.row_number().over(w_local))
+        .filter(F.col("__rk") <= k)
+        .drop("__rk", "__salt")
+    )
+    w_global = Window.partitionBy(part_col).orderBy(*order_by)
+    return (
+        survivors.withColumn("__rk", F.row_number().over(w_global))
+        .filter(F.col("__rk") <= k)
+        .drop("__rk")
+    )
+
+
 def mg_agg_relational(
     df: DataFrame,
     value_col: str,
@@ -1592,10 +1572,6 @@ def mg_agg_relational(
         .withColumn(gcol, F.struct(*group_cols) if group_cols else F.lit(0))
     )
     totals = counts.groupBy(gcol, *group_cols).agg(F.sum("cnt").alias("__n"))
-    from hg64spark.dataops import salted_topk  # lazy: dataops imports this module
-
-    from pyspark.sql import Window
-
     surv = salted_topk(counts, gcol, [F.desc("cnt"), F.asc(value_col)], value_col, k + 1)
     w = Window.partitionBy(gcol).orderBy(F.desc("cnt"), F.asc(value_col))
     ranked = surv.withColumn("__rk", F.row_number().over(w))

@@ -1,9 +1,9 @@
 """Bloom filter for set membership (conv_id membership per north_rule).
 
 Merge = bitwise OR — exactly associative and commutative.  Guarantees:
-no false negatives (asserted exactly by the driver-gated query); false
-positive probability ~ (1 - e^(-k n / m))^k, asserted within slack by the
-test suite.  Bits are stored as packed uint64 words.
+no false negatives (asserted exactly per key by ``tests/test_oracle.py``
+and the perfbench checks); false positive probability
+~ (1 - e^(-k n / m))^k, asserted within slack by the test suite.  Bits are stored as packed uint64 words.
 """
 
 from __future__ import annotations

@@ -5,9 +5,10 @@ Merge = elementwise counter addition — exactly associative and commutative.
 Published guarantees (for width w, depth d, stream weight N):
     estimate >= true count            (always — no deletions here)
     estimate <= true count + eps*N    with probability >= 1 - e^-d,
-where eps = e / w.  Asserted by the test suite and by the driver-gated
-``cms_heavy_hitters`` query; cross-validated against Spark's built-in
-``count_min_sketch`` aggregate in tests.
+where eps = e / w.  Asserted by the test suite (``tests/test_oracle.py``
+checks the exact top-10 keys against DuckDB) and by the perfbench checks;
+cross-validated against Spark's built-in ``count_min_sketch`` aggregate in
+tests.
 """
 
 from __future__ import annotations

@@ -5,8 +5,7 @@ Complements the count-min sketch on the heavy-hitter axis with the opposite
 bias: CMS never UNDERestimates (est in [true, true + eps*N]); Misra-Gries
 never OVERestimates (est in [true - N/(k+1), true]).  Running both brackets
 every true count from above and below.  When the number of distinct items
-never exceeds k, Misra-Gries is EXACT (no decrement ever fires) — which is
-why the per-tool driver gate below is deterministic.
+never exceeds k, Misra-Gries is EXACT (no decrement ever fires).
 
 Batched update: fold the batch's exact (item, count) pairs into the summary,
 then if more than k items are tracked, subtract the (k+1)-th largest count
@@ -16,7 +15,7 @@ Merge = counter addition + one shrink, exactly the PODS'12 construction, so
 the additive error of a merge tree is bounded by N_total/(k+1) regardless of
 partitioning — the mergeability the north rule requires.
 
-Guarantees (asserted by tests and the driver gate):
+Guarantees (asserted by tests, ``tests/test_oracle.py`` against DuckDB):
     true - N/(k+1) <= estimate <= true       (estimate of untracked item = 0)
     every item with true count > N/(k+1) is tracked (no heavy hitter missed)
 """

@@ -1,8 +1,9 @@
 """ANSI-SQL (DuckDB) re-implementation of the hg64 math, as SQL generators.
 
-The driver's correctness gate runs each Spark query side-by-side with an
-oracle SQL string and hash-compares the values.  For the hg64 operators the
-oracle is not an approximation check — these generators re-derive the *exact*
+``tests/test_oracle.py`` runs each Spark answer side-by-side with an oracle
+SQL string on DuckDB and compares the values, and every perfbench job checks
+its answers against these generators.  For the hg64 operators the oracle is
+not an approximation check — these generators re-derive the *exact*
 bucket keys, bounds, rank scan and in-bucket interpolation
 (`/root/reference/hg64.c:156-193,375-436`) in pure SQL, so Spark and DuckDB
 must agree bit-for-bit:
@@ -112,7 +113,7 @@ def upsample_buckets_sql(
     (running vmin, remaining count), and computes each key's increment with
     the same IEEE-754 double ops in the same order as the Python/C loop
     (``int(float(count) * (some / rest))`` == ``trunc(remaining::DOUBLE *
-    (some::DOUBLE / rest::DOUBLE))``) — so the driver's value-hash gate on
+    (some::DOUBLE / rest::DOUBLE))``) — so the oracle comparison of
     the upsampled buckets is bit-for-bit, not bound-based.  Recursion depth
     per coarse bucket is at most 2^(to-from)."""
     assert to_sigbits > from_sigbits

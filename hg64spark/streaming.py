@@ -42,129 +42,11 @@ from collections.abc import Callable, Sequence
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from hg64spark import agg, statefiles
 from hg64spark.hg64 import HG64
-
-
-def windowed_hg64_counts(
-    stream_df: DataFrame,
-    ts_col: str,
-    value_col: str,
-    group_cols: Sequence[str] = (),
-    window_duration: str = "10 seconds",
-    watermark_delay: str = "10 seconds",
-    sigbits: int = 5,
-) -> DataFrame:
-    """Watermarked EVENT-TIME tumbling-window sketch build: the hg64 bucket
-    key composes with ``F.window`` exactly like any other group column, so
-    the streaming aggregation is Catalyst's own stateful HashAggregate over
-    (window, group..., hg64_key) — no Python, and state per open window is
-    bounded by #groups x <= 1920 keys regardless of row rate.
-
-    The watermark gives the streaming semantics the batch path can't:
-    * late rows within ``watermark_delay`` still land in their (event-time)
-      window;
-    * rows later than the watermark are dropped by the state store, which is
-      what lets Spark evict closed windows instead of keeping every window
-      forever (the unbounded-state hazard of event-time aggs);
-    * in append output mode a window's counts are emitted exactly once, when
-      the watermark passes its end — at which point they are final and the
-      (window, key, count) rows ARE the serialized-free relational sketch
-      (fold them into counters with :func:`hg64spark.hg64.fold_counts`,
-      with one group code per window and group).
-
-    Returns the streaming DataFrame; callers attach their sink
-    (``writeStream.outputMode("append")``)."""
-    from hg64spark import relational
-
-    group_cols = list(group_cols)
-    keyed = relational.with_hg64_key(
-        stream_df.withWatermark(ts_col, watermark_delay).select(ts_col, *group_cols, value_col),
-        value_col,
-        sigbits,
-    )
-    return keyed.groupBy(
-        F.window(F.col(ts_col), window_duration), *group_cols, "hg64_key"
-    ).agg(F.count("*").alias("count"))
-
-
-def dedup_stream_watermarked(
-    stream_df: DataFrame,
-    key_cols: Sequence[str],
-    ts_col: str,
-    watermark_delay: str = "1 hour",
-) -> DataFrame:
-    """Watermarked stateful streaming dedup: ``withWatermark`` +
-    ``dropDuplicates([*key_cols, ts_col])`` — the state-BOUNDED form of the
-    exact streaming dedup (``dropDuplicates`` without a watermark keeps
-    every key forever, the unbounded-state hazard documented on the
-    unwatermarked gate).
-
-    Because the event-time column is one of the dedup keys, Spark evicts
-    state rows once the watermark passes their timestamp, and drops
-    later-than-watermark input rows outright.  The late-row drop is
-    load-bearing, not incidental: a late duplicate whose state was already
-    evicted would otherwise be re-emitted as new (asserted across a
-    checkpoint restart in tests/test_streaming.py).  State is one row per
-    distinct (key..., ts) inside the watermark horizon — bounded by arrival
-    rate x delay, independent of total stream length.
-
-    Returns the streaming DataFrame; callers attach an append-mode sink."""
-    return stream_df.withWatermark(ts_col, watermark_delay).dropDuplicates(
-        [*key_cols, ts_col]
-    )
-
-
-def sketch_stream_stateful(
-    stream_df: DataFrame,
-    value_col: str,
-    group_cols: Sequence[str],
-    make_sketch: Callable[[], object] = HG64,
-    deserialize: Callable[[bytes], object] = HG64.deserialize,
-) -> DataFrame:
-    """Custom stateful streaming operator: per-group sketch kept in Spark's
-    streaming state store via ``applyInPandasWithState``.  Each micro-batch
-    folds its rows into the group's sketch (vectorized) and emits the updated
-    serialized sketch — downstream consumers always see the newest cumulative
-    summary per group.
-
-    Versus the foreachBatch form (:class:`StreamingSketch`): state lives in
-    the checkpointed state store (RocksDB/HDFS on a cluster), is keyed and
-    sharded by group, and recovers exactly-once on restart without an
-    external directory — the right shape when group cardinality is large.
-    foreachBatch remains preferable when results must live in an external
-    table anyway."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import BinaryType, StructField, StructType
-
-    group_cols = list(group_cols)
-    fields = [f for f in stream_df.schema.fields if f.name in group_cols]
-    out_schema = StructType(fields + [StructField("sketch", BinaryType(), False)])
-    state_schema = StructType([StructField("sketch", BinaryType(), True)])
-
-    def update(key, pdfs, state):
-        if state.exists:
-            sk = deserialize(bytes(state.get[0]))
-        else:
-            sk = make_sketch()
-        for pdf in pdfs:
-            vals = pdf[value_col].dropna()
-            if len(vals):
-                sk.add_values(vals.to_numpy())
-        blob = sk.serialize()
-        state.update((blob,))
-        out = {c: [k] for c, k in zip(group_cols, key)}
-        out["sketch"] = [blob]
-        yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
-
-    return stream_df.groupBy(*group_cols).applyInPandasWithState(
-        update, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
 
 
 class StreamingSketch:

@@ -4,10 +4,11 @@ ts timestamp).
 
 Two sources:
 
-* :func:`transcripts_from_events` — a *deterministic view over the driver's
-  ``events`` parquet*, so every derived value (text lengths, inter-turn
-  latencies, turn counts) is reproducible in ANSI SQL by the DuckDB oracle
-  (``TRANSCRIPTS_SQL``). This powers the correctness-gated queries.
+* :func:`transcripts_from_events` — a *deterministic view over the test
+  data's ``events`` parquet*, so every derived value (text lengths,
+  inter-turn latencies, turn counts) is reproducible in ANSI SQL by the
+  DuckDB oracle (``TRANSCRIPTS_SQL``). ``tests/test_oracle.py`` compares the
+  two.
 * :func:`synthetic_transcripts` — a pure generator (seed folded into hashes,
   Pareto-skewed conversation sizes per FIXTURES.md F1) used for benchmarks and
   skew tests at arbitrary scale. Built entirely from ``spark.range`` + column

@@ -318,7 +318,7 @@ def test_upsample_oracle_matches_put_fuzzed():
     """The recursive-CTE SQL oracle for the coarse->fine pro-rata merge
     (``sqloracle.upsample_buckets_sql``) must reproduce HG64.put's
     carried-remainder FLOAT allocation bit-for-bit on random inputs — across
-    sigbits pairs and including linear-region values.  (The driver gate
+    sigbits pairs and including linear-region values.  (tests/test_oracle.py
     covers one dataset; this fuzzes the FP-parity claim itself.)"""
     import duckdb
     import pandas as pd

@@ -706,39 +706,29 @@ def test_mg_binary_items_python_tier_matches_relational(spark):
 
 
 def test_scans_are_pruned_and_filters_pushed(spark):
-    """The brief's 'push down and prune' criterion, mechanically asserted:
-    parquet scans read ONLY the referenced columns (ReadSchema) and probe
-    predicates reach the scan (PushedFilters) — a scan reading all columns
-    for a 2-column projection would be wrong at 100 TB."""
-    from hg64spark import dataops
+    """The brief's 'push down and prune' criterion, mechanically asserted on
+    both hg64 build tiers: the parquet scan reads ONLY the referenced
+    columns (ReadSchema) and the filter reaches the scan (PushedFilters) —
+    a scan reading all columns for a 2-column projection would be wrong at
+    100 TB."""
+    from hg64spark import relational
 
-    sf = "/root/testdata/sf0.001"
-    # production brute form: the probe matrix is collected eagerly (its own
-    # job pushes the vec_id filter), so the returned plan holds only the
-    # corpus scan — assert it is column-pruned
-    plan = dataops.q_ann_brute_topk(spark, sf)._jdf.queryExecution().executedPlan().toString()
-    scans = [l for l in plan.splitlines() if "FileScan parquet" in l]
-    assert scans, plan
-    for s in scans:
-        cols = s.split("FileScan parquet [", 1)[1].split("]", 1)[0]
-        names = {c.split("#")[0] for c in cols.split(",")}
-        assert names <= {"vec_id", "embedding"}, names
-    # Catalyst twin keeps the probe-side scan inside the lazy plan — the
-    # probe predicate must reach that scan as a pushed filter
-    plan_c = (
-        dataops._ann_brute_catalyst(spark, sf)._jdf.queryExecution().executedPlan().toString()
+    ev = spark.read.parquet(f"{SF_DIR}/events.parquet")
+    df = ev.filter(F.col("user_id") < 500).select(
+        "event_type", F.floor(F.col("value") * 1000).cast("long").alias("v")
     )
-    scans_c = [l for l in plan_c.splitlines() if "FileScan parquet" in l]
-    assert any(
-        f"PushedFilters: [IsNotNull(vec_id), LessThan(vec_id,{dataops.N_PROBES})]" in s
-        for s in scans_c
-    ), scans_c
-
-    plan2 = dataops.q_dedup_exact(spark, sf)._jdf.queryExecution().executedPlan().toString()
-    for s in [l for l in plan2.splitlines() if "FileScan parquet" in l]:
-        cols = s.split("FileScan parquet [", 1)[1].split("]", 1)[0]
-        names = {c.split("#")[0] for c in cols.split(",")}
-        assert names <= {"doc_id", "text"}, names
+    built = {
+        "hg64_agg": agg.hg64_agg(df, "v", ["event_type"]),
+        "hg64_agg_arrow": agg.hg64_agg(df, "v", ["event_type"], method="arrow"),
+        "hg64_counts": relational.hg64_counts(df, "v", ["event_type"]),
+    }
+    for name, out in built.items():
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        (scan,) = [l for l in plan.splitlines() if "FileScan parquet" in l]
+        read = scan.split("ReadSchema: struct<", 1)[1].split(">", 1)[0]
+        assert {f.split(":")[0] for f in read.split(",")} == {"user_id", "event_type", "value"}, name
+        pushed = scan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+        assert "LessThan(user_id,500)" in pushed, (name, pushed)
 
 
 def test_segment_record_batch_lexsort_fallback_matches_fused_path():
@@ -828,14 +818,17 @@ def test_read_table_catalog_branch_is_config_not_code(spark):
     try:
         got = hio.read_table(spark, "/nonexistent/ignored", "documents").collect()
         assert sorted((r["doc_id"], r["text"]) for r in got) == rows
-        # and a full operator runs end-to-end through the catalog read
-        from hg64spark import dataops
-
-        out = dataops.q_text_quality(spark, "/nonexistent/ignored").collect()
-        assert {r["doc_id"] for r in out} == {1, 2}
+        # and a library builder runs end to end through the catalog read
+        spark.conf.set(hio.FORMAT_CONF, "parquet")
+        want = transcripts.transcripts_from_events(spark, SF_DIR).collect()
+        spark.read.parquet(f"{SF_DIR}/events.parquet").createOrReplaceTempView("events")
+        spark.conf.set(hio.FORMAT_CONF, "iceberg")
+        out = transcripts.transcripts_from_events(spark, "/nonexistent/ignored").collect()
+        assert len(want) > 0 and sorted(out) == sorted(want)
     finally:
         spark.conf.set(hio.FORMAT_CONF, "parquet")
         spark.catalog.dropTempView("documents")
+        spark.catalog.dropTempView("events")
 
 
 def test_hg64_tv_drift_exact_bounds(spark):
