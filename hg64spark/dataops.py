@@ -1,9 +1,9 @@
 """Training-data-pipeline operators over the ``documents`` / ``embeddings``
 tables: text analysis, deduplication (exact, n-gram Jaccard, MinHash+LSH,
-SimHash), and similarity search (brute-force cosine top-k + LSH-bucketed).
+SimHash), and similarity search (brute-force cosine top-k + IVF).
 
-Every operator is defined twice — a Spark DataFrame implementation and a
-DuckDB oracle — with the math arranged so both produce bit-identical results:
+The math is arranged so an ANSI-SQL engine can reproduce each answer
+bit-for-bit, and ``tests/test_dataops.py`` checks the semantics:
 
 * hashes come from md5 prefixes (``conv(substr(md5(x),1,15),16,10)`` ==
   DuckDB ``CAST('0x'||substr(md5(x),1,15) AS BIGINT)``, verified) except the
@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 
 from hg64spark import io
 from hg64spark.localrel import local_rows_df
+from hg64spark.relational import salted_topk
 
 SHINGLE_K = 5
 #: id offset for planted near-duplicates in the augmented test corpora —
@@ -44,7 +45,6 @@ MINHASH_N = 64
 # tau = 0.5 are caught with prob 1-(1-0.25)^32 ~ 0.9999 (and deterministically
 # at sf0.01: measured 600/600 recall with exactly 0 false candidates)
 LSH_BANDS = 32
-STOPWORDS = ("the", "a")
 
 # ------------------------------------------------------------------ corpora
 
@@ -58,30 +58,16 @@ def augmented_corpus(
 ) -> DataFrame:
     """documents plus a planted near-duplicate of every doc (last 3 tokens
     dropped, doc_id+offset).  ``offset`` defaults ABOVE the id domain; the
-    keep-best gate passes -PLANT_OFFSET so the degraded copy holds the
-    cluster-MIN id instead.  The engine-sensitive drop-last-3 slice lives
-    here and in :func:`_augmented_sql` ONLY — parameterizing the offset
-    (rather than copying the pair) keeps it that way."""
+    keep-best test passes -PLANT_OFFSET so the degraded copy holds the
+    cluster-MIN id instead.  The drop-last-3 slice lives here ONLY —
+    parameterizing the offset (rather than copying the pair) keeps it that
+    way."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
     copies = d.select(
         (F.col("doc_id") + F.lit(int(offset))).alias("doc_id"),
         F.expr("array_join(slice(split(text,' '), 1, size(split(text,' '))-3), ' ')").alias("text"),
     )
     return d.unionAll(copies)
-
-
-def _augmented_sql(offset: int = PLANT_OFFSET) -> str:
-    """DuckDB mirror of :func:`augmented_corpus` — same single-source rule."""
-    return f"""
-    SELECT doc_id, text FROM documents
-    UNION ALL
-    SELECT doc_id + ({int(offset)}) AS doc_id,
-           array_to_string(l[1:len(l)-3], ' ') AS text
-    FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-"""
-
-
-AUGMENTED_SQL = _augmented_sql()
 
 
 def raw_shingles(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
@@ -113,37 +99,11 @@ def shingles(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     return raw_shingles(corpus, k).distinct()
 
 
-def _raw_shingles_sql(base: str, k: int = SHINGLE_K) -> str:
-    """Non-distinct shingle stream (the SQL twin of :func:`raw_shingles`) —
-    the ONE place the k-gram slice/range index arithmetic lives, so the
-    distinct and multiplicity-sensitive oracles cannot drift apart."""
-    return f"""
-        SELECT doc_id, unnest([array_to_string(l[i:i+{k - 1}], ' ')
-                               FOR i IN range(1, len(l) - {k - 2})]) AS sh
-        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM ({base}) WHERE len(string_split(text,' ')) >= {k})
-    """
-
-
-def _shingles_sql(base: str, k: int = SHINGLE_K) -> str:
-    return f"""
-    SELECT DISTINCT doc_id, sh FROM (
-        {_raw_shingles_sql(base, k)}
-    )
-    """
-
-
 #: document-frequency cap on shingles entering any pair self-join: a single
 #: stop-phrase shingle shared by 10^6 docs would otherwise create a 10^12-row
 #: join partition.  Similarity is defined over the capped shingle space
 #: (standard stop-gram removal), identically in Spark and the DuckDB oracle.
 SHINGLE_DF_CAP = 256
-
-
-def rare_shingle_set(corpus: DataFrame, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
-    """The shingles whose document frequency is within the cap — the
-    semi-join filter every skew-sensitive consumer applies."""
-    s = shingles(corpus, k)
-    return s.groupBy("sh").agg(F.count("*").alias("df")).filter(F.col("df") <= df_cap).select("sh")
 
 
 def hot_shingle_set(corpus: DataFrame, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP) -> DataFrame:
@@ -163,29 +123,6 @@ def capped_shingles(corpus: DataFrame, k: int = SHINGLE_K, df_cap: int = SHINGLE
     map-side, so the shingle stream is not re-exchanged by sh and no join
     partition concentrates a hot shingle (hashed_shingles docstring)."""
     return shingles(corpus, k).join(F.broadcast(hot_shingle_set(corpus, k, df_cap)), "sh", "left_anti")
-
-
-def _keyed_shingles_sql(base: str, k: int = SHINGLE_K, hashed: bool = False) -> str:
-    """Distinct per-doc shingle stream, keyed either by the raw shingle
-    string or by its 60-bit md5-prefix hash — both as a column named ``sh``
-    so every downstream generator has exactly one body (the two key spaces
-    must never drift apart)."""
-    if not hashed:
-        return _shingles_sql(base, k)
-    return (
-        f"SELECT DISTINCT doc_id, {_TOKHASH_SQL.format(x='sh')} AS sh "
-        f"FROM ({_shingles_sql(base, k)})"
-    )
-
-
-def _capped_shingles_sql(
-    base: str, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP, hashed: bool = False
-) -> str:
-    s = _keyed_shingles_sql(base, k, hashed)
-    return f"""
-    SELECT doc_id, sh FROM ({s})
-    WHERE sh IN (SELECT sh FROM ({s}) GROUP BY sh HAVING count(*) <= {df_cap})
-    """
 
 
 # The exact-Jaccard pair computation, shared by several operators.
@@ -218,65 +155,11 @@ def jaccard_pairs(corpus: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def _jaccard_pairs_sql(
-    base: str, k: int = SHINGLE_K, df_cap: int = SHINGLE_DF_CAP, hashed: bool = False
-) -> str:
-    return f"""
-    WITH s AS ({_capped_shingles_sql(base, k, df_cap, hashed)}),
-    sizes AS (SELECT doc_id, count(*) AS n FROM s GROUP BY doc_id),
-    inter AS (
-        SELECT x.doc_id AS doc_a, y.doc_id AS doc_b, count(*) AS c
-        FROM s x JOIN s y ON x.sh = y.sh AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           CAST(c AS DOUBLE) / CAST(sa.n + sb.n - c AS DOUBLE) AS jaccard
-    FROM inter
-    JOIN sizes sa ON sa.doc_id = doc_a
-    JOIN sizes sb ON sb.doc_id = doc_b
-    """
-
-
 # --------------------------------------------------------------- text ops
 
 #: md5-prefix 60-bit token hash, identical in Spark and DuckDB (verified)
 def _tokhash_spark(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-_TOKHASH_SQL = "CAST(concat('0x', substr(md5({x}), 1, 15)) AS BIGINT)"
-
-
-def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality metrics per document: token count, type count, type-token
-    ratio, stopword ratio, and a composite quality score — all built-ins,
-    whole-stage codegen, no shuffle beyond the final projection."""
-    d = _docs(spark, sf_dir)
-    toks = F.split(F.col("text"), " ")
-    stopset = ",".join(f"'{s}'" for s in STOPWORDS)
-    return d.select(
-        "doc_id",
-        F.size(toks).cast("long").alias("n_tokens"),
-        F.size(F.array_distinct(toks)).cast("long").alias("n_types"),
-        F.expr(f"size(filter(split(text,' '), x -> x IN ({stopset})))").cast("long").alias("n_stop"),
-        (F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast("double")).alias("ttr"),
-        (
-            F.expr(f"size(filter(split(text,' '), x -> x IN ({stopset})))").cast("double")
-            / F.size(toks).cast("double")
-        ).alias("stop_ratio"),
-    )
-
-
-Q_TEXT_QUALITY_SQL = f"""
-SELECT doc_id,
-       CAST(len(l) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct(l)) AS BIGINT) AS n_types,
-       CAST(len(list_filter(l, x -> x IN ({",".join(f"'{s}'" for s in STOPWORDS)}))) AS BIGINT) AS n_stop,
-       CAST(len(list_distinct(l)) AS DOUBLE) / CAST(len(l) AS DOUBLE) AS ttr,
-       CAST(len(list_filter(l, x -> x IN ({",".join(f"'{s}'" for s in STOPWORDS)}))) AS DOUBLE)
-           / CAST(len(l) AS DOUBLE) AS stop_ratio
-FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents)
-"""
 
 
 #: language-model vocabulary cap: top-K tokens per language by frequency
@@ -288,35 +171,6 @@ LANGID_VOCAB_K = 4096
 #: global ranking window sees at most LANGID_SALTS x LANGID_VOCAB_K rows per
 #: language instead of the language's full distinct-token set
 LANGID_SALTS = 32
-
-
-def salted_topk(
-    df: DataFrame, part_col: str, order_by: list, salt_col: str, k: int, salts: int = 32
-) -> DataFrame:
-    """Exact top-k rows per ``part_col`` under ``order_by`` without a serial
-    per-partition sort: local top-k per (part, hash-salt of ``salt_col``),
-    then a global ranking window over the <= ``salts`` x k survivors.
-    Exact because any row in the global top-k is necessarily in its
-    salt-group's local top-k.  ``order_by`` must be a total order (include a
-    unique tiebreak column) for the result to be deterministic; raise
-    ``salts`` when a single salt bucket's rows would still overwhelm one
-    task."""
-    # pmod, not abs(...)%: abs(Long.MIN_VALUE) stays negative in non-ANSI
-    # semantics and % keeps the dividend sign, which would mint a 33rd salt
-    # bucket for an input hashing exactly to Long.MIN_VALUE
-    salted = df.withColumn("__salt", F.pmod(F.xxhash64(salt_col), F.lit(salts)).cast("int"))
-    w_local = Window.partitionBy(part_col, "__salt").orderBy(*order_by)
-    survivors = (
-        salted.withColumn("__rk", F.row_number().over(w_local))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk", "__salt")
-    )
-    w_global = Window.partitionBy(part_col).orderBy(*order_by)
-    return (
-        survivors.withColumn("__rk", F.row_number().over(w_global))
-        .filter(F.col("__rk") <= k)
-        .drop("__rk")
-    )
 
 
 def topk_tokens_per_lang(counts: DataFrame, k: int = LANGID_VOCAB_K) -> DataFrame:
@@ -369,68 +223,6 @@ def q_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-Q_TEXT_LANGID_SQL = f"""
-WITH toks AS (
-    SELECT doc_id, lang, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-freq AS (
-    SELECT cand, tok, cnt FROM (
-        SELECT lang AS cand, tok, count(*) AS cnt,
-               row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok ASC) AS rk
-        FROM toks GROUP BY lang, tok
-    ) WHERE rk <= {LANGID_VOCAB_K}
-),
-scored AS (
-    SELECT t.doc_id, f.cand, sum(f.cnt) AS score
-    FROM toks t JOIN freq f ON t.tok = f.tok
-    GROUP BY 1, 2
-),
-pred AS (
-    SELECT doc_id, cand,
-           row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, cand ASC) AS rn
-    FROM scored
-)
-SELECT d.doc_id, coalesce(p.cand, 'und') AS predicted_lang, d.lang AS actual_lang
-FROM documents d LEFT JOIN (SELECT * FROM pred WHERE rn = 1) p ON p.doc_id = d.doc_id
-"""
-
-
-def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Document fingerprint from shingle hashes: (min hash, xor of hashes) —
-    an order-independent 2x60-bit signature (equal for exact duplicates,
-    cheap pre-filter for near-dups)."""
-    s = shingles(_docs(spark, sf_dir).select("doc_id", "text"))
-    h = s.select("doc_id", _tokhash_spark(F.col("sh")).alias("h"))
-    return h.groupBy("doc_id").agg(
-        F.min("h").alias("fp_min"), F.expr("bit_xor(h)").alias("fp_xor")
-    )
-
-
-Q_TEXT_FINGERPRINT_SQL = f"""
-WITH s AS ({_shingles_sql("SELECT doc_id, text FROM documents")}),
-h AS (SELECT doc_id, {_TOKHASH_SQL.format(x="sh")} AS h FROM s)
-SELECT doc_id, min(h) AS fp_min, bit_xor(h) AS fp_xor FROM h GROUP BY doc_id
-"""
-
-
-def q_token_count_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """hg64 histogram of per-document token counts — the sketch library and
-    the data ops composing."""
-    from hg64spark import agg
-
-    d = _docs(spark, sf_dir).select(F.size(F.split("text", " ")).cast("long").alias("v"))
-    sk = agg.hg64_agg(d, "v", [], 5)
-    return agg.hg64_buckets(sk, [])
-
-
-def token_count_hist_sql() -> str:
-    from hg64spark import sqloracle
-
-    return sqloracle.buckets_sql(
-        "SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS v FROM documents", "v", 5
-    )
-
-
 # ------------------------------------------------------------------- dedup
 
 
@@ -444,32 +236,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.select(
         "doc_id", F.md5("text").alias("text_md5"), F.count("*").over(w).alias("dup_count")
     )
-
-
-Q_DEDUP_EXACT_SQL = f"""
-SELECT doc_id, md5(text) AS text_md5,
-       count(*) OVER (PARTITION BY md5(text)) AS dup_count
-FROM ({AUGMENTED_SQL})
-"""
-
-
-def q_dedup_ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-50 most similar pairs by exact word-5-gram Jaccard over the
-    augmented corpus (deterministic tiebreak).
-
-    Deliberately stays on STRING shingle keys: this is the exact-similarity
-    baseline the hashed operators are validated against, so it must not
-    share their (hash-space) definition.  It is the one shingle operator not
-    meant for 100 TB — at scale you run dedup_minhash_lsh (hashed keys,
-    banded candidates) and reserve this for sampled audits."""
-    pairs = jaccard_pairs(augmented_corpus(spark, sf_dir))
-    return pairs.orderBy(F.desc("jaccard"), F.asc("doc_a"), F.asc("doc_b")).limit(50)
-
-
-Q_DEDUP_NGRAM_SQL = f"""
-SELECT * FROM ({_jaccard_pairs_sql(AUGMENTED_SQL)})
-ORDER BY jaccard DESC, doc_a ASC, doc_b ASC LIMIT 50
-"""
 
 
 def hashed_shingles(
@@ -521,7 +287,7 @@ def minhash_neardup_pairs(
     corpus: DataFrame, tau: float | None = None, df_cap: int | None = None
 ) -> DataFrame:
     """(doc_a, doc_b, jaccard >= tau) over any (doc_id, text) corpus — the
-    library form used by the driver query and by ``jobs/dedup_corpus.py``.
+    library form behind :func:`q_dedup_minhash_lsh`.
 
     Scale shape: signatures are one groupBy over (doc, shingle) rows; band
     join shuffles (band_id, band_hash) keys; candidate verification touches
@@ -604,12 +370,6 @@ def minhash_neardup_pairs(
     )
     return verified.filter(F.col("jaccard") >= tau)
 
-
-Q_DEDUP_MINHASH_SQL = f"""
-SELECT doc_a, doc_b, jaccard FROM ({_jaccard_pairs_sql(AUGMENTED_SQL, hashed=True)})
-WHERE jaccard >= {NEARDUP_TAU}
-"""
-
 SIMHASH_BITS = 60
 HAMMING_MAX = 8
 #: pigeonhole banding: a pair at Hamming <= 8 differs in at most 8 of the 9
@@ -687,30 +447,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SIMHASH_SIG_SQL = f"""
-    SELECT doc_id,
-           {" + ".join(f"(CASE WHEN b{b} > 0 THEN {1 << b} ELSE 0 END)" for b in range(SIMHASH_BITS))}
-           AS simhash
-    FROM (
-        SELECT doc_id,
-               {", ".join(f"sum(CASE WHEN (h >> {b}) & 1 = 1 THEN 1 ELSE -1 END) AS b{b}" for b in range(SIMHASH_BITS))}
-        FROM (
-            SELECT doc_id, {_TOKHASH_SQL.format(x="tok")} AS h
-            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM ({AUGMENTED_SQL}))
-        )
-        GROUP BY doc_id
-    )
-"""
-
-Q_DEDUP_SIMHASH_SQL = f"""
-WITH sigs AS ({_SIMHASH_SIG_SQL})
-SELECT x.doc_id AS doc_a, y.doc_id AS doc_b,
-       CAST(bit_count(CAST(xor(x.simhash, y.simhash) AS BIGINT)) AS BIGINT) AS hamming
-FROM sigs x JOIN sigs y ON x.doc_id < y.doc_id
-WHERE bit_count(CAST(xor(x.simhash, y.simhash) AS BIGINT)) <= {HAMMING_MAX}
-"""
-
-
 # -------------------------------------------------------------- similarity
 
 N_PROBES = 5
@@ -720,7 +456,6 @@ TOPK = 10
 #: it as a constant, guarded at execution — see _band_codes_df)
 EMB_DIM = 64
 _SCALE = "transform(embedding, v -> CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5) AS BIGINT))"
-_SCALE_SQL = "[CAST(floor(CAST(v AS DOUBLE) * 1000000 + 0.5) AS BIGINT) FOR v IN embedding]"
 
 
 def _scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -911,172 +646,9 @@ def embedding_dispersion(
     )
 
 
-def q_embedding_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-label embedding-dispersion gate over the embeddings table; the
-    oracle reproduces the integer/decimal numerator and the single double
-    division in SQL."""
-    e = io.read_table(spark, sf_dir, "embeddings")
-    return embedding_dispersion(e.select("label", "embedding"), "label")
-
-
-def _embedding_dispersion_sql() -> str:
-    return f"""
-    WITH se AS (
-        SELECT label AS g, {_SCALE_SQL} AS se FROM embeddings
-        WHERE label IS NOT NULL
-    ),
-    expl AS (
-        SELECT g, u.j AS j, u.x AS x
-        FROM (SELECT g, unnest([{{'j': i, 'x': se[i + 1]}}
-                                FOR i IN range(len(se))]) AS u
-              FROM se)
-    ),
-    per_dim AS (
-        SELECT g, j, CAST(sum(x) AS BIGINT) AS s,
-               sum(CAST(x AS DECIMAL(19,0)) * CAST(x AS DECIMAL(19,0))) AS ss,
-               count(*) AS n
-        FROM expl GROUP BY 1, 2
-    ),
-    per_group AS (
-        SELECT g, CAST(any_value(n) AS BIGINT) AS n,
-               sum(ss) AS ss_tot,
-               sum(CAST(s AS DECIMAL(19,0)) * CAST(s AS DECIMAL(19,0))) AS s2_tot
-        FROM per_dim GROUP BY 1
-    )
-    SELECT g, n,
-           CAST(CAST(n AS DECIMAL(19,0)) * ss_tot - s2_tot AS DOUBLE)
-           / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)) AS dispersion
-    FROM per_group
-    """
-
-
-def q_embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Centroid-drift gate over the embeddings table's label groups; the
-    oracle reproduces the fixed-point sums, decimal numerators, and the
-    single double step in SQL."""
-    e = io.read_table(spark, sf_dir, "embeddings")
-    return embedding_centroid_drift(e.select("label", "embedding"), "label")
-
-
-def _embedding_centroid_drift_sql() -> str:
-    return f"""
-    WITH se AS (
-        SELECT label AS g, {_SCALE_SQL} AS se FROM embeddings
-        WHERE label IS NOT NULL
-    ),
-    expl AS (
-        SELECT g, u.j AS j, u.x AS x
-        FROM (SELECT g, unnest([{{'j': i, 'x': se[i + 1]}}
-                                FOR i IN range(len(se))]) AS u
-              FROM se)
-    ),
-    sums AS (
-        SELECT g, j, CAST(sum(x) AS BIGINT) AS s, count(*) AS n
-        FROM expl GROUP BY 1, 2
-    ),
-    pairs AS (
-        SELECT a.g AS g_a, b.g AS g_b,
-               CAST(any_value(a.n) AS BIGINT) AS n_a,
-               CAST(any_value(b.n) AS BIGINT) AS n_b,
-               sum(CAST(a.s AS DECIMAL(19,0)) * CAST(b.s AS DECIMAL(19,0))) AS dot,
-               sum(CAST(a.s AS DECIMAL(19,0)) * CAST(a.s AS DECIMAL(19,0))) AS na2,
-               sum(CAST(b.s AS DECIMAL(19,0)) * CAST(b.s AS DECIMAL(19,0))) AS nb2
-        FROM sums a JOIN sums b ON a.j = b.j AND a.g < b.g
-        GROUP BY 1, 2
-    )
-    SELECT g_a, g_b, n_a, n_b,
-           CAST(dot AS DOUBLE)
-           / nullif(sqrt(CAST(na2 AS DOUBLE)) * sqrt(CAST(nb2 AS DOUBLE)), 0.0)
-               AS cos_centroid
-    FROM pairs
-    """
-
-
 # ------------------------------------------------------------- winnowing
 
 WINNOW_W = 4  # window (in k-grams) per Schleimer/Wilkerson/Aiken winnowing
-
-
-def q_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing document fingerprints (Schleimer, Wilkerson & Aiken 2003,
-    the MOSS scheme): hash every word-k-gram by position, slide a window of
-    WINNOW_W consecutive hashes, keep the window minimum — the selected
-    distinct hashes are the fingerprint set, guaranteeing any shared run of
-    >= k+W-1 tokens between two documents shares >= 1 fingerprint.
-
-    Scale shape: one frame-window min per document (shuffle by doc_id,
-    ordered scan within — documents are bounded-length, so no skew), then a
-    distinct.  Identical frame semantics in the DuckDB oracle."""
-    k = SHINGLE_K
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    # token array projected once (see raw_shingles): split ran 3x per row
-    sh = (
-        d.select("doc_id", F.split(F.col("text"), " ").alias("__toks"))
-        .filter(F.size("__toks") >= k)
-        .select(
-            "doc_id",
-            "__toks",
-            F.posexplode(F.expr(f"sequence(1, size(__toks) - {k - 1})")).alias("pos", "__i"),
-        )
-        .select(
-            "doc_id",
-            "pos",
-            F.expr(f"array_join(slice(__toks, __i, {k}), ' ')").alias("sh"),
-        )
-    )
-    h = sh.select("doc_id", "pos", _tokhash_spark(F.col("sh")).alias("h"))
-    w = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW_W - 1)
-    wm = h.select("doc_id", F.min("h").over(w).alias("fp"), F.count("*").over(w).alias("cnt"))
-    return wm.filter(F.col("cnt") == WINNOW_W).select("doc_id", "fp").distinct()
-
-
-Q_TEXT_WINNOW_SQL = f"""
-WITH sh AS (
-  SELECT doc_id, u.pos AS pos, u.sh AS sh
-  FROM (SELECT doc_id,
-               unnest([{{'pos': i, 'sh': array_to_string(l[i:i+{SHINGLE_K - 1}], ' ')}}
-                       FOR i IN range(1, len(l) - {SHINGLE_K - 2})]) AS u
-        FROM (SELECT doc_id, string_split(text,' ') AS l FROM documents
-              WHERE len(string_split(text,' ')) >= {SHINGLE_K}))
-),
-h AS (SELECT doc_id, pos, {_TOKHASH_SQL.format(x="sh")} AS h FROM sh),
-wm AS (
-  SELECT doc_id,
-         min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp,
-         count(*) OVER (PARTITION BY doc_id ORDER BY pos
-                        ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS cnt
-  FROM h)
-SELECT DISTINCT doc_id, fp FROM wm WHERE cnt = {WINNOW_W}
-"""
-
-
-# --------------------------------------------------------- token counting
-
-#: BPE-ish pre-tokenizer: letter runs / digit runs / single non-alnum marks —
-#: the GPT-2-style split that approximates subword token counts far better
-#: than whitespace for budgeting.  regexp_extract_all has identical semantics
-#: in Spark (Java regex) and DuckDB (RE2) for this pattern class (verified).
-BPE_PATTERN = "[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"
-
-
-def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document token budgets: whitespace tokens vs BPE-ish regex tokens
-    — both pure codegen built-ins, no shuffle."""
-    d = _docs(spark, sf_dir)
-    return d.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("n_ws_tokens"),
-        F.size(F.expr(f"regexp_extract_all(text, '{BPE_PATTERN}', 0)")).cast("long").alias("n_bpe_tokens"),
-    )
-
-
-Q_TOKEN_COUNT_BPE_SQL = f"""
-SELECT doc_id,
-       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws_tokens,
-       CAST(len(regexp_extract_all(text, '{BPE_PATTERN}')) AS BIGINT) AS n_bpe_tokens
-FROM documents
-"""
 
 
 # ------------------------------------------------- embedding-cosine dedup
@@ -1293,29 +865,6 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AUG_EMB_SQL = f"""
-    SELECT vec_id, {_SCALE_SQL} AS se FROM embeddings
-    UNION ALL
-    SELECT vec_id + {PLANT_OFFSET} AS vec_id, [v + (v % 97) FOR v IN se] AS se
-    FROM (SELECT vec_id, {_SCALE_SQL} AS se FROM embeddings)
-"""
-
-Q_DEDUP_EMB_COSINE_SQL = f"""
-WITH e AS ({_AUG_EMB_SQL}),
-pairs AS (
-    SELECT x.vec_id AS vec_a, y.vec_id AS vec_b,
-           CAST((SELECT sum(a * b) FROM (SELECT unnest(x.se) AS a, unnest(y.se) AS b)) AS BIGINT) AS dot,
-           CAST((SELECT sum(a * a) FROM (SELECT unnest(x.se) AS a)) AS BIGINT) AS na2,
-           CAST((SELECT sum(b * b) FROM (SELECT unnest(y.se) AS b)) AS BIGINT) AS nb2
-    FROM e x JOIN e y ON x.vec_id < y.vec_id
-)
-SELECT vec_a, vec_b, dot FROM pairs
-WHERE dot > 0
-  AND CAST(dot AS DOUBLE) * CAST(dot AS DOUBLE)
-      >= {COSDUP_TAU * COSDUP_TAU!r} * CAST(na2 AS DOUBLE) * CAST(nb2 AS DOUBLE)
-"""
-
-
 
 
 def q_ann_brute_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1396,116 +945,8 @@ def _ann_brute_catalyst(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dots.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOPK)
 
 
-Q_ANN_BRUTE_SQL = f"""
-WITH e AS (SELECT vec_id, {_SCALE_SQL} AS se FROM embeddings),
-probes AS (SELECT vec_id AS probe_id, se AS pe FROM e WHERE vec_id < {N_PROBES}),
-dots AS (
-    SELECT p.probe_id, e.vec_id AS neighbor_id,
-           (SELECT sum(x * y) FROM (SELECT unnest(e.se) AS x, unnest(p.pe) AS y)) AS dot
-    FROM e CROSS JOIN probes p
-    WHERE e.vec_id != p.probe_id
-)
-SELECT probe_id, neighbor_id, CAST(dot AS BIGINT) AS dot,
-       CAST(row_number() OVER (PARTITION BY probe_id ORDER BY dot DESC, neighbor_id ASC) AS BIGINT) AS rank
-FROM dots
-QUALIFY rank <= {TOPK}
-"""
-
-LSH_PLANES = 16
-LSH_PLANE_BANDS = 8  # 8 bands x 2 planes: recall-leaning (measured 9-10/10
-# per probe at sf0.01); production would use longer codes + multiprobe for
-# selectivity — the gate here certifies recall, the knob is per-job
-
-
-def _lsh_band_codes_expr(planes: int = LSH_PLANES, bands: int = LSH_PLANE_BANDS) -> str:
-    """SQL expression (over a column ``se``) for the array of per-band
-    hyperplane codes: sign bit of the dot against each +-1 hyperplane
-    (weights from xxhash64(plane, dim) — deterministic), packed per band
-    (``planes // bands`` sign bits per code)."""
-    bits = []
-    for p in range(planes):
-        w = f"transform(sequence(0, size(se)-1), j -> CASE WHEN pmod(xxhash64({p}, j), 2) = 0 THEN 1 ELSE -1 END)"
-        dot = f"aggregate(zip_with(se, {w}, (x, s) -> x * s), 0L, (acc, v) -> acc + v)"
-        bits.append(f"(CASE WHEN {dot} > 0 THEN 1 ELSE 0 END)")
-    r = planes // bands
-    band_codes = [
-        "(" + " + ".join(f"{bits[b * r + j]} * {1 << j}" for j in range(r)) + ")"
-        for b in range(bands)
-    ]
-    return "array(" + ",".join(band_codes) + ")"
-
-
-def q_ann_lsh_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH-bucketed ANN (random-hyperplane signatures, banded) with
-    self-certified recall: for each probe, candidates = vectors sharing at
-    least one 4-plane band; recall@10 against the exact brute-force top-10
-    must be >= 0.5.  Hyperplane weights are +-1 from xxhash64(plane, dim) —
-    deterministic, integer dot products.  Scale shape: signatures are one
-    narrow projection; the candidate join is an equi-join on (band, code);
-    only candidates get exact scoring."""
-    e = _scaled(spark, sf_dir)
-    sig = e.select("vec_id", "se", F.expr(_lsh_band_codes_expr()).alias("codes"))
-    bands = sig.select("vec_id", "se", F.posexplode("codes").alias("band", "code"))
-
-    probes = bands.filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id"), F.col("se").alias("pe"), "band", "code"
-    )
-    cand = (
-        bands.join(probes, ["band", "code"])
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", "pe", F.col("vec_id").alias("neighbor_id"), "se")
-        .distinct()
-    )
-    dots = cand.select(
-        "probe_id",
-        "neighbor_id",
-        F.expr("aggregate(zip_with(se, pe, (x, y) -> x * y), 0L, (acc, v) -> acc + v)").alias("dot"),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    lsh_top = dots.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= TOPK)
-
-    true_top = q_ann_brute_topk(spark, sf_dir).select("probe_id", "neighbor_id")
-    overlap = lsh_top.join(true_top, ["probe_id", "neighbor_id"]).groupBy("probe_id").agg(
-        F.count("*").alias("hits")
-    )
-    all_probes = _scaled(spark, sf_dir).filter(F.col("vec_id") < N_PROBES).select(
-        F.col("vec_id").alias("probe_id")
-    )
-    return all_probes.join(overlap, "probe_id", "left").select(
-        "probe_id",
-        (F.coalesce(F.col("hits"), F.lit(0)) >= int(TOPK * 0.5)).alias("recall_ok"),
-    )
-
-
-Q_ANN_LSH_SQL = f"""
-SELECT CAST(vec_id AS BIGINT) AS probe_id, true AS recall_ok
-FROM embeddings WHERE vec_id < {N_PROBES}
-"""
-
-
 IVF_SEED_MOD = 40  # every 40th vector seeds a coarse centroid (K = N/40)
-IVF_NPROBE = 10
-#: nprobe must track the LIST COUNT, not stay a constant: K grows with the
-#: corpus (N/40), so a fixed nprobe probes a shrinking fraction of the
-#: inverted lists and recall decays with scale — exactly how the sf0.1
-#: sweep caught 2/5 probes under the floor (10 of 50 lists probed at
-#: N=2000 vs 10 of 12 at the small fixtures).  The fraction here is HIGH
-#: because the synthetic embeddings are near-uniform random — neighbors
-#: scatter across lists, the worst case for IVF (measured at sf0.1:
-#: 20% probed -> recall ~0.5, 80% -> >= 0.8).  Real embedding corpora are
-#: clustered and run at 1-10% probe fractions; the gate verifies the
-#: MACHINERY (train/assign/probe/exact-rescore) and its self-certified
-#: floor, not the data's clusterability.
-IVF_NPROBE_FRAC = 0.8
-IVF_RECALL_FLOOR = 0.6
 IVF_LLOYD_ITERS = 2
-
-
-def _ivf_nprobe(k_lists: int) -> int:
-    """max(IVF_NPROBE, ceil(IVF_NPROBE_FRAC * K)), capped at K."""
-    import math
-
-    return min(k_lists, max(IVF_NPROBE, math.ceil(IVF_NPROBE_FRAC * k_lists)))
 
 
 def _dots_against(vectors: DataFrame, refs: DataFrame, ref_id: str) -> DataFrame:
@@ -1803,213 +1244,6 @@ def _ivf_train_distributed(
     return cents
 
 
-def q_ann_ivf_recall(spark: SparkSession, sf_dir: str, sample_mod: int = 4) -> DataFrame:
-    """IVF ANN with a TRAINED coarse quantizer: deterministic seeded k-means
-    (spherical Lloyd, DataFrame-only — see _ivf_train), inverted lists =
-    argmax-centroid assignment, probes search the nprobe nearest lists,
-    candidates get exact scoring.  Gate: recall@10 >= 0.6 per probe vs brute
-    force (self-certified; measured min 0.8-0.9 at the gated scales, up from
-    the 0.3 floor of the untrained every-20th-vector quantizer).
-
-    Scale shape: training runs in numpy on a capped collected sample (the
-    FAISS shape — see _ivf_train; the DataFrame-only Lloyd remains behind
-    distributed=True); assignment and probe ranking are one mapInPandas
-    matmul each against the closure-captured quantizer (_ivf_rank_blas,
-    bit-equal to the Catalyst window form); probing then touches only the
-    selected inverted lists (an equi-join on centroid id).  ``sample_mod``
-    > 1 trains the quantizer on the every-``sample_mod``-th subset;
-    the DEFAULT is sampled training (mod 4) so the driver gate and the
-    bench line both exercise the shape you'd run at corpus scale — the gate
-    still self-certifies the recall floor, which is what makes sampled
-    centroids safe to gate.  Pass sample_mod=1 for the full train."""
-    e = _scaled(spark, sf_dir)
-    cents = _ivf_train(spark, e, sample_mod=sample_mod)
-    assigned = _ivf_rank_blas(e, cents, 1).select("vec_id", "cid")
-    # Probe-side work is driver-local: there are N_PROBES (a small constant)
-    # probe vectors and the quantizer is driver-resident by contract, so
-    # ranking the probes' nprobe nearest lists is N_PROBES x K numpy work —
-    # the old second mapInPandas pass shipped a handful of rows through a
-    # whole Spark stage, and cents.count() was a third action on the local
-    # relation.  Same _collect_vectors ordering, same ranking kernel
-    # (_topk_centroids) as the distributed assignment — bit-identical rows.
-    pids, P = _collect_vectors(
-        e.filter(F.col("vec_id") < N_PROBES), "probe set", "lower N_PROBES"
-    )
-    cids, C, cn = _quantizer_arrays(cents, "q_ann_ivf_recall probe ranking")
-    nprobe = _ivf_nprobe(len(cids))
-    k = min(nprobe, len(cids))
-    idx = _topk_centroids(P, C, cn, k) if len(pids) else np.empty((0, 0), dtype=np.int64)
-    plists = local_rows_df(
-        spark,
-        [(int(p), int(c)) for p, row in zip(pids, idx) for c in cids[row]],
-        "probe_id long, cid int",
-    )
-    cand = (
-        plists.join(assigned, "cid")
-        .filter(F.col("vec_id") != F.col("probe_id"))
-        .select("probe_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    # exact scoring of the CANDIDATES ONLY (the point of the inverted lists):
-    # attach both vectors to each candidate pair, positional explode, integer
-    # sum — never the full N x P cross like the brute-force baseline.  The
-    # probe vectors are already on the driver; the broadcast side is built
-    # from them as a local relation instead of a third scan of the table.
-    ne = e.select(F.col("vec_id").alias("neighbor_id"), F.col("se").alias("nv"))
-    pv = local_rows_df(
-        spark,
-        [(int(p), [int(x) for x in row]) for p, row in zip(pids, P)],
-        "probe_id long, pv array<bigint>",
-    )
-    scored = (
-        cand.join(ne, "neighbor_id")
-        .join(F.broadcast(pv), "probe_id")
-        # positional explode instead of arrays_zip (see q_dedup_embedding_cosine)
-        .select(
-            "probe_id", "neighbor_id", "nv", "pv",
-            F.explode(F.expr(f"sequence(0, {EMB_DIM - 1})")).alias("__j"),
-        )
-        .groupBy("probe_id", "neighbor_id")
-        .agg(F.sum(F.expr("nv[__j] * pv[__j]")).alias("dot"))
-    )
-    w_p = Window.partitionBy("probe_id").orderBy(F.desc("dot"), F.asc("neighbor_id"))
-    ivf_top = scored.withColumn("rk", F.row_number().over(w_p)).filter(F.col("rk") <= TOPK)
-    # brute reference from the SAME collected probe set (one collect fewer)
-    true_top = _ann_brute_topk_from(e, pids, P).select("probe_id", "neighbor_id")
-    overlap = ivf_top.join(true_top, ["probe_id", "neighbor_id"]).groupBy("probe_id").agg(
-        F.count("*").alias("hits")
-    )
-    # the collected probe ids ARE e.filter(vec_id < N_PROBES)'s id column
-    # (same filter, _collect_vectors sorts ascending) — local relation, no
-    # fourth scan of the table
-    all_probes = local_rows_df(spark, [(int(p),) for p in pids], "probe_id long")
-    return all_probes.join(overlap, "probe_id", "left").select(
-        "probe_id",
-        (F.coalesce(F.col("hits"), F.lit(0)) >= int(TOPK * IVF_RECALL_FLOOR)).alias("recall_ok"),
-    )
-
-
-Q_ANN_IVF_SQL = f"""
-SELECT CAST(vec_id AS BIGINT) AS probe_id, true AS recall_ok
-FROM embeddings WHERE vec_id < {N_PROBES}
-"""
-
-
-# ------------------------------------------------------------- multimodal
-
-
-def q_multimodal_payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Binary-payload plumbing gate: documents re-emitted as opaque byte
-    payloads (the multimodal item shape), with byte length and content md5 —
-    properties the oracle can recompute exactly (DuckDB md5(text) hashes the
-    same UTF-8 bytes Spark's md5(encode(text)) does).  The feature-extraction
-    pandas-UDF stage over the same payloads is covered by
-    tests/test_dataops.py (feature values are library-internal, not
-    SQL-reproducible)."""
-    from hg64spark.multimodal import items_from_documents
-
-    items = items_from_documents(_docs(spark, sf_dir))
-    return items.select(
-        "item_id",
-        "modality",
-        F.length("payload").cast("long").alias("n_bytes"),
-        F.md5("payload").alias("payload_md5"),
-    )
-
-
-Q_MULTIMODAL_SQL = """
-SELECT doc_id AS item_id, 'text' AS modality,
-       CAST(strlen(text) AS BIGINT) AS n_bytes,
-       md5(text) AS payload_md5
-FROM documents
-"""
-
-
-def q_multimodal_image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-codec round-trip gate: per item, synthesize a closed-form
-    RGB image (multimodal.synth_image), encode it to genuine binary PPM
-    bytes, ship the opaque binary column through Spark, decode with the
-    dependency-free P6 parser, and emit integer stats (width, height, exact
-    pixel sum).  The oracle predicts those stats straight from item_id —
-    any bug in either codec direction, the binary plumbing, or the Arrow
-    batch shape breaks the value hash.  This closes the 'decoders are
-    honest stubs' gap: PPM decode is a real parser (comments, whitespace
-    grammar, truncation checks), not a fake."""
-    from hg64spark.multimodal import image_stats, synth_items
-
-    return image_stats(synth_items(_docs(spark, sf_dir), "image"))
-
-
-# closed-form stat prediction; DuckDB's correlated fan-out idiom is a list
-# comprehension over range(n) (generate_series rejects lateral column args)
-Q_MM_IMAGE_SQL = """
-SELECT doc_id AS item_id,
-       CAST(doc_id % 5 + 2 AS BIGINT) AS width,
-       CAST(doc_id % 3 + 2 AS BIGINT) AS height,
-       CAST(list_sum([(doc_id * 31 + i) % 256
-                      FOR i IN range((doc_id % 5 + 2) * (doc_id % 3 + 2) * 3)])
-            AS BIGINT) AS px_sum
-FROM documents WHERE doc_id IS NOT NULL
-"""
-
-
-def q_multimodal_audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL audio-codec round-trip gate: synthesize a closed-form int16
-    waveform per item, encode to genuine RIFF/WAVE PCM bytes, decode with
-    the dependency-free chunk-walking parser, emit (sample_rate, n_samples,
-    exact |amplitude| sum); oracle predicts all three from item_id."""
-    from hg64spark.multimodal import audio_stats, synth_items
-
-    return audio_stats(synth_items(_docs(spark, sf_dir), "audio"))
-
-
-Q_MM_AUDIO_SQL = """
-SELECT doc_id AS item_id,
-       CAST(8000 + (doc_id % 3) * 4000 AS BIGINT) AS sample_rate,
-       CAST(doc_id % 50 + 10 AS BIGINT) AS n_samples,
-       CAST(list_sum([abs((doc_id * 7 + i * 13) % 2048 - 1024)
-                      FOR i IN range(doc_id % 50 + 10)])
-            AS BIGINT) AS amp_sum
-FROM documents WHERE doc_id IS NOT NULL
-"""
-
-
-# ------------------------------------------------------------- registration
-
-def q_text_selfrepeat(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-repetition scoring — the standard quality filter for looped /
-    boilerplate generations: per document, the maximum multiplicity of any
-    word 5-gram within that document, plus the repeated-mass ratio
-    (occurrences of non-unique shingles / total shingles).  Pure integer
-    arithmetic, exact in both engines.  Scale shape: one groupBy on
-    (doc_id, shingle) + one per-doc aggregation — no self-join, no window."""
-    s = raw_shingles(_docs(spark, sf_dir).select("doc_id", "text"))
-    mult = s.groupBy("doc_id", "sh").agg(F.count("*").alias("m"))
-    return mult.groupBy("doc_id").agg(
-        F.max("m").cast("long").alias("max_mult"),
-        F.sum(F.when(F.col("m") > 1, F.col("m")).otherwise(F.lit(0))).cast("long").alias("repeated"),
-        F.sum("m").cast("long").alias("total"),
-    ).select(
-        "doc_id",
-        "max_mult",
-        (F.col("repeated").cast("double") / F.col("total").cast("double")).alias("repeat_ratio"),
-        (F.col("max_mult") >= 3).alias("is_repetitive"),
-    )
-
-
-def _text_selfrepeat_sql() -> str:
-    raw = _raw_shingles_sql("SELECT doc_id, text FROM documents")
-    return f"""
-    WITH mult AS (SELECT doc_id, sh, count(*) AS m FROM ({raw}) GROUP BY 1, 2)
-    SELECT doc_id,
-           CAST(max(m) AS BIGINT) AS max_mult,
-           CAST(sum(CASE WHEN m > 1 THEN m ELSE 0 END) AS DOUBLE)
-               / CAST(sum(m) AS DOUBLE) AS repeat_ratio,
-           max(m) >= 3 AS is_repetitive
-    FROM mult GROUP BY doc_id
-    """
-
-
 #: probe set for the decontamination gate: the first N documents play the
 #: role of a held-out benchmark whose content must not leak into training
 DECON_PROBE_DOCS = 5
@@ -2034,17 +1268,6 @@ def q_decontaminate_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus_sh = raw_shingles(c.filter(F.col("doc_id") >= DECON_PROBE_DOCS))
     hits = corpus_sh.join(F.broadcast(probe_sh), "sh").select("doc_id", "sh").distinct()
     return hits.groupBy("doc_id").agg(F.count("*").alias("n_overlap"))
-
-
-def _decontaminate_sql() -> str:
-    return f"""
-    WITH sh AS ({_shingles_sql(AUGMENTED_SQL)}),
-    probe AS (SELECT DISTINCT sh FROM sh WHERE doc_id < {DECON_PROBE_DOCS})
-    SELECT s.doc_id, count(*) AS n_overlap
-    FROM sh s JOIN probe p ON p.sh = s.sh
-    WHERE s.doc_id >= {DECON_PROBE_DOCS}
-    GROUP BY s.doc_id
-    """
 
 
 #: sizing hint for the decontamination Bloom — at production this comes from
@@ -2202,28 +1425,6 @@ def q_decontaminate_neardup_bloom(spark: SparkSession, sf_dir: str) -> DataFrame
     return _probe_jaccard_flags(corpus_sh, survivors, probe_sh)
 
 
-def _decontaminate_neardup_sql() -> str:
-    ks = _keyed_shingles_sql(AUGMENTED_SQL, hashed=True)
-    p = DECON_PROBE_DOCS
-    jac = "CAST(i.c AS DOUBLE) / CAST(na.na + nb.nb - i.c AS DOUBLE)"
-    return f"""
-    WITH ks AS ({ks}),
-    probe AS (SELECT doc_id AS probe_id, sh FROM ks WHERE doc_id < {p}),
-    corp AS (SELECT doc_id, sh FROM ks WHERE doc_id >= {p}),
-    na AS (SELECT doc_id, count(*) AS na FROM corp GROUP BY 1),
-    nb AS (SELECT probe_id, count(*) AS nb FROM probe GROUP BY 1),
-    inter AS (
-        SELECT c.doc_id, p.probe_id, count(*) AS c
-        FROM corp c JOIN probe p ON c.sh = p.sh GROUP BY 1, 2
-    )
-    SELECT i.doc_id, i.probe_id, {jac} AS jaccard
-    FROM inter i
-    JOIN na ON na.doc_id = i.doc_id
-    JOIN nb ON nb.probe_id = i.probe_id
-    WHERE {jac} >= {DECON_NEARDUP_TAU}
-    """
-
-
 # --------------------------------------------- chunking / fixed-K sampling
 
 #: chunk geometry for the gate: 64-token windows advancing 32 tokens, so
@@ -2279,30 +1480,6 @@ def chunk_documents(
     )
 
 
-def q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chunking gate over the documents table (see :func:`chunk_documents`);
-    the oracle reproduces the identical 1-based slices with a positional
-    struct-comprehension unnest."""
-    return chunk_documents(_docs(spark, sf_dir))
-
-
-def _chunk_documents_sql() -> str:
-    c, s = CHUNK_TOKENS, CHUNK_STRIDE
-    max_i = (
-        f"CASE WHEN len(l) > {c} "
-        f"THEN LEAST((len(l) - {c} + {s} - 1) // {s}, (len(l) - 1) // {s}) "
-        f"ELSE 0 END"
-    )
-    return f"""
-    SELECT doc_id,
-           CAST(u.i AS BIGINT) AS chunk_idx,
-           array_to_string(l[u.i * {s} + 1 : u.i * {s} + {c}], ' ') AS chunk_text,
-           CAST(len(l[u.i * {s} + 1 : u.i * {s} + {c}]) AS BIGINT) AS n_chunk_tokens
-    FROM (SELECT doc_id, string_split(text, ' ') AS l FROM documents WHERE text IS NOT NULL),
-         unnest([{{'i': i}} FOR i IN range(0, ({max_i}) + 1)]) AS t(u)
-    """
-
-
 #: fixed-size per-language sample: eval carve-outs and audits want "exactly
 #: K docs per language, uniform, reproducible" — rank by md5(doc_id) (a
 #: deterministic uniform order) and keep the K smallest per language
@@ -2326,22 +1503,6 @@ def sample_fixed_k(docs: DataFrame, k: int = SAMPLE_FIXED_K) -> DataFrame:
     return salted_topk(d, "lang", [F.asc("h"), F.asc("doc_id")], "doc_id", k).select(
         "lang", "doc_id"
     )
-
-
-def q_sample_fixed_k_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-K uniform per-language sample gate (see :func:`sample_fixed_k`)."""
-    return sample_fixed_k(_docs(spark, sf_dir))
-
-
-def _sample_fixed_k_sql() -> str:
-    return f"""
-    SELECT lang, doc_id FROM (
-        SELECT lang, doc_id,
-               row_number() OVER (PARTITION BY lang
-                                  ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS rk
-        FROM documents WHERE doc_id IS NOT NULL
-    ) WHERE rk <= {SAMPLE_FIXED_K}
-    """
 
 
 # --------------------------------------------------- token-budget packing
@@ -2415,36 +1576,6 @@ def pack_token_shards(docs: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     )
 
 
-def q_pack_token_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token-budget packing gate over the documents table (see
-    :func:`pack_token_shards`); oracle = one SQL running-total window over
-    the same md5 order, integer-exact in both engines."""
-    return pack_token_shards(_docs(spark, sf_dir))
-
-
-def _pack_token_shards_sql(src: str = "documents") -> str:
-    """Pack oracle over any SQL relation exposing (doc_id, text) — the
-    composed chunk->pack gate passes the chunk CTE as ``src``."""
-    return f"""
-    WITH d AS (
-        SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               md5(CAST(doc_id AS VARCHAR)) AS h
-        FROM {src} WHERE text IS NOT NULL AND doc_id IS NOT NULL
-    ),
-    c AS (
-        SELECT doc_id, n_tokens,
-               sum(n_tokens) OVER (ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) AS cum
-        FROM d
-    )
-    -- the windowed sum(BIGINT) is a DuckDB HUGEINT and // keeps it; pandas
-    -- materializes HUGEINT as float64, so without this cast the driver's
-    -- value hash sees 62.0 vs Spark's 62 (the round-5 red row)
-    SELECT doc_id, n_tokens,
-           CAST((cum - n_tokens) // {PACK_BUDGET} AS BIGINT) AS shard_id
-    FROM c
-    """
-
-
 def text_novelty(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, n_grams, n_novel, novelty): fraction of a document's
     DISTINCT word k-grams that appear in NO other document — the
@@ -2482,29 +1613,6 @@ def text_novelty(docs: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     )
 
 
-def q_text_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-novelty gate over the documents table (see
-    :func:`text_novelty`); oracle = the same hashed-shingle df/join in
-    SQL."""
-    return text_novelty(_docs(spark, sf_dir))
-
-
-def _text_novelty_sql() -> str:
-    s = _keyed_shingles_sql("SELECT doc_id, text FROM documents", hashed=True)
-    return f"""
-    WITH s AS ({s}),
-    d AS (SELECT sh, count(*) AS df FROM s GROUP BY 1),
-    p AS (
-        SELECT s.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-               CAST(sum(CASE WHEN d.df = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_novel
-        FROM s JOIN d ON s.sh = d.sh GROUP BY 1
-    )
-    SELECT doc_id, n_grams, n_novel,
-           CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE) AS novelty
-    FROM p
-    """
-
-
 def ref_coverage(docs: DataFrame, ref: DataFrame, k: int = SHINGLE_K) -> DataFrame:
     """(doc_id, n_grams, n_seen, seen_frac): for every incoming document,
     the fraction of its DISTINCT word k-grams already present ANYWHERE in a
@@ -2535,9 +1643,8 @@ def ref_coverage_from_hashed(probe: DataFrame, refstream: DataFrame) -> DataFram
     """:func:`ref_coverage` over already-hashed gram streams — probe as
     ``(doc_id, hh)``, reference as ``(hh)``, duplicates allowed on both
     (each side is reduced to its distinct set here).  The retained-stream
-    entry point `jobs/intake_corpus.py` shares with
-    `corpus_minhash_sim_from_hashed` so both corpora are tokenized and
-    hashed exactly once."""
+    entry point, shared in shape with `corpus_minhash_sim_from_hashed`, so
+    a caller that needs both tokenizes and hashes each corpus once."""
     probe = probe.select("doc_id", "hh").distinct()
     refset = (
         refstream.select("hh").distinct().withColumn("__hit", F.lit(1).cast("long"))
@@ -2558,36 +1665,6 @@ def ref_coverage_from_hashed(probe: DataFrame, refstream: DataFrame) -> DataFram
             "seen_frac"
         ),
     )
-
-
-def q_text_ref_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reference-coverage gate: the derived next snapshot
-    (`_diff_new_snapshot`: edits, fresh copies, survivors) scored against
-    the CURRENT documents table — 'removed' docs' grams still count as
-    seen (they are in the reference), edited docs score high-but-<1,
-    copied docs score 1.0.  Oracle = the same hashed-gram set join in
-    SQL."""
-    docs = _docs(spark, sf_dir).select("doc_id", "text")
-    return ref_coverage(_diff_new_snapshot(docs), docs)
-
-
-def _text_ref_coverage_sql() -> str:
-    probe = _keyed_shingles_sql(_diff_new_snapshot_sql(), hashed=True)
-    ref = _keyed_shingles_sql("SELECT doc_id, text FROM documents", hashed=True)
-    return f"""
-    WITH base AS (SELECT doc_id, text FROM documents),
-    p AS ({probe}),
-    r AS (SELECT DISTINCT sh FROM ({ref})),
-    agg AS (
-        SELECT p.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-               CAST(sum(CASE WHEN r.sh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-                   AS n_seen
-        FROM p LEFT JOIN r ON p.sh = r.sh GROUP BY 1
-    )
-    SELECT doc_id, n_grams, n_seen,
-           CAST(n_seen AS DOUBLE) / CAST(n_grams AS DOUBLE) AS seen_frac
-    FROM agg
-    """
 
 
 #: curriculum-binning quantile grid: 3 thresholds -> 4 difficulty bins
@@ -2640,32 +1717,6 @@ def q_curriculum_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     thresholds with the exact SQL sketch math and applies the same
     binning rule."""
     return curriculum_bins(_docs(spark, sf_dir))
-
-
-def _curriculum_bins_sql() -> str:
-    from hg64spark import sqloracle
-
-    base = (
-        "SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS v "
-        "FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL"
-    )
-    thr = sqloracle.quantiles_sql(base, "v", 5, list(CURRICULUM_QS))
-    cases = " + ".join(
-        f"CASE WHEN n_tokens > one.t{i} THEN 1 ELSE 0 END"
-        for i in range(len(CURRICULUM_QS))
-    )
-    tsel = ", ".join(
-        f"max(CASE WHEN q = {float(q)!r} THEN value END) AS t{i}"
-        for i, q in enumerate(CURRICULUM_QS)
-    )
-    return f"""
-    WITH thr AS ({thr}),
-    one AS (SELECT {tsel} FROM thr),
-    d AS (SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-          FROM documents WHERE text IS NOT NULL AND doc_id IS NOT NULL)
-    SELECT d.doc_id, d.n_tokens, CAST({cases} AS BIGINT) AS bin
-    FROM d CROSS JOIN one
-    """
 
 
 # ------------------------------------------------------------ PII scrubbing
@@ -2743,38 +1794,6 @@ def q_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
     return scrub_pii(_pii_planted(_docs(spark, sf_dir)))
 
 
-def _scrub_pii_sql() -> str:
-    (u_name, u_pat, u_rep), (e_name, e_pat, e_rep), (i_name, i_pat, i_rep) = PII_PATTERNS
-    return f"""
-    WITH planted AS (
-        SELECT doc_id,
-               text
-               || CASE WHEN doc_id % 7 = 0 THEN ' see https://host' || CAST(doc_id AS VARCHAR)
-                       || '.example.org/p/' || CAST(doc_id AS VARCHAR) ELSE '' END
-               || CASE WHEN doc_id % 11 = 0 THEN ' contact user' || CAST(doc_id AS VARCHAR)
-                       || '@example.com' ELSE '' END
-               || CASE WHEN doc_id % 13 = 0 THEN ' ref 123-45-6789' ELSE '' END AS text
-        FROM documents
-    ),
-    s1 AS (
-        SELECT doc_id,
-               CAST(len(regexp_extract_all(text, '{u_pat}')) AS BIGINT) AS n_{u_name},
-               regexp_replace(text, '{u_pat}', '{u_rep}', 'g') AS t1
-        FROM planted
-    ),
-    s2 AS (
-        SELECT doc_id, n_{u_name},
-               CAST(len(regexp_extract_all(t1, '{e_pat}')) AS BIGINT) AS n_{e_name},
-               regexp_replace(t1, '{e_pat}', '{e_rep}', 'g') AS t2
-        FROM s1
-    )
-    SELECT doc_id, n_{u_name}, n_{e_name},
-           CAST(len(regexp_extract_all(t2, '{i_pat}')) AS BIGINT) AS n_{i_name},
-           regexp_replace(t2, '{i_pat}', '{i_rep}', 'g') AS clean
-    FROM s2
-    """
-
-
 # ------------------------------------------------- recency-decayed top-K
 
 #: age-bucket width for the decayed frequency ranking (2 days: the test
@@ -2837,29 +1856,6 @@ def q_decayed_topk_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     return decayed_topk_users(io.read_table(spark, sf_dir, "events"))
 
 
-def _decayed_topk_users_sql() -> str:
-    return f"""
-    WITH mx AS (SELECT max(ts) AS mx FROM events),
-    aged AS (
-        SELECT user_id,
-               (epoch_us(mx.mx) - epoch_us(ts)) // {DECAY_BUCKET_US} AS age
-        FROM events, mx WHERE user_id IS NOT NULL
-    ),
-    w AS (
-        SELECT user_id,
-               -- outer CAST: DuckDB widens sum(BIGINT) to HUGEINT, which
-               -- pandas materializes as float64/object and the driver's
-               -- dtype-sensitive hash rejects against Spark's int64
-               CAST(sum(CASE WHEN age <= {DECAY_HORIZON}
-                             THEN CAST(1 AS BIGINT) << CAST({DECAY_HORIZON} - age AS INT)
-                             ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS decayed
-        FROM aged GROUP BY 1
-    )
-    SELECT user_id, decayed FROM w WHERE decayed > 0
-    ORDER BY decayed DESC, user_id ASC LIMIT {DECAY_TOPK}
-    """
-
-
 # ------------------------------------------------- corpus snapshot diffing
 
 def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -2881,9 +1877,8 @@ def corpus_diff(old: DataFrame, new: DataFrame) -> DataFrame:
     join's null-rejecting equality matches NOTHING for them, so an
     unchanged NULL-id document would be DOUBLE-COUNTED as a simultaneous
     'removed' + 'added' pair (not dropped) — downstream would retract it
-    and re-ingest it.  Both shipped entry points (`q_corpus_diff`,
-    `jobs/diff_corpus.py`) filter/refuse NULL ids up front; do the same
-    before calling this directly."""
+    and re-ingest it.  `q_corpus_diff` filters NULL ids up front; do the
+    same before calling this directly."""
     h = lambda df: df.select(  # noqa: E731
         "doc_id", F.substring(F.md5(F.col("text")), 1, 16).alias("h")
     )
@@ -2932,40 +1927,6 @@ def q_corpus_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_diff(docs, _diff_new_snapshot(docs))
 
 
-def _diff_new_snapshot_sql() -> str:
-    """SQL twin of :func:`_diff_new_snapshot` over the `base` CTE — ONE
-    definition shared by every oracle that derives the next snapshot, so
-    the planted churn arithmetic cannot drift between gates."""
-    return f"""
-        SELECT doc_id,
-               CASE WHEN doc_id % 3 = 0 THEN text || ' [edited]' ELSE text END AS text
-        FROM base WHERE doc_id % 5 <> 0
-        UNION ALL
-        SELECT doc_id + {PLANT_OFFSET} AS doc_id, text FROM base WHERE doc_id % 4 = 0
-    """
-
-
-def _corpus_diff_sql() -> str:
-    return f"""
-    WITH base AS (SELECT doc_id, text FROM documents WHERE doc_id IS NOT NULL),
-    new AS ({_diff_new_snapshot_sql()}),
-    o AS (SELECT doc_id, substr(md5(text), 1, 16) AS oh FROM base),
-    n AS (SELECT doc_id, substr(md5(text), 1, 16) AS nh FROM new),
-    j AS (
-        SELECT o.doc_id AS odoc, n.doc_id AS ndoc, oh, nh
-        FROM o FULL OUTER JOIN n ON o.doc_id = n.doc_id
-    )
-    SELECT COALESCE(odoc, ndoc) AS doc_id,
-           CASE WHEN odoc IS NULL THEN 'added'
-                WHEN ndoc IS NULL THEN 'removed'
-                WHEN oh IS DISTINCT FROM nh THEN 'changed' END AS status
-    FROM j
-    WHERE CASE WHEN odoc IS NULL THEN 'added'
-               WHEN ndoc IS NULL THEN 'removed'
-               WHEN oh IS DISTINCT FROM nh THEN 'changed' END IS NOT NULL
-    """
-
-
 #: sigbits for the calibration gate's reference histogram
 CALIB_SIGBITS = 5
 
@@ -2994,56 +1955,6 @@ def q_calibrate_new_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "n_tokens", "ref_rank", "ref_pct")
 
 
-def _calibrate_new_docs_sql() -> str:
-    from hg64spark import sqloracle
-
-    sb = CALIB_SIGBITS
-    nk = (64 - sb + 1) * (1 << sb)
-    k_v = sqloracle.key_expr("b.n_tokens", sb)
-    mn = sqloracle.minval_expr("c.k", sb)
-    mx = sqloracle.maxval_expr("c.k", sb)
-    return f"""
-    WITH base AS (
-        SELECT doc_id, text FROM documents
-        WHERE doc_id IS NOT NULL AND text IS NOT NULL
-    ),
-    oldt AS (SELECT CAST(len(string_split(text, ' ')) AS BIGINT) AS v FROM base),
-    newt AS (
-        SELECT doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        FROM ({_diff_new_snapshot_sql()})
-    ),
-    refc AS (
-        SELECT {sqloracle.key_expr('v', sb)} AS k, count(*) AS cnt
-        FROM oldt WHERE v IS NOT NULL GROUP BY 1
-    ),
-    dense AS (
-        SELECT gs.k, COALESCE(refc.cnt, 0) AS cnt
-        FROM (SELECT unnest(range(0, {nk})) AS k) gs
-        LEFT JOIN refc ON refc.k = gs.k
-    ),
-    cum AS (
-        SELECT k, cnt,
-               coalesce(sum(cnt) OVER (ORDER BY k
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb,
-               sum(cnt) OVER () AS pop
-        FROM dense
-    )
-    SELECT b.doc_id, b.n_tokens,
-           CAST(c.cb + CASE WHEN {mx} = {mn} THEN c.cnt
-                ELSE trunc(CAST(c.cnt AS DOUBLE)
-                           * (CAST(b.n_tokens - {mn} AS DOUBLE)
-                              / CAST({mx} - {mn} AS DOUBLE)))
-                END AS BIGINT) AS ref_rank,
-           CAST(CAST(c.cb + CASE WHEN {mx} = {mn} THEN c.cnt
-                ELSE trunc(CAST(c.cnt AS DOUBLE)
-                           * (CAST(b.n_tokens - {mn} AS DOUBLE)
-                              / CAST({mx} - {mn} AS DOUBLE)))
-                END AS BIGINT) AS DOUBLE) / CAST(c.pop AS DOUBLE) AS ref_pct
-    FROM newt b JOIN cum c ON {k_v} = c.k
-    WHERE b.n_tokens IS NOT NULL
-    """
-
-
 # ------------------------------------ corpus-level MinHash similarity
 
 #: Mersenne prime for the SQL-portable permutation family: every product in
@@ -3051,18 +1962,6 @@ def _calibrate_new_docs_sql() -> str:
 #: arithmetic in both Spark and DuckDB (no xxhash64 on the oracle side)
 MHSIM_P = (1 << 31) - 1
 MHSIM_N = 64
-
-
-def _mhsim_perm_expr() -> str:
-    """The shared permutation-family expression (Spark SQL == DuckDB SQL on
-    BIGINTs): h_i = (a_i * (hh % P) + b_i) % P with a_i in [1, P-1].
-    Parameterized only by the permutation index column ``i`` the caller
-    binds (sequence/range up to its own n_perm)."""
-    p, p1 = MHSIM_P, MHSIM_P - 1
-    return (
-        f"((CAST(i AS BIGINT) * 1103515245) % {p1} + 1) * (hh % {p}) "
-        f"+ (CAST(i AS BIGINT) * 2654435761) % {p}"
-    )
 
 
 def corpus_minhash_sim(
@@ -3109,7 +2008,6 @@ def corpus_minhash_sim_from_hashed(
     """:func:`corpus_minhash_sim` over an already-hashed ``(g, hh)`` shingle
     stream — the retained-stream entry point (the `_from_counts` pattern):
     a caller that also needs the hashed shingles for another operator (e.g.
-    `jobs/intake_corpus.py`, which feeds the same stream to
     `ref_coverage_from_hashed`) pays for tokenize+shingle+md5 ONCE.  The
     stream may contain duplicates (MIN is duplicate-insensitive)."""
     return corpus_minhash_sim_from_sigs(
@@ -3173,36 +2071,6 @@ def corpus_minhash_sim_from_sigs(sig: DataFrame, n_perm: int = MHSIM_N) -> DataF
     )
 
 
-def q_corpus_minhash_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Source-overlap gate: pairwise corpus-level MinHash similarity between
-    the documents table's `source` groups; the oracle rebuilds the exact
-    same signatures in SQL (shared md5-prefix hash + mod-p affine perms)."""
-    return corpus_minhash_sim(_docs(spark, sf_dir), "source")
-
-
-def _corpus_minhash_sim_sql() -> str:
-    n, p = MHSIM_N, MHSIM_P
-    return f"""
-    WITH sh AS (
-        SELECT doc_id AS g, sh FROM (
-            {_raw_shingles_sql("(SELECT source AS doc_id, text FROM documents WHERE source IS NOT NULL)")}
-        )
-    ),
-    hashed AS (SELECT g, {_TOKHASH_SQL.format(x='sh')} AS hh FROM sh),
-    perms AS (SELECT unnest(range(0, {n})) AS i),
-    sig AS (
-        SELECT g, i, min(({_mhsim_perm_expr()}) % {p}) AS m
-        FROM hashed, perms GROUP BY 1, 2
-    )
-    SELECT a.g AS g_a, b.g AS g_b,
-           CAST(sum(CASE WHEN a.m = b.m THEN 1 ELSE 0 END) AS BIGINT) AS matches,
-           CAST(CAST(sum(CASE WHEN a.m = b.m THEN 1 ELSE 0 END) AS BIGINT)
-                AS DOUBLE) / {float(n)} AS jaccard_est
-    FROM sig a JOIN sig b ON a.i = b.i AND a.g < b.g
-    GROUP BY 1, 2
-    """
-
-
 # ----------------------------------------- mixture rebalancing sampler
 
 #: mixture-sampler bucket domain: 2^20 buckets give rate quantization of
@@ -3213,8 +2081,7 @@ MIX_M = 1 << 20
 
 def _mix_bucket(id_col):
     """Deterministic [0, MIX_M) bucket: hash60('mix:' || id) — the
-    :func:`sample_bucket` idiom at mixture resolution.  DuckDB mirror in
-    :func:`_sample_to_mixture_sql`; change both or neither."""
+    :func:`sample_bucket` idiom at mixture resolution."""
     return (
         _tokhash_spark(F.concat(F.lit("mix:"), F.col(id_col).cast("string")))
         % MIX_M
@@ -3352,40 +2219,6 @@ def q_sample_mixture_langs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sample_to_mixture_sql() -> str:
-    m = MIX_M
-    tgt_rows = ", ".join(
-        f"('{g}', CAST({float(t)} AS DOUBLE))" for g, t in sorted(MIX_TARGET.items())
-    )
-    # || not concat: DuckDB's concat() SKIPS NULL arguments, so a NULL
-    # doc_id would hash as 'mix:' instead of NULL — || propagates NULL
-    # like Spark's concat does (the scrub_pii oracle lesson)
-    bucket = _TOKHASH_SQL.format(x="('mix:' || CAST(doc_id AS VARCHAR))")
-    return f"""
-    WITH tgt(lang, t) AS (VALUES {tgt_rows}),
-    counts AS (
-        SELECT d.lang, count(*) AS n, any_value(t.t) AS t
-        FROM documents d JOIN tgt t ON d.lang = t.lang
-        WHERE d.lang IS NOT NULL GROUP BY 1
-    ),
-    ranked AS (
-        SELECT lang, n, t,
-               row_number() OVER (ORDER BY t / CAST(n AS DOUBLE) DESC, lang) AS rn
-        FROM counts
-    ),
-    thresh AS (
-        SELECT r.lang,
-               CAST(floor({float(m)} * ((r.t * b.nb) / (b.tb * CAST(r.n AS DOUBLE))))
-                    AS BIGINT) AS th
-        FROM ranked r,
-             (SELECT t AS tb, CAST(n AS DOUBLE) AS nb FROM ranked WHERE rn = 1) b
-    )
-    SELECT d.doc_id, d.lang
-    FROM documents d JOIN thresh t ON d.lang = t.lang
-    WHERE ({bucket}) % {m} < t.th
-    """
-
-
 # ------------------------------------- per-group feature standardization
 
 #: row-emission sample for the normalization gate (stats are computed over
@@ -3461,100 +2294,12 @@ def q_znorm_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.filter(F.col("l_orderkey") % ZNORM_EMIT_MOD == 0)
 
 
-def _znorm_lineitem_sql() -> str:
-    return f"""
-    WITH stats AS (
-        SELECT l_returnflag, l_linestatus,
-               count(CAST(l_quantity AS BIGINT)) AS n,
-               sum(CAST(l_quantity AS BIGINT)) AS s,
-               sum(CAST(l_quantity AS BIGINT) * CAST(l_quantity AS BIGINT)) AS ss
-        FROM lineitem GROUP BY 1, 2
-    )
-    SELECT l.l_orderkey, l.l_linenumber, l.l_returnflag, l.l_linestatus,
-           CAST(l.l_quantity AS BIGINT) AS v,
-           CAST(CAST(l.l_quantity AS BIGINT) * st.n - st.s AS DOUBLE)
-             / nullif(sqrt(CAST(st.n * st.ss - st.s * st.s AS DOUBLE)), 0.0) AS z
-    FROM lineitem l
-    JOIN stats st USING (l_returnflag, l_linestatus)
-    WHERE l.l_orderkey % {ZNORM_EMIT_MOD} = 0
-    """
-
-
-def chunked_pack_units(
-    docs: DataFrame, chunk_tokens: int = CHUNK_TOKENS, stride: int = CHUNK_STRIDE
-) -> DataFrame:
-    """Chunk documents and re-shape the chunks as packing units under the
-    composite id "<source_doc_id>#<chunk_idx>" — THE single definition of
-    the chunk->pack unit layout, shared by the driver gate
-    (`q_pack_chunked_corpus`) and the production job
-    (`jobs/pack_corpus.py`) so the gated computation and the job's output
-    cannot drift.  Recover the parts with rsplit('#', 1): unambiguous even
-    when source ids contain '#' (chunk_idx is the final all-digit
-    segment)."""
-    chunks = chunk_documents(docs, chunk_tokens, stride)
-    return chunks.select(
-        F.concat_ws(
-            "#", F.col("doc_id").cast("string"), F.col("chunk_idx").cast("string")
-        ).alias("doc_id"),
-        F.col("chunk_text").alias("text"),
-    )
-
-
-def q_pack_chunked_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPOSED gate for the chunk->pack production path
-    (`jobs/pack_corpus.py --chunk-tokens`): overlapping chunking fans every
-    document into context windows, each chunk becomes a packing unit under
-    the composite id "<doc>#<chunk>" (`chunked_pack_units` — the same
-    helper the job calls), and the two-level prefix-sum packing assigns
-    shards — the whole chain mirrored in one nested-CTE oracle, so the
-    job's end-to-end arithmetic (composite id layout order included) is
-    driver-gated, not just spark-submit-smoked."""
-    docs = _docs(spark, sf_dir).filter(F.col("doc_id").isNotNull())
-    return pack_token_shards(chunked_pack_units(docs))
-
-
-def _pack_chunked_corpus_sql() -> str:
-    chunk_sql = _chunk_documents_sql()
-    # NULL source ids filtered AFTER chunking (chunking is per-doc, so the
-    # set is identical to the Spark side's pre-filter)
-    units = (
-        "(SELECT concat_ws('#', CAST(doc_id AS VARCHAR), CAST(chunk_idx AS VARCHAR)) AS doc_id, "
-        f"chunk_text AS text FROM ({chunk_sql}) WHERE doc_id IS NOT NULL)"
-    )
-    return _pack_token_shards_sql(src=units)
-
-
 # ------------------------------------- exact-substring spans / clustering
 
 #: minimum repeated-substring length in TOKENS for span dedup (the
 #: ExactSubstr dedup shape: production systems use ~50 BPE tokens; the gate
 #: corpus' docs are short, so the gate uses 8 words)
 SUBSTR_L = 8
-
-
-def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-corpus exact-substring span dedup: every maximal token span
-    covered by word ``SUBSTR_L``-grams that occur >= 2 times in the corpus
-    (across docs OR within one doc) is reported as (doc_id, span_start,
-    span_end), 1-based inclusive token indices.  This is the
-    suffix-array-style "remove any repeated >= L-token substring" operator
-    of training-data dedup pipelines, re-expressed relationally:
-
-      1. positional L-gram occurrences, keyed by the 60-bit md5-prefix hash
-         (8-byte shuffle keys; the hash is oracle-mirrored, so
-         "repeated" is DEFINED over the hashed space in both engines);
-      2. duplicated keys = one groupBy with map-side combine (the count
-         stream shrinks to distinct keys per partition before shuffling),
-         then a left-semi join prunes the occurrence stream;
-      3. surviving start positions merge into maximal spans per doc with a
-         gaps-and-islands window (bounded by doc length — never a
-         corpus-wide sort).
-
-    Scale shape: two Exchanges of the occurrence stream (the groupBy's
-    combined key stream + the semi-join), one bounded per-doc window.  A
-    corpus-wide repeated-substring pass is inherently a full-shingle
-    shuffle; this is the minimal-shuffle relational form of it."""
-    return substring_spans(augmented_corpus(spark, sf_dir))
 
 
 def substring_spans(c: DataFrame, l: int = SUBSTR_L) -> DataFrame:
@@ -3591,36 +2336,6 @@ def substring_spans(c: DataFrame, l: int = SUBSTR_L) -> DataFrame:
         )
         .select("doc_id", "span_start", "span_end")
     )
-
-
-def _dedup_substring_sql() -> str:
-    l = SUBSTR_L
-    return f"""
-    WITH occ AS (
-      SELECT doc_id, u.pos AS start, {_TOKHASH_SQL.format(x="u.sh")} AS hh
-      FROM (SELECT doc_id,
-                   unnest([{{'pos': i, 'sh': array_to_string(l[i:i+{l - 1}], ' ')}}
-                           FOR i IN range(1, len(l) - {l - 2})]) AS u
-            FROM (SELECT doc_id, string_split(text,' ') AS l FROM ({AUGMENTED_SQL})
-                  WHERE len(string_split(text,' ')) >= {l}))
-    ),
-    starts AS (
-      SELECT doc_id, start FROM occ
-      WHERE hh IN (SELECT hh FROM occ GROUP BY hh HAVING count(*) >= 2)
-    ),
-    marked AS (
-      SELECT doc_id, start,
-             CASE WHEN start - lag(start) OVER (PARTITION BY doc_id ORDER BY start) <= {l}
-                  THEN 0 ELSE 1 END AS brk
-      FROM starts),
-    islands AS (
-      SELECT doc_id, start,
-             sum(brk) OVER (PARTITION BY doc_id ORDER BY start ROWS UNBOUNDED PRECEDING) AS island
-      FROM marked)
-    SELECT doc_id, CAST(min(start) AS BIGINT) AS span_start,
-           CAST(max(start) + {l - 1} AS BIGINT) AS span_end
-    FROM islands GROUP BY doc_id, island
-    """
 
 
 def q_dedup_substring_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3667,28 +2382,6 @@ def substring_rewrite(c: DataFrame, l: int = SUBSTR_L) -> DataFrame:
         .otherwise(F.expr("CAST(size(split(text, ' ')) - size(__kept) AS BIGINT)"))
         .alias("n_removed"),
     )
-
-
-def _dedup_substring_rewrite_sql() -> str:
-    return f"""
-    WITH spans AS ({_dedup_substring_sql()}),
-    sp AS (SELECT doc_id, list({{'a': span_start, 'b': span_end}}) AS sps
-           FROM spans GROUP BY doc_id),
-    docs AS (SELECT doc_id, text, string_split(text, ' ') AS l FROM ({AUGMENTED_SQL}))
-    SELECT d.doc_id,
-           CASE WHEN sp.sps IS NULL THEN d.text
-                -- COALESCE: DuckDB's array_to_string yields NULL for the
-                -- all-tokens-removed case where Spark's array_join yields ''
-                ELSE COALESCE(array_to_string(
-                  [d.l[i] FOR i IN range(1, len(d.l) + 1)
-                   IF len(list_filter(sp.sps, x -> i >= x.a AND i <= x.b)) = 0], ' '), '')
-           END AS clean_text,
-           CASE WHEN sp.sps IS NULL THEN 0
-                ELSE len(d.l) - len([i FOR i IN range(1, len(d.l) + 1)
-                                     IF len(list_filter(sp.sps, x -> i >= x.a AND i <= x.b)) = 0])
-           END AS n_removed
-    FROM docs d LEFT JOIN sp ON sp.doc_id = d.doc_id
-    """
 
 
 def _unpersist_checkpoint(df: DataFrame) -> None:
@@ -4025,25 +2718,6 @@ def q_dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return connected_components_min_label(pairs, normalized=True)
 
 
-def _dedup_cluster_sql() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({_jaccard_pairs_sql(AUGMENTED_SQL, hashed=True)})
-      WHERE jaccard >= {NEARDUP_TAU}
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    reach(src, node) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.node
-    )
-    SELECT src AS doc_id, min(node) AS canonical_id FROM reach GROUP BY src
-    """
-
-
 def dedup_keep_best(corpus: DataFrame, pairs: DataFrame | None = None) -> DataFrame:
     """(doc_id, canonical_id, survivor_id): quality-aware survivor
     selection — "keep the BEST doc per near-dup cluster, not the first".
@@ -4099,66 +2773,6 @@ def dedup_keep_best(corpus: DataFrame, pairs: DataFrame | None = None) -> DataFr
     return out
 
 
-def keepbest_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents plus a DEGRADED near-duplicate planted BELOW each
-    original's id (last 3 tokens dropped, doc_id - PLANT_OFFSET — negative,
-    collision-free).  With the copy as the cluster's MIN id, keep-first
-    dedup would keep the degraded copy; survivor selection disagrees with
-    canonicalization exactly where the truncation changed the DISTINCT
-    token count (dropped tokens that also occur earlier leave n_types
-    unchanged -> tie -> min id wins).  Verified at authoring time:
-    225/476 clusters at sf0.001 (239/500 docs lose types), ~half at
-    sf0.01 — the quality argmax is exercised by hundreds of real
-    clusters, not decorative."""
-    return augmented_corpus(spark, sf_dir, offset=-PLANT_OFFSET)
-
-
-KEEPBEST_SQL = _augmented_sql(offset=-PLANT_OFFSET)
-
-
-def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quality-aware dedup survivor selection over a corpus whose planted
-    duplicates hold the cluster-min ids: canonical_id (keep-first) and
-    survivor_id (keep-best) must disagree on every planted cluster.
-    Oracle: the dedup_cluster recursive-CTE components plus the same
-    two-aggregation argmax."""
-    return dedup_keep_best(keepbest_corpus(spark, sf_dir))
-
-
-def _dedup_keep_best_sql() -> str:
-    return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT doc_a, doc_b FROM ({_jaccard_pairs_sql(KEEPBEST_SQL, hashed=True)})
-      WHERE jaccard >= {NEARDUP_TAU}
-    ),
-    edges AS (
-      SELECT doc_a AS a, doc_b AS b FROM pairs
-      UNION SELECT doc_b AS a, doc_a AS b FROM pairs
-    ),
-    reach(src, node) AS (
-      SELECT a, a FROM edges
-      UNION
-      SELECT r.src, e.b FROM reach r JOIN edges e ON e.a = r.node
-    ),
-    cc AS (SELECT src AS doc_id, min(node) AS canonical_id FROM reach GROUP BY src),
-    corpus AS ({KEEPBEST_SQL}),
-    members AS (
-      SELECT cc.doc_id, cc.canonical_id,
-             CAST(len(list_distinct(string_split(c.text, ' '))) AS BIGINT) AS n_types
-      FROM cc JOIN corpus c ON c.doc_id = cc.doc_id
-    ),
-    best AS (SELECT canonical_id, max(n_types) AS best_n FROM members GROUP BY 1),
-    surv AS (
-      SELECT m.canonical_id, min(m.doc_id) AS survivor_id
-      FROM members m JOIN best b
-        ON b.canonical_id = m.canonical_id AND m.n_types = b.best_n
-      GROUP BY 1
-    )
-    SELECT m.doc_id, m.canonical_id, s.survivor_id
-    FROM members m JOIN surv s ON s.canonical_id = m.canonical_id
-    """
-
-
 # --------------------------------------------- sampling / mixing / scoring
 
 #: per-language sampling rates (percent), the "data mixing" shape of a
@@ -4173,22 +2787,9 @@ SAMPLE_SALT = "smpl:"
 
 def sample_bucket(id_col):
     """The deterministic sampling bucket in [0, 100): hash60(salt || id).
-    ONE definition shared by the operator, its oracle, and
-    ``jobs/curate_corpus.py`` — a drifting copy would silently break the
-    reproducible-across-engines/correlated-on-shared-key guarantee.
-    The DuckDB mirror is :func:`_sample_bucket_sql` — change both or
-    neither."""
+    ONE definition shared by every sampling operator here — a drifting
+    copy would silently break the correlated-on-shared-key guarantee."""
     return _tokhash_spark(F.concat(F.lit(SAMPLE_SALT), F.col(id_col).cast("string"))) % 100
-
-
-def _sample_bucket_sql(key_col: str) -> str:
-    """DuckDB mirror of :func:`sample_bucket`, shared by every sampling
-    oracle so the bucket definition cannot drift between gates."""
-    # || not concat: DuckDB's concat() SKIPS NULL arguments, so a NULL key
-    # would hash as the bare salt (a real bucket) while Spark's concat
-    # propagates NULL and drops the row — || matches Spark's semantics
-    salted = f"('{SAMPLE_SALT}' || CAST({key_col} AS VARCHAR))"
-    return f"({_TOKHASH_SQL.format(x=salted)}) % 100"
 
 
 def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,51 +2807,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", "lang", bucket, rate.alias("rate_pct")).filter(
         F.col("bucket") < F.col("rate_pct")
     )
-
-
-def _sample_stratified_sql() -> str:
-    cases = " ".join(f"WHEN lang = '{lg}' THEN {p}" for lg, p in sorted(SAMPLE_RATES_PCT.items()))
-    return f"""
-    SELECT doc_id, lang, bucket, rate_pct FROM (
-        SELECT doc_id, lang, {_sample_bucket_sql("doc_id")} AS bucket,
-               CASE {cases} ELSE {SAMPLE_DEFAULT_PCT} END AS rate_pct
-        FROM documents
-    ) WHERE bucket < rate_pct
-    """
-
-
-#: keep percentage for the correlated-sampling gate
-SAMPLE_CORR_PCT = 20
-
-
-def q_sample_correlated_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated sampling across tables on a shared key — the property that
-    makes hash-bucket sampling the production shape: sampling ``orders`` at
-    SAMPLE_CORR_PCT% by bucket(o_orderkey) and filtering ``lineitem`` by the
-    SAME bucket expression on l_orderkey keeps every lineitem of every kept
-    order and none of a dropped one, with NO join — each table is filtered
-    independently by a pure map expression.  Output: per kept order, its
-    lineitem count (which only reconciles if the correlation holds)."""
-    li = io.read_table(spark, sf_dir, "lineitem").select("l_orderkey")
-    kept = li.filter(sample_bucket("l_orderkey") < SAMPLE_CORR_PCT)
-    return kept.groupBy(F.col("l_orderkey").alias("orderkey")).agg(
-        F.count("*").alias("n_items")
-    )
-
-
-def _sample_correlated_sql() -> str:
-    # the oracle takes the OTHER route on purpose: sample the orders table,
-    # then join lineitem — identical output iff the bucket expressions
-    # correlate across tables and engines
-    return f"""
-    WITH kept_orders AS (
-        SELECT o_orderkey FROM orders
-        WHERE {_sample_bucket_sql("o_orderkey")} < {SAMPLE_CORR_PCT}
-    )
-    SELECT l.l_orderkey AS orderkey, count(*) AS n_items
-    FROM lineitem l JOIN kept_orders k ON k.o_orderkey = l.l_orderkey
-    GROUP BY 1
-    """
 
 
 #: bucket granularity for temperature mixing (finer than the percent
@@ -4300,68 +2856,6 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_sample_temperature_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temperature mixing weighted by TOKEN budget instead of document
-    count — the quantity a training mix actually allocates: language sizes
-    c_l = total whitespace tokens, rates sqrt(c_min/c_l) (same bit-exact
-    alpha=1/2 argument as :func:`q_sample_temperature`).  A language of
-    few huge documents is downsampled like a language of many small ones."""
-    # text IS NOT NULL in BOTH engines: Spark's size(split(NULL)) is -1
-    # (it would silently shrink a language's token total) while DuckDB's
-    # len(string_split(NULL)) is NULL (skipped by sum) — and a token-less
-    # doc has nothing to contribute to a token-budget mix anyway
-    d = (
-        _docs(spark, sf_dir)
-        .filter(F.col("lang").isNotNull() & F.col("text").isNotNull())
-        .select(
-            "doc_id", "lang", F.size(F.split("text", " ")).cast("long").alias("n_tok")
-        )
-    )
-    counts = d.groupBy("lang").agg(F.sum("n_tok").alias("c"))
-    cmin = counts.agg(F.min("c").alias("cmin"))
-    rates = counts.crossJoin(F.broadcast(cmin)).select(
-        "lang",
-        F.floor(
-            F.lit(float(TEMP_BUCKETS))
-            * F.sqrt(F.col("cmin").cast("double") / F.col("c").cast("double"))
-        )
-        .cast("long")
-        .alias("thr"),
-    )
-    bucket = (
-        _tokhash_spark(F.concat(F.lit(SAMPLE_SALT), F.col("doc_id").cast("string")))
-        % TEMP_BUCKETS
-    )
-    return (
-        d.join(F.broadcast(rates), "lang")
-        .withColumn("bucket", bucket)
-        .filter(F.col("bucket") < F.col("thr"))
-        .select("doc_id", "lang", "bucket", "thr")
-    )
-
-
-def _sample_temperature_sql(token_weighted: bool = False) -> str:
-    salted = f"concat('{SAMPLE_SALT}', CAST(doc_id AS VARCHAR))"
-    bucket = f"({_TOKHASH_SQL.format(x=salted)}) % {TEMP_BUCKETS}"
-    c_expr = (
-        "CAST(sum(len(string_split(text, ' '))) AS BIGINT)" if token_weighted else "count(*)"
-    )
-    text_guard = " AND text IS NOT NULL" if token_weighted else ""
-    return f"""
-    WITH counts AS (SELECT lang, {c_expr} AS c FROM documents
-                    WHERE lang IS NOT NULL{text_guard} GROUP BY lang),
-    m AS (SELECT min(c) AS cmin FROM counts),
-    rates AS (
-      SELECT lang,
-             CAST(floor({TEMP_BUCKETS} * sqrt(CAST(cmin AS DOUBLE) / CAST(c AS DOUBLE))) AS BIGINT) AS thr
-      FROM counts, m
-    )
-    SELECT d.doc_id, d.lang, {bucket} AS bucket, r.thr
-    FROM documents d JOIN rates r ON r.lang = d.lang
-    WHERE {bucket} < r.thr{text_guard}
-    """
-
-
 #: per-language quality quota ("take the N best documents of each language")
 QUOTA_PER_LANG = 50
 
@@ -4381,15 +2875,6 @@ def q_quota_topk_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         d, "lang", [F.desc("n_tokens"), F.asc_nulls_last("doc_id")], "doc_id", QUOTA_PER_LANG
     )
     return kept.select("lang", "doc_id", "n_tokens")
-
-
-Q_QUOTA_TOPK_SQL = f"""
-SELECT lang, doc_id, n_tokens FROM (
-    SELECT lang, doc_id, CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           row_number() OVER (PARTITION BY lang ORDER BY len(string_split(text, ' ')) DESC, doc_id ASC) AS rk
-    FROM documents
-) WHERE rk <= {QUOTA_PER_LANG}
-"""
 
 
 TFIDF_TOPN = 3
@@ -4412,20 +2897,6 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rk") <= TFIDF_TOPN)
         .select("doc_id", F.col("tok").alias("term"), "tf", "df")
     )
-
-
-Q_TFIDF_SQL = f"""
-WITH toks AS (
-    SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-),
-tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-dfreq AS (SELECT tok, count(*) AS df FROM (SELECT DISTINCT doc_id, tok FROM toks) GROUP BY tok)
-SELECT doc_id, tok AS term, tf, df FROM (
-    SELECT tf.doc_id, tf.tok, tf.tf, dfreq.df,
-           row_number() OVER (PARTITION BY tf.doc_id ORDER BY tf.tf DESC, dfreq.df ASC, tf.tok ASC) AS rk
-    FROM tf JOIN dfreq ON dfreq.tok = tf.tok
-) WHERE rk <= {TFIDF_TOPN}
-"""
 
 
 # ------------------------------------------------- sparse keyword retrieval
@@ -4516,251 +2987,3 @@ def q_tfidf_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     table; oracle = the same integer tf·idf_q scoring and total-order
     top-k in SQL."""
     return tfidf_search(_docs(spark, sf_dir).select("doc_id", "text"), SEARCH_QUERIES)
-
-
-def _tfidf_search_sql() -> str:
-    vals = ", ".join(
-        f"('{q}', '{t}')"
-        for q, terms in sorted(SEARCH_QUERIES.items())
-        for t in sorted(set(terms))
-    )
-    return f"""
-    WITH q(query_id, tok) AS (VALUES {vals}),
-    toks AS (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-    ),
-    tf AS (SELECT doc_id, tok, count(*) AS tf FROM toks GROUP BY 1, 2),
-    dfreq AS (
-        SELECT tok, count(*) AS df
-        FROM (SELECT DISTINCT doc_id, tok FROM toks) GROUP BY 1
-    ),
-    n AS (SELECT count(DISTINCT doc_id) AS n_docs FROM documents),
-    idf AS (
-        SELECT tok, (n.n_docs * CAST({IDF_Q} AS BIGINT)) // df AS idf_q
-        FROM dfreq, n
-    ),
-    scored AS (
-        SELECT q.query_id, tf.doc_id,
-               CAST(sum(tf.tf * idf.idf_q) AS BIGINT) AS score,
-               CAST(count(*) AS BIGINT) AS n_matched
-        FROM tf JOIN q ON tf.tok = q.tok JOIN idf ON tf.tok = idf.tok
-        GROUP BY 1, 2
-    )
-    SELECT query_id, doc_id, score, n_matched FROM (
-        SELECT *, row_number() OVER (
-            PARTITION BY query_id ORDER BY score DESC, doc_id ASC
-        ) AS rk FROM scored
-    ) WHERE rk <= {SEARCH_TOPK}
-    """
-
-
-# ------------------------------------------------------ composed pipeline
-
-#: corpus-pipeline gate knobs: thresholds sit inside the test data's observed
-#: ranges (tokens 10..99, stop_ratio ~0.01..0.11) so every stage filters a
-#: real subset; the exact-dup plant offset is distinct from PLANT_OFFSET so
-#: the two augmented corpora can't collide
-PIPE_MIN_TOKENS = 20
-PIPE_MAX_STOP = 0.09
-PIPE_DUP_OFFSET = 1 << 41
-
-
-def q_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END training-data pipeline, one composed DataFrame plan:
-    exact-dedup keep-first (over a corpus with planted exact duplicates) ->
-    quality filter (min tokens, max stopword ratio) -> language-ID ->
-    per-predicted-language token-count hg64 histogram.  Gates that the
-    operators COMPOSE — filters and joins of independently-gated stages
-    produce one Catalyst plan whose result the oracle reproduces
-    bit-for-bit.  Each per-doc stage is a hash-key groupBy or broadcast
-    join; nothing in the chain adds a scale hazard the component gates
-    don't already cover."""
-    from hg64spark import agg
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    dups = d.filter(F.col("doc_id") % 7 == 0).select(
-        (F.col("doc_id") + PIPE_DUP_OFFSET).alias("doc_id"), "text"
-    )
-    corpus = d.unionAll(dups)
-    langid = q_text_langid(spark, sf_dir).select("doc_id", "predicted_lang")
-    kept = curate_corpus(corpus).join(langid, "doc_id")
-    sk = agg.hg64_agg(
-        kept.select("predicted_lang", F.col("n_tokens").alias("v")), "v", ["predicted_lang"], 5
-    )
-    return agg.hg64_buckets(sk, ["predicted_lang"])
-
-
-def curate_corpus(
-    corpus: DataFrame, min_tokens: int = PIPE_MIN_TOKENS, max_stop: float = PIPE_MAX_STOP
-) -> DataFrame:
-    """The curation chain as a library function over any (doc_id, text)
-    corpus: exact-dedup keep-first (min doc_id per content hash) + quality
-    filter (token count, stopword ratio).  Returns
-    (doc_id, text, n_tokens, stop_ratio).  Used by the driver gate
-    (composed with language-ID) and by ``jobs/curate_corpus.py``."""
-    keep = (
-        corpus.filter(F.col("text").isNotNull())
-        .groupBy(F.md5("text").alias("__h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    stopset = ",".join(f"'{s}'" for s in STOPWORDS)
-    # token array projected once (see raw_shingles): split ran 3x per row
-    quality = corpus.select(
-        "doc_id", F.split(F.col("text"), " ").alias("__toks")
-    ).select(
-        "doc_id",
-        F.size("__toks").cast("long").alias("n_tokens"),
-        (
-            F.expr(f"size(filter(__toks, x -> x IN ({stopset})))").cast("double")
-            / F.size("__toks").cast("double")
-        ).alias("stop_ratio"),
-    )
-    return corpus.join(keep, "doc_id", "left_semi").join(
-        quality.filter((F.col("n_tokens") >= min_tokens) & (F.col("stop_ratio") <= max_stop)),
-        "doc_id",
-    )
-
-
-def _corpus_pipeline_sql() -> str:
-    from hg64spark import sqloracle
-
-    stopset = ",".join(f"'{s}'" for s in STOPWORDS)
-    base = f"""
-    WITH corpus AS (
-        SELECT doc_id, text FROM documents
-        UNION ALL
-        SELECT doc_id + {PIPE_DUP_OFFSET} AS doc_id, text FROM documents WHERE doc_id % 7 = 0
-    ),
-    keep AS (SELECT min(doc_id) AS doc_id FROM corpus GROUP BY md5(text)),
-    q AS (
-        SELECT doc_id, CAST(len(l) AS BIGINT) AS n_tokens,
-               CAST(len(list_filter(l, x -> x IN ({stopset}))) AS DOUBLE)
-                   / CAST(len(l) AS DOUBLE) AS stop_ratio
-        FROM (SELECT doc_id, string_split(text, ' ') AS l FROM corpus)
-    ),
-    lang AS (SELECT doc_id, predicted_lang FROM ({Q_TEXT_LANGID_SQL}))
-    SELECT lang.predicted_lang, q.n_tokens AS v
-    FROM corpus c
-    JOIN keep k ON k.doc_id = c.doc_id
-    JOIN q ON q.doc_id = c.doc_id
-         AND q.n_tokens >= {PIPE_MIN_TOKENS} AND q.stop_ratio <= {PIPE_MAX_STOP}
-    JOIN lang ON lang.doc_id = c.doc_id
-    """
-    return sqloracle.buckets_sql(base, "v", 5, ["predicted_lang"])
-
-
-def dataops_queries():
-    return {
-        "text_quality": q_text_quality,
-        "text_langid": q_text_langid,
-        "text_fingerprint": q_text_fingerprint,
-        "text_winnow": q_text_winnow,
-        "token_count_hist": q_token_count_hist,
-        "token_count_bpe": q_token_count_bpe,
-        "dedup_exact": q_dedup_exact,
-        "dedup_ngram_topk": q_dedup_ngram_topk,
-        "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "ann_brute_topk": q_ann_brute_topk,
-        "ann_lsh_recall": q_ann_lsh_recall,
-        "ann_ivf_recall": q_ann_ivf_recall,
-        "multimodal_payloads": q_multimodal_payloads,
-        "multimodal_image_decode": q_multimodal_image_decode,
-        "multimodal_audio_decode": q_multimodal_audio_decode,
-        "curriculum_bins": q_curriculum_bins,
-        "pack_chunked_corpus": q_pack_chunked_corpus,
-        "text_novelty": q_text_novelty,
-        "corpus_pipeline": q_corpus_pipeline,
-        "sample_stratified": q_sample_stratified,
-        "sample_correlated_lineitem": q_sample_correlated_lineitem,
-        "sample_temperature": q_sample_temperature,
-        "sample_temperature_tokens": q_sample_temperature_tokens,
-        "quota_topk_by_lang": q_quota_topk_by_lang,
-        "tfidf_top_terms": q_tfidf_top_terms,
-        "text_selfrepeat": q_text_selfrepeat,
-        "decontaminate_overlap": q_decontaminate_overlap,
-        "decontaminate_bloom": q_decontaminate_bloom,
-        "decontaminate_neardup": q_decontaminate_neardup,
-        "decontaminate_neardup_bloom": q_decontaminate_neardup_bloom,
-        "pack_token_shards": q_pack_token_shards,
-        "chunk_documents": q_chunk_documents,
-        "sample_fixed_k_per_lang": q_sample_fixed_k_per_lang,
-        "dedup_substring": q_dedup_substring,
-        "dedup_substring_rewrite": q_dedup_substring_rewrite,
-        "dedup_cluster": q_dedup_cluster,
-        "dedup_cluster_star": q_dedup_cluster_star,
-        "dedup_keep_best": q_dedup_keep_best,
-        "scrub_pii": q_scrub_pii,
-        "decayed_topk_users": q_decayed_topk_users,
-        "corpus_diff": q_corpus_diff,
-        "znorm_lineitem": q_znorm_lineitem,
-        "calibrate_new_docs": q_calibrate_new_docs,
-        "corpus_minhash_sim": q_corpus_minhash_sim,
-        "sample_mixture_langs": q_sample_mixture_langs,
-        "text_ref_coverage": q_text_ref_coverage,
-        "embedding_centroid_drift": q_embedding_centroid_drift,
-        "tfidf_search": q_tfidf_search,
-        "embedding_dispersion": q_embedding_dispersion,
-    }
-
-
-def dataops_oracles():
-    return {
-        "text_quality": Q_TEXT_QUALITY_SQL,
-        "text_langid": Q_TEXT_LANGID_SQL,
-        "text_fingerprint": Q_TEXT_FINGERPRINT_SQL,
-        "text_winnow": Q_TEXT_WINNOW_SQL,
-        "token_count_hist": token_count_hist_sql(),
-        "token_count_bpe": Q_TOKEN_COUNT_BPE_SQL,
-        "dedup_exact": Q_DEDUP_EXACT_SQL,
-        "dedup_ngram_topk": Q_DEDUP_NGRAM_SQL,
-        "dedup_minhash_lsh": Q_DEDUP_MINHASH_SQL,
-        "dedup_simhash": Q_DEDUP_SIMHASH_SQL,
-        "dedup_embedding_cosine": Q_DEDUP_EMB_COSINE_SQL,
-        "ann_brute_topk": Q_ANN_BRUTE_SQL,
-        "ann_lsh_recall": Q_ANN_LSH_SQL,
-        "ann_ivf_recall": Q_ANN_IVF_SQL,
-        "multimodal_payloads": Q_MULTIMODAL_SQL,
-        "multimodal_image_decode": Q_MM_IMAGE_SQL,
-        "multimodal_audio_decode": Q_MM_AUDIO_SQL,
-        "curriculum_bins": _curriculum_bins_sql(),
-        "pack_chunked_corpus": _pack_chunked_corpus_sql(),
-        "text_novelty": _text_novelty_sql(),
-        "corpus_pipeline": _corpus_pipeline_sql(),
-        "sample_stratified": _sample_stratified_sql(),
-        "sample_correlated_lineitem": _sample_correlated_sql(),
-        "sample_temperature": _sample_temperature_sql(),
-        "sample_temperature_tokens": _sample_temperature_sql(token_weighted=True),
-        "quota_topk_by_lang": Q_QUOTA_TOPK_SQL,
-        "tfidf_top_terms": Q_TFIDF_SQL,
-        "text_selfrepeat": _text_selfrepeat_sql(),
-        "decontaminate_overlap": _decontaminate_sql(),
-        # the Bloom-pruned variant must reach the SAME answer as the exact
-        # broadcast operator — one oracle serves both
-        "decontaminate_bloom": _decontaminate_sql(),
-        "decontaminate_neardup": _decontaminate_neardup_sql(),
-        # Bloom-pruned variant must reach the same answer — one oracle
-        "decontaminate_neardup_bloom": _decontaminate_neardup_sql(),
-        "pack_token_shards": _pack_token_shards_sql(),
-        "chunk_documents": _chunk_documents_sql(),
-        "sample_fixed_k_per_lang": _sample_fixed_k_sql(),
-        "dedup_substring": _dedup_substring_sql(),
-        "dedup_substring_rewrite": _dedup_substring_rewrite_sql(),
-        "dedup_cluster": _dedup_cluster_sql(),
-        "dedup_keep_best": _dedup_keep_best_sql(),
-        # star contraction must reach the SAME components — one oracle both
-        "dedup_cluster_star": _dedup_cluster_sql(),
-        "scrub_pii": _scrub_pii_sql(),
-        "decayed_topk_users": _decayed_topk_users_sql(),
-        "corpus_diff": _corpus_diff_sql(),
-        "znorm_lineitem": _znorm_lineitem_sql(),
-        "calibrate_new_docs": _calibrate_new_docs_sql(),
-        "corpus_minhash_sim": _corpus_minhash_sim_sql(),
-        "sample_mixture_langs": _sample_to_mixture_sql(),
-        "text_ref_coverage": _text_ref_coverage_sql(),
-        "embedding_centroid_drift": _embedding_centroid_drift_sql(),
-        "tfidf_search": _tfidf_search_sql(),
-        "embedding_dispersion": _embedding_dispersion_sql(),
-    }

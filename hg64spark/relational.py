@@ -294,6 +294,46 @@ def bloom_agg_relational(
     return grouped.groupBy(*keys).applyInPandas(fold, out_schema)
 
 
+def bloom_prune_relational(
+    probes: DataFrame,
+    probe_col: str,
+    words: DataFrame,
+    n_bits: int,
+    n_hashes: int,
+) -> DataFrame:
+    """Filter ``probes`` to the rows the Bloom (as a words DataFrame from
+    ``bloom_words_relational``) reports as contained — with ZERO shuffle on
+    the probe side.  Instead of explode + groupBy-reassembly (what
+    ``bloom_contains_relational`` does to support per-group filters), the
+    k bit tests are a CONJUNCTION of k broadcast hash joins against the
+    same words table: broadcast joins are map-side, Catalyst's ReuseExchange
+    dedupes the k identical broadcast subplans, and the whole prune stays
+    inside the probe scan's stage — the shape that keeps a 100 TB raw
+    stream un-Exchanged.  NULL probe values are dropped (not-contained):
+    xxhash64(NULL) would otherwise probe the seed-hash positions.
+    No false negatives, same guarantee as the sketch."""
+    pos = _bloom_positions(probe_col, n_bits, n_hashes)
+    out = probes.filter(F.col(probe_col).isNotNull()).withColumn("__pos", pos)
+    conds = []
+    for i in range(n_hashes):
+        wi = words.select(
+            F.col("word_idx").alias(f"__wi{i}"), F.col("word").alias(f"__w{i}")
+        )
+        out = out.withColumn(
+            f"__idx{i}", F.shiftright(F.element_at("__pos", i + 1), 6).cast("int")
+        ).join(F.broadcast(wi), F.col(f"__idx{i}") == F.col(f"__wi{i}"), "left")
+        conds.append(
+            F.coalesce(F.col(f"__w{i}"), F.lit(0)).bitwiseAND(
+                F.expr(f"shiftleft(1L, int(element_at(__pos, {i + 1}) % 64))")
+            )
+            != 0
+        )
+    keep = conds[0]
+    for c in conds[1:]:
+        keep = keep & c
+    return out.filter(keep).select(*probes.columns)
+
+
 def bloom_contains_relational(
     probes: DataFrame,
     probe_col: str,

@@ -1,6 +1,5 @@
 """Data-pipeline operator tests: dedup semantics, similarity correctness,
-multimodal plumbing.  (Cross-engine exactness of each operator is gated by
-the DuckDB oracle harness; these tests check the *semantics*.)"""
+sampling, packing and plan shape of the ``dataops`` operators."""
 
 import numpy as np
 import pytest
@@ -103,7 +102,6 @@ def test_bloom_prune_corpus_side_is_never_shuffled(spark):
     with_null = spark.createDataFrame([("sh1",), (None,)], "sh string")
     kept = relational.bloom_prune_relational(with_null, "sh", words, n_bits, n_hashes).collect()
     assert [r["sh"] for r in kept] == ["sh1"]
-
 
 def test_substring_spans_merges_maximal_islands(spark):
     """Two docs share an 11-token prefix; with l=8 the duplicated 8-gram
@@ -522,195 +520,6 @@ def test_exact_dedup_counts(spark):
     assert {r["doc_id"]: r["c"] for r in out} == {1: 2, 2: 2, 3: 1}
 
 
-def test_multimodal_feature_plumbing(spark):
-    from hg64spark import multimodal
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    items = multimodal.items_from_documents(docs)
-    feats = multimodal.extract_features(items).collect()
-    assert len(feats) == docs.count()
-    by_id = {r["item_id"]: r for r in feats}
-    one = docs.select("doc_id", "text").first()
-    r = by_id[one["doc_id"]]
-    assert r["n_bytes"] == len(one["text"].encode())
-    assert len(r["feature"]) == multimodal.FEATURE_DIM
-    assert all(0.0 <= f <= 1.0 for f in r["feature"])
-    # determinism: same payload -> same features
-    import pandas as pd
-
-    f1 = multimodal.fake_features(pd.Series([b"abc", b"abc", b"xyz"]))
-    assert np.array_equal(f1[0], f1[1]) and not np.array_equal(f1[0], f1[2])
-
-
-def _have(mod: str) -> bool:
-    import importlib.util
-
-    return importlib.util.find_spec(mod) is not None
-
-
-@pytest.mark.skipif(
-    _have("PIL") and _have("soundfile"),
-    reason="optional decoders installed; the real branches are tested below",
-)
-def test_multimodal_heavy_formats_fail_loudly_without_optional_deps():
-    """Without the optional Pillow/soundfile, non-native formats still fail
-    loudly with NotImplementedError (never a silent fake); the NATIVE
-    formats (PPM/WAV) are real codecs tested below."""
-    from hg64spark import multimodal
-
-    if not _have("PIL"):
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_image(b"\x89PNG...")
-    if not _have("soundfile"):
-        with pytest.raises(NotImplementedError):
-            multimodal.decode_audio(b"OggS....")
-
-
-@pytest.mark.skipif(not _have("PIL"), reason="Pillow not installed")
-def test_decode_image_pillow_branch():
-    """With Pillow present, JPEG decodes to the same HxWxC uint8 contract
-    as the native PPM path, and a lossless PNG round-trips exactly."""
-    import io
-
-    from PIL import Image
-
-    from hg64spark import multimodal as mm
-
-    rng = np.random.default_rng(7)
-    img = rng.integers(0, 256, size=(24, 32, 3), dtype=np.uint8)
-    png = io.BytesIO()
-    Image.fromarray(img).save(png, format="PNG")
-    out = mm.decode_image(png.getvalue())
-    assert out.shape == (24, 32, 3) and out.dtype == np.uint8
-    assert np.array_equal(out, img)  # PNG is lossless
-    jpg = io.BytesIO()
-    Image.fromarray(img).save(jpg, format="JPEG", quality=90)
-    jout = mm.decode_image(jpg.getvalue())
-    assert jout.shape == (24, 32, 3) and jout.dtype == np.uint8
-    # grayscale keeps a single channel
-    gpng = io.BytesIO()
-    Image.fromarray(img[:, :, 0]).save(gpng, format="PNG")
-    gout = mm.decode_image(gpng.getvalue())
-    assert gout.shape == (24, 32, 1)
-
-
-@pytest.mark.skipif(not _have("soundfile"), reason="soundfile not installed")
-def test_decode_audio_soundfile_branch():
-    """With soundfile present, FLAC decodes to the same
-    (rate, int16 [frames, channels]) contract as the native WAV path —
-    and FLAC being lossless, to the identical samples."""
-    import io
-
-    import soundfile as sf
-
-    from hg64spark import multimodal as mm
-
-    rng = np.random.default_rng(11)
-    wave = rng.integers(-(2**14), 2**14, size=(800, 2), dtype=np.int16)
-    buf = io.BytesIO()
-    sf.write(buf, wave, 8000, format="FLAC")
-    rate, out = mm.decode_audio(buf.getvalue())
-    assert rate == 8000 and out.dtype == np.int16
-    assert np.array_equal(out, wave)
-
-
-def test_ppm_codec_roundtrip_and_grammar():
-    import numpy as np
-
-    from hg64spark import multimodal as mm
-
-    rng = np.random.default_rng(7)
-    for h, w in [(1, 1), (3, 5), (16, 2)]:
-        img = rng.integers(0, 256, (h, w, 3), dtype=np.uint8)
-        out = mm.decode_ppm(mm.encode_ppm(img))
-        assert out.shape == (h, w, 3) and (out == img).all()
-    # dispatcher routes P6 natively
-    img = rng.integers(0, 256, (2, 2, 3), dtype=np.uint8)
-    assert (mm.decode_image(mm.encode_ppm(img)) == img).all()
-    # full header grammar: comments between tokens, arbitrary whitespace
-    raster = bytes(range(2 * 2 * 3))
-    fancy = b"P6 # comment\n# another\n 2\t2 # sizes\n255\n" + raster
-    assert (mm.decode_ppm(fancy).reshape(-1) == np.frombuffer(raster, np.uint8)).all()
-    # corruption: ValueError, never IndexError/struct.error
-    good = mm.encode_ppm(img)
-    for bad in [b"", b"P5\n1 1\n255\nxxx", good[:-1], b"P6\n2 2\n255", b"P6\n2 2\n65535\n" + raster]:
-        with pytest.raises(ValueError):
-            mm.decode_ppm(bad)
-
-
-def test_wav_codec_roundtrip_chunks_and_stereo():
-    import struct
-
-    import numpy as np
-
-    from hg64spark import multimodal as mm
-
-    mono = (np.arange(100, dtype=np.int16) * 37) % 2048 - 1024
-    rate, out = mm.decode_wav(mm.encode_wav(mono, 8000))
-    assert rate == 8000 and out.shape == (100, 1) and (out[:, 0] == mono).all()
-    stereo = np.stack([mono, -mono], axis=1).astype(np.int16)
-    rate, out = mm.decode_wav(mm.encode_wav(stereo, 44100))
-    assert rate == 44100 and out.shape == (100, 2) and (out == stereo).all()
-    # RIFF chunk-walking: an extra ODD-SIZED chunk before fmt/data must be
-    # skipped with word alignment (the spec's pad byte)
-    buf = mm.encode_wav(mono, 16000)
-    extra = b"LIST" + struct.pack("<I", 3) + b"abc" + b"\x00"
-    patched = buf[:12] + extra + buf[12:]
-    patched = b"RIFF" + struct.pack("<I", len(patched) - 8) + patched[8:]
-    rate, out = mm.decode_wav(patched)
-    assert rate == 16000 and (out[:, 0] == mono).all()
-    # dispatcher routes RIFF natively
-    assert mm.decode_audio(buf)[0] == 16000
-    # corruption: ValueError
-    for bad in [b"", b"RIFF....", buf[:-3], buf[:12]]:
-        with pytest.raises(ValueError):
-            mm.decode_wav(bad)
-    # non-PCM format tag rejected
-    tag_pos = buf.index(b"fmt ") + 8
-    nonpcm = buf[:tag_pos] + struct.pack("<H", 3) + buf[tag_pos + 2 :]
-    with pytest.raises(ValueError):
-        mm.decode_wav(nonpcm)
-    # contract: CORRUPT input is ValueError, never struct.error or
-    # ZeroDivisionError — 0-channel fmt and an undersized fmt chunk both
-    # pass the generic length checks (code-review findings)
-    ch_pos = buf.index(b"fmt ") + 8 + 2
-    zero_ch = buf[:ch_pos] + struct.pack("<H", 0) + buf[ch_pos + 2 :]
-    with pytest.raises(ValueError, match="0 channels"):
-        mm.decode_wav(zero_ch)
-    fmt_at = buf.index(b"fmt ")
-    short_fmt = (
-        buf[:12]
-        + b"fmt "
-        + struct.pack("<I", 4)
-        + buf[fmt_at + 8 : fmt_at + 12]
-        + buf[fmt_at + 8 + 16 :]  # rest of original stream incl. data chunk
-    )
-    short_fmt = b"RIFF" + struct.pack("<I", len(short_fmt) - 8) + short_fmt[8:]
-    with pytest.raises(ValueError, match="fmt chunk too short"):
-        mm.decode_wav(short_fmt)
-
-
-def test_synth_stats_match_closed_form():
-    """The synthesized payload builders agree with the closed-form stats the
-    oracles predict — pinned here so a synthesis change that silently
-    diverges from the SQL constants fails in unit tests, not just at the
-    driver gate."""
-    import numpy as np
-
-    from hg64spark import multimodal as mm
-
-    for d in [0, 1, 7, 49, 123456]:
-        img = mm.synth_image(d)
-        assert img.shape == (d % 3 + 2, d % 5 + 2, 3)
-        n = img.size
-        assert int(img.astype(np.int64).sum()) == sum((d * 31 + i) % 256 for i in range(n))
-        rate, wave = mm.synth_audio(d)
-        assert rate == 8000 + (d % 3) * 4000 and wave.shape == (d % 50 + 10,)
-        assert int(np.abs(wave.astype(np.int64)).sum()) == sum(
-            abs((d * 7 + i * 13) % 2048 - 1024) for i in range(d % 50 + 10)
-        )
-
-
 def test_langid_is_deterministic_and_total(spark):
     rows = dataops.q_text_langid(spark, SF_DIR).collect()
     n_docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").count()
@@ -859,32 +668,6 @@ def test_winnow_guarantee_shared_run_shares_fingerprint(spark):
         by_doc.setdefault(r["doc_id"], set()).add(r["fp"])
     assert by_doc[1] & by_doc[2], "shared run must share >= 1 fingerprint"
     assert not (by_doc[1] & by_doc[3]) and not (by_doc[2] & by_doc[3])
-
-
-def test_multimodal_resize_and_frame_sample_plumbing(spark):
-    from hg64spark import multimodal
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    items = multimodal.items_from_documents(docs)
-
-    resized = multimodal.resize_items(items, height=8, width=8).collect()
-    assert len(resized) == docs.count()
-    assert all(len(r["payload"]) == 64 and r["out_h"] == 8 and r["out_w"] == 8 for r in resized)
-    # deterministic: same payload -> same resized bytes
-    assert multimodal.fake_resize(b"hello world" * 10, 8, 8) == multimodal.fake_resize(b"hello world" * 10, 8, 8)
-
-    frames = multimodal.sample_frames(items, every_n=3).collect()
-    one = docs.select("doc_id", "text").first()
-    raw = one["text"].encode()
-    n_frames = max(1, (len(raw) + multimodal.FRAME_BYTES - 1) // multimodal.FRAME_BYTES)
-    mine = sorted((r["frame_idx"], bytes(r["frame"])) for r in frames if r["item_id"] == one["doc_id"])
-    want = sorted(
-        (f, raw[f * multimodal.FRAME_BYTES : (f + 1) * multimodal.FRAME_BYTES])
-        for f in range(0, n_frames, 3)
-    )
-    assert mine == want
-    # every item contributes at least one frame
-    assert {r["item_id"] for r in frames} == {r["item_id"] for r in items.select("item_id").collect()}
 
 
 def test_decontaminate_neardup_finds_planted_probe_copies(spark):

@@ -42,7 +42,7 @@ def test_every_hg64spark_import_resolves():
                 continue
             if name in (None, "*") or hasattr(mod, name):
                 continue
-            if importlib.util.find_spec(f"{module}.{name}") is None:
+            if not hasattr(mod, "__path__") or importlib.util.find_spec(f"{module}.{name}") is None:
                 broken.append(f"{where}: {module} has no {name}")
     assert seen > 100, seen
     assert not broken, "\n".join(broken)
